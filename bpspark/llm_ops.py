@@ -132,7 +132,7 @@ _SHINGLE_HASHES_SQL = (
 
 
 def _parse_size_bytes(v: str) -> int:
-    """Spark size-conf string → bytes ("128MB", "134217728b", "1g", "64")."""
+    """Spark size-conf string → bytes ("128MB", "134217728b", "1.5g", "64")."""
     s = v.strip().lower()
     mult = 1
     for suf, m in (
@@ -142,7 +142,7 @@ def _parse_size_bytes(v: str) -> int:
         if s.endswith(suf):
             s, mult = s[: -len(suf)], m
             break
-    return int(s) * mult
+    return int(float(s) * mult)
 
 
 def _estimated_scan_splits(src: DataFrame) -> int | None:
@@ -150,7 +150,8 @@ def _estimated_scan_splits(src: DataFrame) -> int | None:
     ceil(size / spark.sql.files.maxPartitionBytes) — one big SPLITTABLE
     parquet file is many splits, not one (VERDICT r12 item 2: the old
     file-count gate would have added the very shuffle it exists to avoid
-    on a single multi-split file). None = not a statable file source."""
+    on a single multi-split file). None = not a statable file source.
+    A maxPartitionBytes value that does not parse raises ValueError."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -160,10 +161,10 @@ def _estimated_scan_splits(src: DataFrame) -> int | None:
         return None
     if not files:
         return 0
+    mpb = _parse_size_bytes(
+        src.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    ) or 1
     try:
-        mpb = _parse_size_bytes(
-            src.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        ) or 1
         splits = 0
         for f in files:
             u = urlparse(f)
@@ -172,7 +173,7 @@ def _estimated_scan_splits(src: DataFrame) -> int | None:
             sz = os.stat(unquote(u.path)).st_size
             splits += max(1, -(-sz // mpb))
         return splits
-    except Exception:
+    except OSError:
         # un-statable (remote fs, races): fall back to the file count —
         # splits >= files, so this can only over-report starvation the
         # way the pre-r13 gate did, never under-report

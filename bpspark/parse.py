@@ -154,20 +154,23 @@ def basename_no_ext(entry_name: str) -> str:
 
 
 def parse_metadata_zip(content: bytes) -> list[tuple[str, dict[str, str]]]:
-    """R3: ZIP explode — one (basename, props) record per non-directory entry
-    (MetadataIngestionServiceImpl.java:131-162; directory skip :142).
+    """R3: ZIP explode — one (basename, props) record per distinct basename
+    of the non-directory entries (MetadataIngestionServiceImpl.java:131-162;
+    directory skip :142). Two entries with one basename (``a.txt`` and
+    ``dir/a.txt``) keep the later archive entry, as the reference's
+    ``HashMap.put`` does (:146-149).
 
     Raises on corrupt ZIPs — callers route the error to the quarantine
     channel (R15, MetadataIngestionExecuter.java:62-73).
     """
-    records: list[tuple[str, dict[str, str]]] = []
+    records: dict[str, dict[str, str]] = {}
     with zipfile.ZipFile(io.BytesIO(content)) as zf:
         for info in zf.infolist():
             if info.is_dir():
                 continue
             with zf.open(info) as fh:
-                records.append((basename_no_ext(info.filename), parse_properties(fh.read())))
-    return records
+                records[basename_no_ext(info.filename)] = parse_properties(fh.read())
+    return list(records.items())
 
 
 def extract_isbn_from_path(path: str) -> str:

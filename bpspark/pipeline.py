@@ -4,16 +4,21 @@ declarative DataFrame graph (SURVEY §3.4 path 2).
 Reference flow (MetadataIngestionServiceImpl.java:95-123):
   1. isNewIsbn gate — three existence checks (:99, :181-210)   → anti-joins
   2. upload raw ZIP (:100)                                     → bronze sink
-  3. extractBookAndChapterMetadata (:104, :131-162)            → parse_zip_entries
-  4. book-record presence check (:107-110)                     → anti-join → quarantine
-  5. genre validation (:112-116, :170-173)                     → semi-join (broadcast dim)
+  3. extractBookAndChapterMetadata (:104, :131-162)            → parse_zips
+  4. book-record presence check (:107-110)                     → entry lookup
+  5. genre validation (:112-116, :170-173)                     → left join (broadcast dim)
   6. startBestPubWorkflowInstance (:119, :219-248)             → control-table rows
+
+The unit of work is one ZIP, as in the reference: ``parse_zips`` yields ONE
+row per arrival with all its entries nested, and steps 4-6, the R15
+quarantine decision, the R14 metadata array and the silver chapters are
+column expressions on that row — no regrouping by ISBN.
 
 Ordering mirrors the reference's cheap-predicate-first stance (§4.1): the
 ledger anti-joins run BEFORE parsing, so already-seen ZIPs are never
 unzipped. At 100 TB: arrivals×ledger joins shuffle on the business key
 (or broadcast when the ledger side is small); parse parallelism = #files;
-everything downstream is hash-partitioned by isbn.
+after the parse, every step is a map-side projection or broadcast join.
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ from bpspark import errors
 from bpspark.config import IngestionConfig
 from bpspark.fixtures import default_dir
 from bpspark.registry import op
-from bpspark.sources import parse_zip_entries, scan_drop_folder
+from bpspark.sources import explode_entries, parse_zips, scan_drop_folder
 
 # R12: the five projected book-record keys + ISBN (canonical key names per
 # FIXTURES.md; the reference's literal constants live in the external model
@@ -70,112 +75,82 @@ def ingest_batch(spark: SparkSession, drop_dir: str, ledgers: Ledgers,
     return ingest_from_arrivals(spark, scan_drop_folder(spark, drop_dir), ledgers, config)
 
 
+def with_book_genre(zips: DataFrame, valid_genres: DataFrame) -> DataFrame:
+    """R6 + R7 on :func:`~bpspark.sources.parse_zips` rows: adds ``book``
+    (the props of the entry named after the ISBN, NULL when the ZIP has
+    none), ``book_genre`` (its Genre) and ``genre_ok`` (TRUE when the genre
+    is in the dimension, else NULL) via one broadcast left join."""
+    dim = valid_genres.select(
+        F.col("genre_name").alias("book_genre"), F.lit(True).alias("genre_ok")
+    ).distinct()
+    book = F.get(F.filter("entries", lambda e: e.entry == F.col("isbn")), 0).props
+    return (
+        zips.withColumn("book", book)
+        .withColumn("book_genre", F.element_at("book", F.lit("Genre")))
+        .join(F.broadcast(dim), "book_genre", "left")
+    )
+
+
 def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledgers,
                          config: IngestionConfig | None = None) -> IngestResult:
     """R2→R14 over an arrivals frame — shared by the batch entry point and
-    the streaming foreachBatch path (each micro-batch is one arrivals set)."""
+    the streaming foreachBatch path (each micro-batch is one arrivals set).
+
+    Precondition (both entry points satisfy it by construction): the
+    arrivals frame carries ONE row per path, as file listings do."""
     config = config or IngestionConfig()
 
     # --- R8/R9/R10: idempotency gate, cheapest predicates first -----------
-    new_arrivals = (
+    gated = (
         arrivals
         .join(ledgers.ingested_zips.select("zip_name"), "zip_name", "left_anti")   # R8
         .join(ledgers.workflows.select("isbn"), "isbn", "left_anti")               # R9
         .join(ledgers.completed_books.select("isbn"), "isbn", "left_anti")         # R10
     )
-    # within-batch single-flight (r8): two arrivals carrying the SAME
-    # ISBN in one batch both pass the ledger anti-joins (the ledgers
-    # only know PRIOR batches), which would emit duplicate control rows
-    # in a single append — the reference never does, because its
-    # per-file isNewIsbn check (MetadataIngestionServiceImpl.java:181)
-    # sees the first file's in-flight workflow when the second is
-    # processed. Batch equivalent: first path per ISBN wins; unkeyed
-    # arrivals (isbn = '') are exempt — they are per-file quarantine
-    # candidates, never a workflow key.
-    #
-    # r9 (ADVICE r8): winners are computed on an (isbn, path) PROJECTION
-    # — min(path) per keyed isbn, identical to the former
-    # row_number-over-(partitionBy isbn, orderBy path) == 1 winner — and
-    # joined back by path as a broadcast left-semi, so the binary
-    # `content` column never enters an exchange. The old window form
-    # shuffled ZIP bytes by isbn even when the batch had no duplicates;
-    # now only ~100-byte path strings shuffle (the winners agg), and the
-    # semi join is map-side. A drop-folder micro-batch is file-arrival
-    # scale (10^3-10^5 paths), well inside broadcast range.
-    #
-    # Precondition (both entry points satisfy it by construction): the
-    # arrivals frame carries ONE row per path — scan_drop_folder and the
-    # streaming file source both emit file listings, where path is the
-    # row identity. A caller that unions overlapping listings would keep
-    # duplicate copies of the per-isbn winner path here (the semi join
-    # matches them all); deduplicating those would require shuffling
-    # content rows, which is exactly what this form exists to avoid.
-    # Unkeyed arrivals (isbn '' or NULL — NULL handled explicitly since
-    # the filters would otherwise silently DROP those rows, r9 review)
-    # are exempt: they are per-file quarantine candidates, never a
-    # workflow key, so every one must survive to q_missing/R15.
-    unkeyed = F.col("isbn").isNull() | (F.col("isbn") == "")
+    # Within-batch single-flight: the ledgers only know PRIOR batches, so
+    # the first path per ISBN wins, as the reference's per-file isNewIsbn
+    # check (:181) sees the first file's in-flight workflow. Unkeyed
+    # arrivals (isbn '' or NULL) are each their own key: every one goes on
+    # to R15. Only (key, path) strings shuffle; ZIP bytes never do.
     winners = (
-        new_arrivals.filter(~unkeyed)
-        .select("isbn", "path")
-        .groupBy("isbn")
+        gated.groupBy(F.coalesce(F.nullif("isbn", F.lit("")), F.col("path")))
         .agg(F.min("path").alias("path"))
         .select("path")
     )
-    new_arrivals = new_arrivals.filter(unkeyed).unionByName(
-        new_arrivals.filter(~unkeyed).join(
-            F.broadcast(winners), "path", "left_semi"
-        )
-    )
+    new_arrivals = gated.join(F.broadcast(winners), "path", "left_semi")
 
-    # --- R3/R4/R5: parse only the genuinely-new ZIPs -----------------------
-    parsed = parse_zip_entries(new_arrivals)
-    q_extract = parsed.filter(F.col("error_code").isNotNull()).select(
-        "path", "error_code", "error_msg"
-    )
-    entries = parsed.filter(F.col("error_code").isNull())
+    # --- R3/R4/R5 parse, R6 book record, R7 genre: one row per ZIP ----------
+    parsed = parse_zips(new_arrivals)
+    zips = with_book_genre(parsed, ledgers.valid_genres)
 
-    # --- R6: required book record ({isbn}.txt → entry == isbn) -------------
-    books = entries.filter(F.col("entry") == F.col("isbn"))
-    # r8: derive the MISSING_BOOK_METADATA set from new_arrivals, not
-    # from parsed entries — a ZIP that parses to ZERO entries (empty
-    # archive, directories only) previously vanished with neither a
-    # control row nor a quarantine row, violating R15's every-rejected-
-    # file contract. Now: every genuinely-new path that neither failed
-    # extraction nor contains its own book record is quarantined.
-    q_missing = (
-        new_arrivals.select("path")
-        .join(q_extract.select("path"), "path", "left_anti")
-        .join(books.select("path").distinct(), "path", "left_anti")
-        .select(
-            "path",
-            F.lit(errors.MISSING_BOOK_METADATA).alias("error_code"),
-            F.lit("no book record entry named {isbn}.txt in ZIP").alias("error_msg"),
-        )
-    )
+    # --- R15: the first failing check names the error ----------------------
+    def reject(code, msg):
+        return F.struct(code.alias("error_code"), msg.alias("error_msg"))
 
-    # --- R7: genre must exist in the dimension (broadcast semi-join) -------
-    books_g = books.withColumn("book_genre", F.element_at("props", F.lit("Genre")))
-    genre_dim = F.broadcast(ledgers.valid_genres.select(F.col("genre_name").alias("book_genre")))
-    valid_books = books_g.join(genre_dim, "book_genre", "left_semi")
-    q_genre = (
-        books_g.join(genre_dim, "book_genre", "left_anti")
-        .select(
-            "path",
-            F.lit(errors.INVALID_GENRE).alias("error_code"),
-            F.concat(F.lit("genre not in dimension: "), F.coalesce("book_genre", F.lit("<missing>"))).alias("error_msg"),
-        )
+    decided = zips.withColumn(
+        "reject",
+        F.when(F.col("error_code").isNotNull(), reject(F.col("error_code"), F.col("error_msg")))
+        .when(F.col("book").isNull(), reject(
+            F.lit(errors.MISSING_BOOK_METADATA),
+            F.lit("no book record entry named {isbn}.txt in ZIP")))
+        .when(F.col("genre_ok").isNull(), reject(
+            F.lit(errors.INVALID_GENRE),
+            F.concat(F.lit("genre not in dimension: "),
+                     F.coalesce("book_genre", F.lit("<missing>"))))),
     )
+    quarantine = decided.filter(F.col("reject").isNotNull()).select(
+        "path", "reject.error_code", "reject.error_msg"
+    )
+    accepted = decided.filter(F.col("reject").isNull())
 
-    # --- R12 typed projection + R13 enrichment -----------------------------
-    projected = valid_books.select(
-        "path",
+    # --- R12 typed projection + R13 enrichment + R14 control row -----------
+    workflows_new = accepted.select(
         "isbn",
-        F.element_at("props", F.lit("Title")).alias("book_title"),
+        F.element_at("book", F.lit("Title")).alias("book_title"),
         F.col("book_genre"),
-        F.element_at("props", F.lit("Authors")).alias("book_authors"),
-        F.element_at("props", F.lit("NrOfChapters")).cast("int").alias("nr_of_chapters"),
-        F.element_at("props", F.lit("NrOfPages")).cast("int").alias("nr_of_pages"),
+        F.element_at("book", F.lit("Authors")).alias("book_authors"),
+        F.element_at("book", F.lit("NrOfChapters")).cast("int").alias("nr_of_chapters"),
+        F.element_at("book", F.lit("NrOfPages")).cast("int").alias("nr_of_pages"),
         F.current_timestamp().alias("publishing_date"),          # R13 :222,:237
         F.lit(False).alias("content_found"),                     # R13 :239
         F.lit(False).alias("content_error_found"),               # :240
@@ -183,69 +158,59 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
         F.lit(False).alias("chapter_folder_hierarchy_exists"),   # :242
         F.lit(config.interrupt_t1_timer).alias("interrupt_t1_timer"),            # :243
         F.lit(config.wait2_check_content_timer).alias("wait_2_check_content_timer"),  # :244
-    )
-
-    # --- R14: one control row per ISBN with the full metadata map ----------
-    all_meta = entries.groupBy("isbn").agg(
-        # deterministic entry order (collect_list order is not); structs with
-        # map fields aren't orderable by sort_array → comparator on entry name
+        # R14: the full metadata map, in a deterministic entry order
+        # (structs with map fields aren't orderable by sort_array)
         F.array_sort(
-            F.collect_list(F.struct("entry", "props")),
+            "entries",
             lambda l, r: F.when(l.entry < r.entry, -1).when(l.entry > r.entry, 1).otherwise(0),
-        ).alias("all_metadata")
-    )
-    workflows_new = (
-        projected.join(all_meta, "isbn")
-        .withColumn("workflow_id", F.concat(F.lit("wf-"), F.col("isbn")))
-        .drop("path")
+        ).alias("all_metadata"),
+        F.concat(F.lit("wf-"), F.col("isbn")).alias("workflow_id"),
     )
 
     # --- chapters silver table ---------------------------------------------
-    accepted = valid_books.select("isbn")
-    silver_chapters = (
-        entries.filter(F.col("entry").rlike(r"^chapter-[0-9]+$"))
-        .join(accepted, "isbn", "left_semi")
-        .select(
-            "isbn",
-            F.element_at("props", F.lit("ChapterNumber")).cast("int").alias("chapter_number"),
-            F.element_at("props", F.lit("ChapterTitle")).alias("chapter_title"),
-            F.element_at("props", F.lit("ChapterAuthor")).alias("chapter_author"),
-        )
+    silver_chapters = accepted.select(
+        "isbn",
+        F.explode(F.filter("entries", lambda e: e.entry.rlike(r"^chapter-[0-9]+$"))).alias("c"),
+    ).select(
+        "isbn",
+        F.element_at("c.props", F.lit("ChapterNumber")).cast("int").alias("chapter_number"),
+        F.element_at("c.props", F.lit("ChapterTitle")).alias("chapter_title"),
+        F.element_at("c.props", F.lit("ChapterAuthor")).alias("chapter_author"),
     )
 
-    quarantine = q_extract.unionByName(q_missing).unionByName(q_genre)
     return IngestResult(
         arrivals=arrivals,
         new_arrivals=new_arrivals,
-        entries=entries,
+        entries=explode_entries(parsed.filter(F.col("error_code").isNull())),
         workflows_new=workflows_new,
         silver_chapters=silver_chapters,
         quarantine=quarantine,
     )
 
 
-def sink_control_table(workflows_new: DataFrame, control_dir: str) -> None:
-    """R14/R17 sink: append control rows idempotently on plain parquet —
-    anti-join on isbn against the existing table before the append, so a
-    replayed batch adds zero rows (exactly-once without ACID, SURVEY §4.3)."""
+def _append_new(df: DataFrame, out_dir: str, key: str) -> None:
+    """Idempotent parquet append: rows whose ``key`` the table at
+    ``out_dir`` already holds are dropped before the append, so a replayed
+    batch adds zero rows (exactly-once without ACID, SURVEY §4.3)."""
     import glob
     import os
 
-    spark = workflows_new.sparkSession
-    if os.path.isdir(control_dir) and glob.glob(os.path.join(control_dir, "*.parquet")):
-        existing = spark.read.parquet(control_dir).select("isbn")
-        to_write = workflows_new.join(existing, "isbn", "left_anti")
-    else:  # first write — nothing to replay-protect against
-        to_write = workflows_new
-    to_write.write.mode("append").parquet(control_dir)
+    if glob.glob(os.path.join(out_dir, "*.parquet")):
+        existing = df.sparkSession.read.parquet(out_dir).select(key)
+        df = df.join(existing, key, "left_anti")
+    df.write.mode("append").parquet(out_dir)
+
+
+def sink_control_table(workflows_new: DataFrame, control_dir: str) -> None:
+    """R14/R17 sink: append control rows idempotently on ``isbn``."""
+    _append_new(workflows_new, control_dir, "isbn")
 
 
 def sink_quarantine_table(quarantine: DataFrame, quarantine_dir: str) -> None:
     """R15 sink, same idempotency contract as the control sink (ADVICE
     r10): foreachBatch is at-least-once, so a bare append would duplicate
     quarantine rows on a batch retry or a harness re-run over an existing
-    stage dir. Anti-join on ``path`` — the arrival's unique identity —
-    against the existing table, so a replayed batch adds zero rows.
+    stage dir. Keyed on ``path`` — the arrival's unique identity.
 
     ``path`` is deliberately the arrival's PERMANENT identity, matching
     the arrivals ledger (ADVICE r11): a file fixed and re-dropped at the
@@ -256,14 +221,7 @@ def sink_quarantine_table(quarantine: DataFrame, quarantine_dir: str) -> None:
     93-248 moves each file out of the folder exactly once). Duplicate
     paths WITHIN one batch cannot occur: the stream source lists each
     file once per run and the stage dir is keyed by path."""
-    import glob
-    import os
-
-    spark = quarantine.sparkSession
-    if os.path.isdir(quarantine_dir) and glob.glob(os.path.join(quarantine_dir, "*.parquet")):
-        existing = spark.read.parquet(quarantine_dir).select("path")
-        quarantine = quarantine.join(existing, "path", "left_anti")
-    quarantine.write.mode("append").parquet(quarantine_dir)
+    _append_new(quarantine, quarantine_dir, "path")
 
 
 # ---------------------------------------------------------------------------

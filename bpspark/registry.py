@@ -78,27 +78,35 @@ _PRIORITY: tuple[str, ...] = (
     "sim_ivf_index_compact", "stream_ivf_index_append",
     "sim_ivf_index_retrain", "pipeline_multimodal_corpus",
     "pipeline_audio_corpus",
-    #  * slot 33: sample_deterministic — the oldest driver row in the
+    #  * slots 33-40: the rows-only ingestion ops staled by the
+    #    one-row-per-ZIP pipeline rewrite (sources.parse_zips, the
+    #    per-ZIP R6/R7 helper shared with stream_static_join, the single
+    #    idempotent-append sink helper, last-entry-wins basenames in
+    #    parse.parse_metadata_zip). They evicted the 8 back agg fillers
+    #    per the standing rule; window oracle count 32/50:
+    "pipeline_ingest_batch", "pipeline_quarantine", "pipeline_chapters",
+    "pipeline_idempotent_rerun", "sink_control_table",
+    "ingest_properties_zip", "stream_ingest_pipeline", "stream_static_join",
+    #  * slot 41: sample_deterministic — the oldest sweep row in the
     #    repo (r8, rows-only), queued since the r12 recomposition;
     "sample_deterministic",
-    #  * slots 34-40: rotation debt, streaming-harness ops first (their
+    #  * slots 42-48: rotation debt, streaming-harness ops first (their
     #    re-cert doubles as direct driver evidence for this round's
     #    tmpfs-scratch plumbing change — 6 oracle-backed + stream_scd_join
     #    rows-only; all r11 rows):
     "stream_er_resolve", "stream_heavy_hitters", "stream_mv_refresh",
     "stream_state_introspection", "stream_stateful_counter",
     "stream_scd_join", "udf_sql_registered",
-    #  * slots 41-50: rotation debt, the r1 aggregate core (r11 rows,
-    #    all oracle-backed). Window oracle count: 40/50. The rotation
-    #    debt that did NOT fit (19 ops, all r11 rows: agg_approx_distinct,
-    #    the dedup A/V fingerprints, distinct_rows, kcenter, the er pair,
-    #    the filter trio, fn_struct_field_surgery, maintenance_delete,
-    #    meta_query_profile, multimodal columns/audio_decode, the three
-    #    sinks, win_ntile_bucketize) queues for r14 — with r11 rows they
-    #    stay within the 3-round freshness budget through r14.
-    "agg_count_distinct", "agg_cube", "agg_global", "agg_grouping_sets",
-    "agg_having", "agg_min_by_max_by", "agg_percentile_exact", "agg_pivot",
-    "agg_stddev_stable", "agg_string_concat_ordered",
+    #  * slots 49-50: rotation debt, the r1 aggregate core (r11 rows,
+    #    all oracle-backed). The rotation debt that did NOT fit (the 8
+    #    evicted aggs agg_global..agg_string_concat_ordered, and 19 ops,
+    #    all r11 rows: agg_approx_distinct, the dedup A/V fingerprints,
+    #    distinct_rows, kcenter, the er pair, the filter trio,
+    #    fn_struct_field_surgery, maintenance_delete, meta_query_profile,
+    #    multimodal columns/audio_decode, the three sinks,
+    #    win_ntile_bucketize) queues for r14 — with r11 rows they stay
+    #    within the 3-round freshness budget through r14.
+    "agg_count_distinct", "agg_cube",
     # --- (former tier A) the ROUND-12 driver window in r12 order; names
     # already listed above keep their tier-A slot (first occurrence wins
     # in _ordered — later duplicates are inert). Historical r12 notes:

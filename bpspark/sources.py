@@ -11,6 +11,12 @@ Scale: ``binaryFile`` yields one row per file (no splitting), so
 parallelism = #files — ideal for many small metadata ZIPs. The parse UDF
 runs per Arrow batch inside ``mapInPandas``: Python touches only the ZIP
 bytes; everything before/after stays JVM-columnar.
+
+The unit of work is one ZIP, as in the reference (one
+``HashMap<String, Properties>`` per ISBN): :func:`parse_zips` turns each
+arrival into ONE row carrying all its entries as a nested array, so every
+downstream decision is a column expression on that row.
+:func:`parse_zip_entries` is the exploded (one row per entry) view of it.
 """
 
 from __future__ import annotations
@@ -20,24 +26,16 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    MapType, StringType, StructField, StructType,
-)
 
 from bpspark import errors
 from bpspark.fixtures import default_dir
 from bpspark.parse import extract_isbn_from_path, parse_metadata_zip
 from bpspark.registry import op
 
-PARSED_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("isbn", StringType(), True),
-        StructField("entry", StringType(), True),
-        StructField("props", MapType(StringType(), StringType()), True),
-        StructField("error_code", StringType(), True),
-        StructField("error_msg", StringType(), True),
-    ]
+ENTRY_TYPE = "struct<entry: string, props: map<string, string>>"
+ZIPS_SCHEMA = (
+    f"path string, isbn string, entries array<{ENTRY_TYPE}>, "
+    "error_code string, error_msg string"
 )
 
 
@@ -85,30 +83,46 @@ def scan_drop_folder(spark: SparkSession, drop_dir: str) -> DataFrame:
 
 
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: ZIP bytes → one row per entry, or one error row
-    (R15 per-file error channel, MetadataIngestionExecuter.java:62-73)."""
+    """mapInPandas body: ZIP bytes → one row per ZIP, holding its entries,
+    or its error (R15 per-file error channel,
+    MetadataIngestionExecuter.java:62-73)."""
     for pdf in batches:
-        rows: list[dict] = []
+        rows: list[tuple] = []
         for path, content in zip(pdf["path"], pdf["content"]):
             isbn = extract_isbn_from_path(path)
             try:
-                for entry, props in parse_metadata_zip(bytes(content)):
-                    rows.append(
-                        {"path": path, "isbn": isbn, "entry": entry, "props": props,
-                         "error_code": None, "error_msg": None}
-                    )
+                entries = [{"entry": e, "props": p} for e, p in parse_metadata_zip(bytes(content))]
+                rows.append((path, isbn, entries, None, None))
             except Exception as exc:  # noqa: BLE001 — quarantine, never abort the batch
-                rows.append(
-                    {"path": path, "isbn": isbn, "entry": None, "props": None,
-                     "error_code": errors.EXTRACT_ZIP, "error_msg": str(exc)[:500]}
-                )
-        yield pd.DataFrame(rows, columns=[f.name for f in PARSED_SCHEMA.fields])
+                rows.append((path, isbn, None, errors.EXTRACT_ZIP, str(exc)[:500]))
+        yield pd.DataFrame(rows, columns=["path", "isbn", "entries", "error_code", "error_msg"])
+
+
+def parse_zips(arrivals: DataFrame) -> DataFrame:
+    """R3+R4+R5 fused, one row per arrival: (path, isbn, entries,
+    error_code, error_msg). ``entries`` is the ZIP's array of (entry,
+    props) records — one per distinct basename, the later archive entry
+    winning — and is NULL exactly when the ZIP failed to open, in which
+    case ``error_code``/``error_msg`` say why. An empty ZIP has an empty
+    array. Input needs (path, content) columns."""
+    return arrivals.select("path", "content").mapInPandas(_parse_batches, ZIPS_SCHEMA)
+
+
+def explode_entries(zips: DataFrame) -> DataFrame:
+    """One row per entry of :func:`parse_zips` rows: (path, isbn, entry,
+    props, error_code, error_msg). A ZIP that failed to open keeps one row
+    with NULL entry/props; an empty ZIP yields no rows."""
+    no_entry = F.array(F.lit(None).cast(ENTRY_TYPE))
+    return zips.select(
+        "path", "isbn", F.explode(F.coalesce("entries", no_entry)).alias("e"),
+        "error_code", "error_msg",
+    ).select("path", "isbn", "e.entry", "e.props", "error_code", "error_msg")
 
 
 def parse_zip_entries(arrivals: DataFrame) -> DataFrame:
-    """R3+R4+R5 fused: explode each ZIP into (isbn, entry, props) rows.
-    Input needs (path, content) columns; output is PARSED_SCHEMA."""
-    return arrivals.select("path", "content").mapInPandas(_parse_batches, PARSED_SCHEMA)
+    """R3+R4+R5 as one row per entry: the exploded view of
+    :func:`parse_zips`. Input needs (path, content) columns."""
+    return explode_entries(parse_zips(arrivals))
 
 
 # ---------------------------------------------------------------------------

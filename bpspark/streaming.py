@@ -341,27 +341,22 @@ def stream_dedup_state(spark: SparkSession, sf: str) -> DataFrame:
 @op("stream_static_join", sql=None)
 def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static join (R7 streaming form): streaming arrivals parsed and
-    validated against the static genre dimension per micro-batch."""
+    validated against the static genre dimension per micro-batch, by the
+    batch pipeline's own R6/R7 rule (the stream is the join's left side)."""
     from bpspark.fixtures import default_dir
-    from bpspark.sources import parse_zip_entries
+    from bpspark.pipeline import with_book_genre
+    from bpspark.sources import parse_zips
 
     fx = default_dir()
-    genres = spark.read.parquet(f"{fx}/valid_genres.parquet").select(
-        F.col("genre_name").alias("book_genre")
-    )
     arrivals = (
         spark.readStream.format("binaryFile")
         .schema(BINFILE_SCHEMA)
         .option("pathGlobFilter", ZIP_GLOB)
         .load(f"{fx}/drop")
     )
-    parsed = parse_zip_entries(arrivals)
-    books = (
-        parsed.filter(F.col("error_code").isNull() & (F.col("entry") == F.col("isbn")))
-        .withColumn("book_genre", F.element_at("props", F.lit("Genre")))
-        .join(F.broadcast(genres), "book_genre", "left_semi")
-        .select("isbn", "book_genre")
-    )
+    books = with_book_genre(
+        parse_zips(arrivals), spark.read.parquet(f"{fx}/valid_genres.parquet")
+    ).filter(F.col("genre_ok")).select("isbn", "book_genre")
     return run_to_memory(books)
 
 

@@ -275,3 +275,49 @@ def test_uppercase_zip_extension_is_ingested(spark, fixture_dir, tmp_path):
     assert sorted(r["isbn"] for r in got) == [
         "9780000000001", "9780000000002", "9780000000003",
     ]
+
+
+def test_duplicate_book_basename_keeps_last_entry(spark, fixture_dir, tmp_path):
+    """A ZIP holding two entries with one basename (``{isbn}.txt`` and
+    ``dup/{isbn}.txt``) keeps one record per basename, the later archive
+    entry, like the reference's HashMap.put — so one control row."""
+    import zipfile
+
+    isbn = "9780999000001"
+    drop = tmp_path / "drop_dup"
+    drop.mkdir()
+    with zipfile.ZipFile(drop / f"{isbn}.zip", "w") as zf:
+        zf.writestr(f"{isbn}.txt", "Title=First\nGenre=Fiction\nNrOfChapters=1\n")
+        zf.writestr("chapter-1.txt", "ChapterNumber=1\nChapterTitle=One\n")
+        zf.writestr(f"dup/{isbn}.txt", "Title=Second\nGenre=Fiction\nNrOfChapters=1\n")
+
+    res = ingest_batch(spark, str(drop), Ledgers.load(spark, fixture_dir))
+    rows = res.workflows_new.collect()
+    assert len(rows) == 1
+    assert rows[0]["book_title"] == "Second"
+    assert len(rows[0]["all_metadata"]) == 2
+    assert res.quarantine.count() == 0
+
+
+def test_each_output_plans_one_parse(spark, fixture_dir):
+    """The ZIP stays the unit of work from the gate to the sinks: each
+    output plan parses the folder through exactly ONE MapInPandas node,
+    and the control rows need no regrouping by ISBN. Built fresh: an
+    executed adaptive plan prints its initial and final forms."""
+    import contextlib
+    import io
+    import re
+
+    result = ingest_batch(spark, f"{fixture_dir}/drop", Ledgers.load(spark, fixture_dir))
+
+    def plan(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    for name in ("workflows_new", "quarantine", "silver_chapters"):
+        p = plan(getattr(result, name))
+        nodes = set(re.findall(r"\((\d+)\) MapInPandas", p))
+        assert len(nodes) == 1, f"{name}: MapInPandas nodes {sorted(nodes)}"
+    assert "collect_list" not in plan(result.workflows_new)

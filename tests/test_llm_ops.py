@@ -218,6 +218,35 @@ def test_spread_guard_counts_splits_not_files(spark, tmp_path):
         spark.conf.set(key, prev)
 
 
+def test_fractional_max_partition_bytes_is_parsed(tmp_path):
+    """A fractional size such as ``spark.sql.files.maxPartitionBytes =
+    '1.5g'`` parses to bytes instead of raising and silently falling back
+    to the file count; a conf that does not parse raises instead of being
+    treated as an un-statable file. Spark's typed conf setter rejects
+    fractions, so the conf is fed through a stub source."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from bpspark.llm_ops import _estimated_scan_splits, _parse_size_bytes
+
+    assert _parse_size_bytes("1.5g") == 3 * 1024**3 // 2
+    assert _parse_size_bytes("0.5k") == 512
+
+    f = tmp_path / "part-0.parquet"
+    f.write_bytes(b"x" * 4096)
+
+    def src(mpb):
+        conf = SimpleNamespace(get=lambda key, default=None: mpb)
+        return SimpleNamespace(inputFiles=lambda: [f"file://{f}"],
+                               sparkSession=SimpleNamespace(conf=conf))
+
+    assert _estimated_scan_splits(src("1.5g")) == 1
+    assert _estimated_scan_splits(src("1.5k")) == 3  # ceil(4096 / 1536)
+    with pytest.raises(ValueError):
+        _estimated_scan_splits(src("lots"))
+
+
 def test_ivf_recall_vs_brute_force(spark):
     brute = OPS["sim_cosine_topk"].fn(spark, SF_SMALL).collect()
     ivf = OPS["sim_cosine_ivf"].fn(spark, SF_SMALL).collect()

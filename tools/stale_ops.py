@@ -24,7 +24,7 @@ The hash covers the op function body + oracle SQL + the TRANSITIVE
 package-wide helper closure (r10, VERDICT r9 item 3): every function or
 class the op body references that lives anywhere in the op's package
 (same module OR a sibling module — quality.py ops import llm_ops
-shingle/CC helpers, pipeline.py imports sources.parse_zip_entries) is
+shingle/CC helpers, pipeline.py imports sources.parse_zips) is
 included recursively, along with simple module-level constants it reads
 (scalars and scalar-only tuples/frozensets/lists/dicts) — so an op whose
 behavior changed purely through a helper edit (e.g. _ivf_centroid_literal,
