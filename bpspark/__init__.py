@@ -52,13 +52,6 @@ def ensure_worker_imports(spark) -> None:
     (a zip on every executor's PYTHONPATH) makes worker imports
     cwd-independent — the same mechanism used for real multi-node
     clusters, where the package must travel to executors anyway."""
-    # Also the hook through which a VANILLA-session run (the driver sweeps
-    # with a plain SparkSession, not session.build) gets the RAM-backed
-    # harness scratch — idempotent, metadata-placement only (see
-    # config.enable_fast_scratch).
-    from bpspark.config import enable_fast_scratch
-
-    enable_fast_scratch()
     sc = spark.sparkContext
     if getattr(sc, "_bpspark_pyfile_added", False):
         return

@@ -4,63 +4,7 @@ tunables in ``alfresco-global.properties:7-19`` and the Spring wiring
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
-
-
-def fast_scratch_dir() -> str | None:
-    """RAM-backed scratch root for HARNESS-EPHEMERAL I/O, or None.
-
-    The replay harnesses burn most of their wall-clock on small-file
-    metadata I/O against the system temp dir: every streaming micro-batch
-    pays per-partition state-store open/commit/rename against its
-    checkpoint dir, and the sink/pipeline ops write-and-reread staged
-    parquet (VERDICT r12 item 4: "pool a shared checkpoint root on
-    tmpfs"). All of that scratch is throwaway by contract — harness
-    queries always start from a fresh checkpoint, and real deployments
-    point checkpointLocation/sinks at durable storage instead (every
-    streaming op's docstring says so) — so it belongs on tmpfs where one
-    exists. Resolution: $BPSPARK_SCRATCH_DIR ("" disables; any path wins),
-    else /dev/shm/bpspark_scratch when /dev/shm is a writable tmpfs, else
-    None (callers keep the system default). Parameterized, not detected
-    per-op: a production cluster sets the env (or leaves scratch on its
-    fast local disks) — nothing here is local-mode-specific."""
-    root = os.environ.get("BPSPARK_SCRATCH_DIR")
-    if root == "":
-        return None
-    if root is None:
-        if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
-            return None
-        root = "/dev/shm/bpspark_scratch"
-    try:
-        os.makedirs(root, exist_ok=True)
-    except OSError:
-        return None
-    return root
-
-
-def enable_fast_scratch() -> str | None:
-    """Point ``tempfile`` default scratch at :func:`fast_scratch_dir`.
-
-    Idempotent and cheap; called from session.build() and from
-    ensure_worker_imports() (the ``queries()`` wrapper path), so both the
-    bench harness and a vanilla-session driver sweep place checkpoint
-    dirs, staged drop folders, and sink outputs on the fast scratch.
-    METADATA/SCRATCH placement only — no query result or input ever
-    depends on where the temp root lives (state dirs stay stat-fingerprint
-    versioned through io.state_dir exactly as before)."""
-    import tempfile
-
-    root = fast_scratch_dir()
-    if root is None:
-        return None
-    tmp = os.path.join(root, "tmp")
-    try:
-        os.makedirs(tmp, exist_ok=True)
-    except OSError:
-        return None
-    tempfile.tempdir = tmp
-    return tmp
 
 
 @dataclass(frozen=True)

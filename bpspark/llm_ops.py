@@ -4625,6 +4625,25 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _band_index_probe(probes: DataFrame, index: DataFrame) -> DataFrame:
+    """Probe a MinHash band index: (doc_id, band, bucket) probes
+    equi-join (index_doc, band, bucket) index rows, and a (doc, index
+    doc) pair matches when >= _INC_MIN_BANDS of its bands collide.
+    Returns (doc_id, matched_doc = MIN matched index id, n_matches) for
+    every probe doc with at least one match."""
+    return (
+        probes.join(index, ["band", "bucket"])
+        .groupBy("doc_id", "index_doc")
+        .agg(F.count(F.lit(1)).alias("n_bands"))
+        .filter(F.col("n_bands") >= _INC_MIN_BANDS)
+        .groupBy("doc_id")
+        .agg(
+            F.min("index_doc").alias("matched_doc"),
+            F.count(F.lit(1)).alias("n_matches"),
+        )
+    )
+
+
 def _minhash_index_probe(spark: SparkSession, sf: str) -> tuple:
     """The incremental-LSH probe shared by dedup_incremental_minhash and
     split_incremental_assign: build/load the persisted (band, bucket,
@@ -4662,17 +4681,7 @@ def _minhash_index_probe(spark: SparkSession, sf: str) -> tuple:
         )
     )
     probes = _minhash_bands(batch).select("doc_id", "band", "bucket")
-    hits = (
-        probes.join(index, ["band", "bucket"])
-        .groupBy("doc_id", "index_doc")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-        .filter(F.col("n_bands") >= _INC_MIN_BANDS)
-    )
-    best = hits.groupBy("doc_id").agg(
-        F.min("index_doc").alias("matched_doc"),
-        F.count(F.lit(1)).alias("n_matches"),
-    )
-    return batch, best
+    return batch, _band_index_probe(probes, index)
 
 
 @op(

@@ -58,19 +58,22 @@ _PRIORITY: tuple[str, ...] = (
     # before landing (exceptAll + DuckDB oracle PASS at 3 SFs — see
     # OPTIMIZATION_r13.md), so these rows are re-certs of identical
     # outputs, not fixes. Composition:
-    #  * slots 1-24: the optimization-staled ops WITH oracles, headline
+    #  * slots 1-23: the optimization-staled ops WITH oracles, headline
     #    queries first (their hash rows double as the equivalence proof
-    #    for the round's plan rewrites):
+    #    for the round's plan rewrites). scan_python_datasource left
+    #    this tier when the scratch layer was deleted: without the
+    #    ensure_worker_imports hook its closure is back to the source
+    #    its existing driver row certifies:
     "ml_decision_tree_hist", "dedup_near_minhash", "sim_cosine_topk",
     "dedup_simhash", "dedup_substring_spans", "text_boilerplate_ngrams",
     "dedup_ngram_jaccard", "sim_knn_graph_ivf", "sim_ivf_recall_eval",
     "dedup_semdedup", "dedup_recall_eval", "dedup_incremental_minhash",
     "stream_minhash_dedup", "split_leakage_safe", "split_incremental_assign",
     "pipeline_web_corpus", "pipeline_llm_corpus", "text_perplexity_ngram",
-    "sample_perplexity_buckets", "scan_python_datasource",
+    "sample_perplexity_buckets",
     "graph_community_modularity", "graph_pagerank",
     "text_repetition_signals", "text_ngram_freq",
-    #  * slots 25-32: the optimization-staled rows-only ops (the IVF
+    #  * slots 24-31: the optimization-staled rows-only ops (the IVF
     #    index lifecycle — isfinite guard on the shared quantizer
     #    literal — and the multimodal/audio corpus funnels via the
     #    spread-guard edit):
@@ -78,7 +81,7 @@ _PRIORITY: tuple[str, ...] = (
     "sim_ivf_index_compact", "stream_ivf_index_append",
     "sim_ivf_index_retrain", "pipeline_multimodal_corpus",
     "pipeline_audio_corpus",
-    #  * slots 33-40: the rows-only ingestion ops staled by the
+    #  * slots 32-39: the rows-only ingestion ops staled by the
     #    one-row-per-ZIP pipeline rewrite (sources.parse_zips, the
     #    per-ZIP R6/R7 helper shared with stream_static_join, the single
     #    idempotent-append sink helper, last-entry-wins basenames in
@@ -87,26 +90,32 @@ _PRIORITY: tuple[str, ...] = (
     "pipeline_ingest_batch", "pipeline_quarantine", "pipeline_chapters",
     "pipeline_idempotent_rerun", "sink_control_table",
     "ingest_properties_zip", "stream_ingest_pipeline", "stream_static_join",
-    #  * slot 41: sample_deterministic — the oldest sweep row in the
+    #  * slots 40-43: the BM25 family, all oracle-backed, staled by
+    #    text_bm25_rank taking its oracle from the shared _bm25_oracle
+    #    builder (its decorator and the builder's docstring changed; the
+    #    SQL text is identical). They, with scan_python_datasource's
+    #    return to fresh, evicted the back fillers udf_sql_registered,
+    #    agg_count_distinct and agg_cube; window oracle count 32/50:
+    "text_bm25_rank", "search_bm25_incremental", "search_bm25_segment_merge",
+    "stream_bm25_index_append",
+    #  * slot 44: sample_deterministic — the oldest sweep row in the
     #    repo (r8, rows-only), queued since the r12 recomposition;
     "sample_deterministic",
-    #  * slots 42-48: rotation debt, streaming-harness ops first (their
-    #    re-cert doubles as direct driver evidence for this round's
-    #    tmpfs-scratch plumbing change — 6 oracle-backed + stream_scd_join
-    #    rows-only; all r11 rows):
-    "stream_er_resolve", "stream_heavy_hitters", "stream_mv_refresh",
-    "stream_state_introspection", "stream_stateful_counter",
-    "stream_scd_join", "udf_sql_registered",
-    #  * slots 49-50: rotation debt, the r1 aggregate core (r11 rows,
-    #    all oracle-backed). The rotation debt that did NOT fit (the 8
-    #    evicted aggs agg_global..agg_string_concat_ordered, and 19 ops,
+    #  * slots 45-50: rotation debt, streaming-harness ops (their re-cert
+    #    doubles as driver evidence that the harnesses run unchanged on
+    #    the default temp dir — 5 oracle-backed + stream_scd_join
+    #    rows-only; all r11 rows). The rotation debt that did NOT fit
+    #    (udf_sql_registered, the r1 aggregate core agg_count_distinct /
+    #    agg_cube / agg_global..agg_string_concat_ordered, and 19 ops,
     #    all r11 rows: agg_approx_distinct, the dedup A/V fingerprints,
     #    distinct_rows, kcenter, the er pair, the filter trio,
     #    fn_struct_field_surgery, maintenance_delete, meta_query_profile,
     #    multimodal columns/audio_decode, the three sinks,
     #    win_ntile_bucketize) queues for r14 — with r11 rows they stay
     #    within the 3-round freshness budget through r14.
-    "agg_count_distinct", "agg_cube",
+    "stream_er_resolve", "stream_heavy_hitters", "stream_mv_refresh",
+    "stream_state_introspection", "stream_stateful_counter",
+    "stream_scd_join",
     # --- (former tier A) the ROUND-12 driver window in r12 order; names
     # already listed above keep their tier-A slot (first occurrence wins
     # in _ordered — later duplicates are inert). Historical r12 notes:

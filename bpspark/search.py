@@ -26,11 +26,7 @@ _QUERY_TERMS = ("vector", "merge", "stream")
 def _bm25_oracle(terms: tuple[str, ...]) -> str:
     """Whole-corpus BM25 DuckDB oracle (k1=1.2, b=0.75, top-10) — the
     single source of truth for every BM25-family op's certification SQL,
-    parameterized only by the query-terms tuple. text_bm25_rank keeps an
-    inline copy to preserve its driver-certified source hash
-    (tools/stale_ops.py hashes getsource incl. the decorator); a test
-    pins that copy byte-identical to this builder so the formula can
-    never silently de-sync across ops."""
+    parameterized only by the query-terms tuple."""
     return f"""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
@@ -109,43 +105,7 @@ def text_inverted_index_search(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@op(
-    "text_bm25_rank",
-    sql=f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-        FROM documents
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-    stats AS (
-        SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-               SUM(dl) AS tot_len
-        FROM dl
-    ),
-    tf AS (
-        SELECT doc_id, tok, COUNT(*) AS tf
-        FROM tok WHERE tok IN {_QUERY_TERMS!r}
-        GROUP BY doc_id, tok
-    ),
-    df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-    scored AS (
-        SELECT tf.doc_id,
-               ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-                 * (tf.tf * 2.2)
-                 / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl * stats.n_docs / stats.tot_len))
-                 AS s
-        FROM tf
-        JOIN df ON tf.tok = df.tok
-        JOIN dl ON tf.doc_id = dl.doc_id
-        CROSS JOIN stats
-    )
-    SELECT doc_id, ROUND(SUM(s), 6) AS bm25
-    FROM scored
-    GROUP BY doc_id
-    ORDER BY bm25 DESC, doc_id
-    LIMIT 10
-    """,
-)
+@op("text_bm25_rank", sql=_bm25_oracle(_QUERY_TERMS))
 def text_bm25_rank(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 ranking (k1=1.2, b=0.75) of the corpus against the query
     terms — the Okapi formula computed as one declarative plan:

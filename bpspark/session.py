@@ -3,7 +3,9 @@
 Scale posture (SURVEY.md §4.4): AQE on (runtime coalesce + skew-join
 splitting), Arrow for every pandas-UDF boundary, UTC session time, small
 dims broadcast. On a real cluster the same build() is used with a cluster
-master URL; nothing here is local-mode-specific.
+master URL; nothing here is local-mode-specific. Scratch placement is left
+to the deployment: temp files follow ``TMPDIR``, spill and shuffle files
+follow ``spark.local.dir`` / ``SPARK_LOCAL_DIRS``.
 """
 
 from __future__ import annotations
@@ -41,17 +43,6 @@ def build(app_name: str = "bpspark", master: str | None = None,
         master = os.environ.get("BPSPARK_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
-    # Harness-ephemeral scratch (shuffle/block-manager files via
-    # spark.local.dir, checkpoint/sink/staging dirs via the tempfile
-    # default) on RAM-backed storage when available — see
-    # config.fast_scratch_dir for the contract and the env override.
-    # Static conf: only effective when this call CREATES the session.
-    from bpspark.config import enable_fast_scratch, fast_scratch_dir
-
-    scratch = fast_scratch_dir()
-    if scratch is not None:
-        conf.setdefault("spark.local.dir", os.path.join(scratch, "local"))
-        enable_fast_scratch()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -1327,7 +1327,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     import glob as _glob
     import shutil
 
-    from bpspark.llm_ops import _INC_MIN_BANDS, _minhash_bands
+    from bpspark.llm_ops import _band_index_probe, _minhash_bands
 
     d = table(spark, sf, "documents").select("doc_id", "text")
     stage = tempfile.mkdtemp(prefix="bpspark_smhd_")
@@ -1381,14 +1381,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
                 index = s.read.parquet(*prior).select(
                     F.col("doc_id").alias("index_doc"), "band", "bucket"
                 )
-                hits = (
-                    bands.join(index, ["band", "bucket"])
-                    .groupBy("doc_id", "index_doc")
-                    .agg(F.count(F.lit(1)).alias("n_bands"))
-                    .filter(F.col("n_bands") >= _INC_MIN_BANDS)
-                    .groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).alias("n_matches"))
-                )
+                hits = _band_index_probe(bands, index).select("doc_id", "n_matches")
             else:
                 hits = s.createDataFrame([], "doc_id long, n_matches long")
             # emitted decisions carry only hash-independent columns (the

@@ -53,3 +53,27 @@ def test_cleanup_stale_state_removes_only_old_versions(tmp_path, monkeypatch):
     assert bio.cleanup_stale_state() == [old]
     assert not os.path.exists(old)
     assert os.path.isdir(cur) and os.path.isdir(other)
+
+
+def test_engine_leaves_scratch_placement_alone(spark):
+    """The engine must not choose where temp or spill files go: temp files
+    follow Python's ``tempfile`` default (``TMPDIR``) and spill/shuffle
+    files follow Spark's own ``spark.local.dir`` / ``SPARK_LOCAL_DIRS``.
+    So ``ensure_worker_imports`` may not assign the process-global
+    ``tempfile.tempdir``, and ``session.build`` may not set
+    ``spark.local.dir``."""
+    import tempfile
+
+    import bpspark
+
+    # the first call on a context zips the package via mkdtemp, which
+    # caches the default in tempfile.tempdir by itself; get that done first
+    bpspark.ensure_worker_imports(spark)
+    saved = tempfile.tempdir
+    tempfile.tempdir = None
+    try:
+        bpspark.ensure_worker_imports(spark)
+        assert tempfile.tempdir is None
+    finally:
+        tempfile.tempdir = saved
+    assert spark.sparkContext.getConf().get("spark.local.dir") is None
