@@ -14,6 +14,18 @@ row per arrival with all its entries nested, and steps 4-6, the R15
 quarantine decision, the R14 metadata array and the silver chapters are
 column expressions on that row — no regrouping by ISBN.
 
+Each batch is parsed ONCE, as the reference reads each ZIP once inside one
+unit of work (R17, :50): ``ingest_from_arrivals`` materializes the decided
+per-ZIP frame (gate → parse → R6/R7 → R15 ``reject``) with an eager
+``localCheckpoint``, and every output of :class:`IngestResult` except the
+gate's own frames is a projection of it — so each sink call reads those
+rows instead of re-running the gate and the parse. The frame holds parsed
+metadata only (``parse_zips`` drops the ZIP bytes); its blocks live as long
+as the result's frames do and are freed by Spark's ContextCleaner once
+those are garbage-collected. ``commit_batch`` writes the batch's three tables with
+control last, so the R9 ledger the control table feeds is the commit
+marker: a batch cut short before it is simply replayed.
+
 Ordering mirrors the reference's cheap-predicate-first stance (§4.1): the
 ledger anti-joins run BEFORE parsing, so already-seen ZIPs are never
 unzipped. At 100 TB: arrivals×ledger joins shuffle on the business key
@@ -23,7 +35,9 @@ after the parse, every step is a map-side projection or broadcast join.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import glob
+import os
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,14 +72,26 @@ class Ledgers:
             completed_books=rd.parquet(f"{ledger_dir}/completed_books.parquet"),
         )
 
+    def with_control(self, control_dir: str) -> "Ledgers":
+        """These ledgers with R9 also holding the workflows of the control
+        table at ``control_dir`` (unchanged while it has no rows), so a
+        replay gates every committed book before the parse."""
+        if not glob.glob(os.path.join(control_dir, "*.parquet")):
+            return self
+        sunk = self.workflows.sparkSession.read.parquet(control_dir).select("workflow_id", "isbn")
+        return replace(self, workflows=self.workflows.select("workflow_id", "isbn").unionByName(sunk))
+
 
 @dataclass
 class IngestResult:
+    """One batch's frames. ``arrivals`` and ``new_arrivals`` are lazy; the
+    other four are projections of the batch's one materialized per-ZIP
+    frame (parsed metadata, no ZIP bytes), which lives as long as they do."""
     arrivals: DataFrame        # every ZIP seen this batch
     new_arrivals: DataFrame    # after the three idempotency anti-joins
     entries: DataFrame         # parsed (isbn, entry, props) rows
     workflows_new: DataFrame   # R14 control rows for accepted books
-    silver_chapters: DataFrame
+    silver_chapters: DataFrame  # (isbn, chapter_number, chapter_title, chapter_author)
     quarantine: DataFrame      # (path, error_code, error_msg)
 
 
@@ -127,6 +153,10 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
     def reject(code, msg):
         return F.struct(code.alias("error_code"), msg.alias("error_msg"))
 
+    # Materialized once, eagerly: every output below is a projection of
+    # these rows, so no sink re-runs the gate or the parse. Not cache():
+    # the CacheManager would pin each batch's frame until an unpersist()
+    # no caller makes, while checkpoint blocks go with the frames.
     decided = zips.withColumn(
         "reject",
         F.when(F.col("error_code").isNotNull(), reject(F.col("error_code"), F.col("error_msg")))
@@ -137,7 +167,7 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
             F.lit(errors.INVALID_GENRE),
             F.concat(F.lit("genre not in dimension: "),
                      F.coalesce("book_genre", F.lit("<missing>"))))),
-    )
+    ).localCheckpoint(eager=True)
     quarantine = decided.filter(F.col("reject").isNotNull()).select(
         "path", "reject.error_code", "reject.error_msg"
     )
@@ -181,29 +211,39 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
     return IngestResult(
         arrivals=arrivals,
         new_arrivals=new_arrivals,
-        entries=explode_entries(parsed.filter(F.col("error_code").isNull())),
+        entries=explode_entries(decided.filter(F.col("error_code").isNull())),
         workflows_new=workflows_new,
         silver_chapters=silver_chapters,
         quarantine=quarantine,
     )
 
 
-def _append_new(df: DataFrame, out_dir: str, key: str) -> None:
-    """Idempotent parquet append: rows whose ``key`` the table at
-    ``out_dir`` already holds are dropped before the append, so a replayed
-    batch adds zero rows (exactly-once without ACID, SURVEY §4.3)."""
-    import glob
-    import os
-
+def _append_new(df: DataFrame, out_dir: str, keys: list[str]) -> None:
+    """Idempotent parquet append: rows whose ``keys`` the table at
+    ``out_dir`` already holds (NULL matching NULL) are dropped before the
+    append, so a replayed batch adds zero rows (exactly-once without ACID,
+    SURVEY §4.3)."""
     if glob.glob(os.path.join(out_dir, "*.parquet")):
-        existing = df.sparkSession.read.parquet(out_dir).select(key)
-        df = df.join(existing, key, "left_anti")
+        existing = df.sparkSession.read.parquet(out_dir).select(*keys)
+        df = df.join(existing, [df[k].eqNullSafe(existing[k]) for k in keys], "left_anti")
     df.write.mode("append").parquet(out_dir)
+
+
+def commit_batch(res: IngestResult, out_dir: str) -> None:
+    """R17: write one batch's outputs under ``out_dir`` — ``chapters``
+    (keyed on isbn + chapter_number), then ``quarantine``, then
+    ``control``. Control goes last because it feeds the R9 ledger: until it
+    is written, a replay re-accepts the batch's books and the keyed appends
+    drop what the cut-short attempt already wrote, so every row lands
+    exactly once."""
+    _append_new(res.silver_chapters, f"{out_dir}/chapters", ["isbn", "chapter_number"])
+    sink_quarantine_table(res.quarantine, f"{out_dir}/quarantine")
+    sink_control_table(res.workflows_new, f"{out_dir}/control")
 
 
 def sink_control_table(workflows_new: DataFrame, control_dir: str) -> None:
     """R14/R17 sink: append control rows idempotently on ``isbn``."""
-    _append_new(workflows_new, control_dir, "isbn")
+    _append_new(workflows_new, control_dir, ["isbn"])
 
 
 def sink_quarantine_table(quarantine: DataFrame, quarantine_dir: str) -> None:
@@ -221,7 +261,7 @@ def sink_quarantine_table(quarantine: DataFrame, quarantine_dir: str) -> None:
     93-248 moves each file out of the folder exactly once). Duplicate
     paths WITHIN one batch cannot occur: the stream source lists each
     file once per run and the stage dir is keyed by path."""
-    _append_new(quarantine, quarantine_dir, "path")
+    _append_new(quarantine, quarantine_dir, ["path"])
 
 
 # ---------------------------------------------------------------------------
@@ -234,31 +274,19 @@ def _fixture_ledgers(spark: SparkSession) -> tuple[str, Ledgers]:
 
 
 # One fixture ingest per SparkSession: five pipeline_* ops read the same
-# R1→R14 batch over the same fixture drop folder, and the idempotent
-# rerun's anti-join would otherwise re-trigger the whole ZIP parse on
-# every downstream action. The outputs are fixture-sized (tens of rows),
-# so caching them is free; correctness is unchanged (each op still
-# returns its own projection of the one batch).
+# R1→R14 batch over the same fixture drop folder.
 _FIXTURE_INGEST: dict[int, tuple[str, Ledgers, IngestResult]] = {}
 
 
 def _fixture_ingest(spark: SparkSession) -> tuple[str, Ledgers, IngestResult]:
     key = id(spark)
     if key not in _FIXTURE_INGEST:
-        # keep only the live session's entry: cached DataFrames pin their
+        # keep only the live session's entry: the result's frames pin their
         # (possibly stopped) SparkSession's JVM state, so entries from
         # earlier sessions in the same interpreter must not accumulate
         _FIXTURE_INGEST.clear()
         d, ledgers = _fixture_ledgers(spark)
         res = ingest_batch(spark, f"{d}/drop", ledgers)
-        res = IngestResult(
-            arrivals=res.arrivals,
-            new_arrivals=res.new_arrivals,
-            entries=res.entries,
-            workflows_new=res.workflows_new.cache(),
-            silver_chapters=res.silver_chapters.cache(),
-            quarantine=res.quarantine.cache(),
-        )
         _FIXTURE_INGEST[key] = (d, ledgers, res)
     return _FIXTURE_INGEST[key]
 

@@ -479,10 +479,11 @@ def stream_stateful_counter(spark: SparkSession, sf: str) -> DataFrame:
 def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """The reference's whole loop in streaming form (R1→R17, SURVEY §3.4.2):
     drop-folder stream → per-micro-batch R1→R15 pipeline (idempotency
-    anti-joins, parse, validation, typed projection, quarantine sink) →
-    idempotent control sink. Checkpointed offsets = R16 single-flight;
-    the THIRD run (same checkpoint, no new files) processes nothing —
-    exactly-once end to end. Wave 2 re-delivers one wave-1 ZIP under a
+    anti-joins, parse, validation, typed projection) → ``commit_batch``:
+    keyed chapters, quarantine and control sinks, control last.
+    Checkpointed offsets = R16 single-flight; the THIRD run (same
+    checkpoint, no new files) processes nothing — exactly-once end to
+    end. Wave 2 re-delivers one wave-1 ZIP under a
     NEW path (a fresh stream offset) — the R9 workflow ledger, refreshed
     from the control table per batch (r10 review), drops it BEFORE the
     parse (cheap-predicate-first, the reference's stance; the control
@@ -490,27 +491,21 @@ def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     ZIP that must land in the R15 quarantine sink, not vanish (r10
     review: res.quarantine was previously discarded in-stream).
     Returns the control table after two runs + a replay; the test drives
-    _stream_ingest_run directly to inspect the quarantine/control dirs."""
+    _stream_ingest_run directly to inspect the chapters/quarantine/control
+    dirs."""
     return _stream_ingest_run(spark, tempfile.mkdtemp(prefix="bpspark_stream_ingest_"))
 
 
 def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
-    import glob as _glob
     import shutil
 
     from bpspark.fixtures import default_dir
-    from bpspark.pipeline import (
-        Ledgers,
-        ingest_from_arrivals,
-        sink_control_table,
-        sink_quarantine_table,
-    )
+    from bpspark.pipeline import Ledgers, commit_batch, ingest_from_arrivals
 
     fx = default_dir()
     drop = f"{stage}/drop"
     os.makedirs(drop)
     control = f"{stage}/control"
-    quarantine_dir = f"{stage}/quarantine"
     ckpt = f"{stage}/ckpt"
     # first wave: 5 ZIPs; second wave: 3 more + one RE-DELIVERED wave-1
     # ZIP in a subfolder (new offset, same ISBN → the refreshed workflow
@@ -533,23 +528,12 @@ def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
         # the cheap R9 anti-join BEFORE the ZIP parse — the reference's
         # cheap-predicate-first stance — instead of being fully parsed
         # and only discarded at the control sink.
-        ledgers = base_ledgers
-        if _glob.glob(os.path.join(control, "*.parquet")):
-            sunk = spark.read.parquet(control).select("workflow_id", "isbn")
-            ledgers = Ledgers(
-                valid_genres=base_ledgers.valid_genres,
-                ingested_zips=base_ledgers.ingested_zips,
-                workflows=base_ledgers.workflows.select("workflow_id", "isbn")
-                .unionByName(sunk),
-                completed_books=base_ledgers.completed_books,
-            )
+        ledgers = base_ledgers.with_control(control)
         res = ingest_from_arrivals(spark, with_zip_keys(batch_df), ledgers)
-        sink_control_table(res.workflows_new, control)
-        # R15: rejected files get a durable record too (r10 review — the
-        # quarantine frame was computed and thrown away before). The sink
-        # anti-joins on path (ADVICE r10): foreachBatch is at-least-once,
-        # so a batch retry must not duplicate quarantine rows.
-        sink_quarantine_table(res.quarantine, quarantine_dir)
+        # chapters, quarantine (R15: rejected files get a durable record
+        # too), then control — every write keyed, because foreachBatch is
+        # at-least-once and a batch retry must not duplicate rows
+        commit_batch(res, stage)
 
     def run_once() -> None:
         stream = (

@@ -299,25 +299,109 @@ def test_duplicate_book_basename_keeps_last_entry(spark, fixture_dir, tmp_path):
     assert res.quarantine.count() == 0
 
 
-def test_each_output_plans_one_parse(spark, fixture_dir):
-    """The ZIP stays the unit of work from the gate to the sinks: each
-    output plan parses the folder through exactly ONE MapInPandas node,
-    and the control rows need no regrouping by ISBN. Built fresh: an
-    executed adaptive plan prints its initial and final forms."""
+def test_append_new_matches_null_keys(spark, tmp_path):
+    """The keyed append treats a NULL key part as a value: a chapter row
+    with no ChapterNumber is not appended a second time on a replay."""
+    from bpspark.pipeline import _append_new
+
+    df = spark.createDataFrame([("978", None, "t"), ("978", 1, "u")],
+                               "isbn string, chapter_number int, chapter_title string")
+    out = str(tmp_path / "chapters")
+    _append_new(df, out, ["isbn", "chapter_number"])
+    _append_new(df, out, ["isbn", "chapter_number"])
+    assert spark.read.parquet(out).count() == 2
+
+
+def _plan(df) -> str:
     import contextlib
     import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_each_batch_parses_once(spark, fixture_dir, monkeypatch):
+    """Parse once per batch: the batch materializes ONE per-ZIP frame,
+    whose plan parses the folder through exactly one MapInPandas node and
+    needs no regrouping by ISBN; the four parsed outputs plan no parse of
+    their own and all read that one frame. Built fresh: an executed
+    adaptive plan prints its initial and final forms."""
     import re
 
-    result = ingest_batch(spark, f"{fixture_dir}/drop", Ledgers.load(spark, fixture_dir))
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+    materialized = []
 
-    def plan(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
+    def spy(self, *args, **kwargs):
+        materialized.append(_plan(self))
+        return real(self, *args, **kwargs)
 
-    for name in ("workflows_new", "quarantine", "silver_chapters"):
-        p = plan(getattr(result, name))
-        nodes = set(re.findall(r"\((\d+)\) MapInPandas", p))
-        assert len(nodes) == 1, f"{name}: MapInPandas nodes {sorted(nodes)}"
-    assert "collect_list" not in plan(result.workflows_new)
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "localCheckpoint", spy)
+        result = ingest_batch(spark, f"{fixture_dir}/drop", Ledgers.load(spark, fixture_dir))
+
+    assert len(materialized) == 1
+    nodes = set(re.findall(r"\((\d+)\) MapInPandas", materialized[0]))
+    assert len(nodes) == 1, f"materialized frame: MapInPandas nodes {sorted(nodes)}"
+    assert "collect_list" not in materialized[0]
+
+    read = set()
+    for name in ("workflows_new", "quarantine", "silver_chapters", "entries"):
+        df = getattr(result, name)
+        assert "MapInPandas" not in _plan(df), name
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        assert leaves.size() == 1, name
+        leaf = leaves.apply(0)
+        assert leaf.getClass().getSimpleName() == "LogicalRDD", name
+        read.add(leaf.rdd().id())
+    assert len(read) == 1, f"outputs read {len(read)} frames"
+    assert "collect_list" not in _plan(result.workflows_new)
+
+
+def _sorted_rows(spark, path: str) -> list[tuple]:
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(path)
+    cols = [F.to_json(c).alias(c) if c == "all_metadata" else F.col(c)
+            for c in df.columns if c != "publishing_date"]
+    return sorted(tuple(r) for r in df.select(cols).collect())
+
+
+@pytest.mark.parametrize("crash_after", [1, 2])
+def test_commit_batch_replay_after_crash_writes_each_row_once(
+        spark, fixture_dir, tmp_path, monkeypatch, crash_after):
+    """R17: a commit cut short after its first (chapters) or second
+    (quarantine) write leaves no control rows, so the replay — R9 refreshed
+    from control, as every replay runs — re-accepts the batch, and the
+    keyed appends drop what the cut-short attempt wrote: each table then
+    holds every row of an uninterrupted commit exactly once. A further
+    replay adds nothing."""
+    from bpspark import pipeline
+
+    drop, ledgers = f"{fixture_dir}/drop", Ledgers.load(spark, fixture_dir)
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "out")
+    pipeline.commit_batch(ingest_batch(spark, drop, ledgers), clean)
+
+    real, written = pipeline._append_new, []
+
+    def crashing(df, out_dir, keys):
+        real(df, out_dir, keys)
+        written.append(out_dir)
+        if len(written) == crash_after:
+            raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_append_new", crashing)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            pipeline.commit_batch(ingest_batch(spark, drop, ledgers), out)
+    assert [p.rsplit("/", 1)[1] for p in written] == ["chapters", "quarantine"][:crash_after]
+
+    for _ in range(2):
+        res = ingest_batch(spark, drop, ledgers.with_control(f"{out}/control"))
+        pipeline.commit_batch(res, out)
+        for table in ("chapters", "quarantine", "control"):
+            got = _sorted_rows(spark, f"{out}/{table}")
+            assert got == _sorted_rows(spark, f"{clean}/{table}"), table
+            assert len(got) == len(set(got)), table

@@ -116,6 +116,28 @@ def test_stream_ingest_pipeline_exactly_once(spark, tmp_path):
     assert q["path"].is_unique
 
 
+def test_stream_ingest_pipeline_writes_chapters_once(spark, tmp_path):
+    """The streaming path commits chapters too: after two waves and a
+    replay run, each accepted book's silver chapters sit in the stage's
+    chapters table exactly once — the rows a batch ingest of the fixture
+    folder gives for those books."""
+    from bpspark.fixtures import default_dir
+    from bpspark.pipeline import Ledgers, ingest_batch
+    from bpspark.streaming import _stream_ingest_run
+
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    isbns = {r.isbn for r in _stream_ingest_run(spark, str(stage)).collect()}
+    cols = ["isbn", "chapter_number", "chapter_title", "chapter_author"]
+    got = sorted(tuple(r) for r in spark.read.parquet(f"{stage}/chapters").select(cols).collect())
+    fx = default_dir()
+    batch = ingest_batch(spark, f"{fx}/drop", Ledgers.load(spark, fx)).silver_chapters
+    want = sorted(tuple(r) for r in batch.select(cols).collect() if r.isbn in isbns)
+    assert {r[0] for r in got} == isbns
+    assert got == want
+    assert len(got) == len(set(got))
+
+
 def test_stream_mv_refresh_versions_and_monotone_groups(spark):
     """The foreachBatch MV maintains copy-on-write state versions: ≥4
     micro-batches (maxFilesPerTrigger=1 over 4 files) each write one, and
