@@ -1,117 +1,13 @@
-"""Mechanical window-quality gate (VERDICT r4 items 2/6).
+"""Closure-hash change detection behind ``tools/check_ops.py --changed``.
 
-The grading driver's correctness sweep covers exactly the FIRST 50 entries
-of ``queries()`` (registry ``_PRIORITY`` order), so the front of the
-registry IS the round's certification window. These tests pin the two
-properties the window must hold, so an accidental registry edit (or a new
-registration landing in the wrong tier) fails loudly instead of silently
-burning sweep slots:
-
-- every windowed op must still NEED a row (no re-sweeping ops whose driver
-  row already certifies their current source — checked against
-  tools/driver_row_manifest.json, the staleness tracker's output);
-- at least 40 of the 50 must be oracle-backed: a rows-only row adds little
-  over the local strict replica, while a hash row is the only evidence the
-  replica can't fake. The handful of rows-only slots are reserved for ops
-  whose single row certifies a large composition (corpus pipelines) or a
-  family with zero rows.
+An op's closure hash covers its body, its oracle SQL and every package
+helper and module constant it reaches, so any edit that can change what
+the op computes changes its hash, and ``--changed REV`` re-checks it.
 """
 
 from __future__ import annotations
 
-import json
 import os
-
-from bpspark.registry import all_ops
-
-MANIFEST = os.path.join(os.path.dirname(__file__), "..", "tools", "driver_row_manifest.json")
-
-
-def _window():
-    ops = all_ops()
-    return [ops[n] for n in list(ops)[:50]]
-
-
-def test_window_ops_all_need_a_row():
-    manifest = json.load(open(MANIFEST))
-    manifest.pop("__ingested_correctness__", None)
-    import sys
-
-    # the ONE hash definition, shared with the manifest builder (ADVICE r5:
-    # an inline re-implementation here would silently stop matching if
-    # tools/stale_ops.py ever changed its scheme). r10: the scheme hashes
-    # the transitive same-module helper closure, not just the fn body.
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import op_closure_source, op_source_hash
-
-    def needs_row(o):
-        row = manifest.get(o.name)
-        if row is None:
-            return True  # NEVER swept
-        return op_source_hash(op_closure_source(o.fn), o.sql) != row["source_hash"]
-
-    ops = all_ops()
-    window = _window()
-    in_window = {o.name for o in window}
-    n_needing = sum(1 for o in ops.values() if needs_row(o))
-    # Every op that needs a row must be IN the window — except when more
-    # than 50 ops need one (a wide refactor round): the window can only
-    # hold 50, so up to (n_needing - 50) may queue for the next round and
-    # the binding rule degrades to the no-resweep assertion below (no
-    # slot may go to a fresh op while a needing op waits outside).
-    left_out = [n for n, o in ops.items() if needs_row(o) and n not in in_window]
-    assert len(left_out) <= max(0, n_needing - 50), (
-        f"ops needing a driver row left outside the window while slots "
-        f"exist for them: {left_out}"
-    )
-    # ...and FRESH ops may only occupy slots the needing set can't fill
-    # (r8 amendment: the coverage-finishing window has 47 candidates for
-    # 50 slots — the spare slots re-certify fresh ops at the new rev,
-    # which is free evidence, not waste; with >50 candidates this reduces
-    # to the original no-resweep rule).
-    resweeps = [o.name for o in window if not needs_row(o)]
-    allowed_fresh = max(0, 50 - n_needing)
-    assert len(resweeps) <= allowed_fresh, (
-        f"window re-sweeps {len(resweeps)} already-certified ops "
-        f"({resweeps}) but only {allowed_fresh} spare slots exist"
-    )
-
-
-def test_plumbing_hash_is_tracked():
-    """VERDICT r12 item 7: the closure hash deliberately excludes the
-    io/session/registry/config/errors plumbing, so an edit there stales
-    nothing mechanically. The manifest must therefore carry a plumbing
-    hash (taken at the newest swept rev) for `stale` to compare against —
-    when it moves, the tool demands the replica-double battery. This test
-    pins that the gate is armed and the hash scheme is computable."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import _PLUMBING_FILES, plumbing_hash
-
-    manifest = json.load(open(MANIFEST))
-    entry = manifest.get("__plumbing__")
-    assert entry is not None, "manifest missing __plumbing__ — rebuild it"
-    assert entry.get("files") == list(_PLUMBING_FILES)
-    assert len(entry["source_hash"]) == 64
-    live = plumbing_hash()
-    assert len(live) == 64
-    # NOT asserting live == manifest hash: a plumbing edit mid-round is
-    # legal — the gate's job is to FLAG it (stale_ops prints the
-    # replica-double demand), not to forbid it.
-
-
-def test_window_is_mostly_hash_certifiable():
-    # r8 amendment: the original >=40 gate assumed a backlog of
-    # oracle-backed candidates. The coverage-finishing window must hold
-    # every remaining never-swept op, and that tail is rows-only-heavy BY
-    # CONSTRUCTION (samplers/sketches/pipeline harnesses were scheduled
-    # last precisely because their rows certify least). The invariant
-    # that still holds: every oracle-backed op that needs a row is
-    # windowed (test above), and the window is still majority
-    # hash-certifiable.
-    n_oracle = sum(1 for o in _window() if o.sql is not None)
-    assert n_oracle >= 30, f"only {n_oracle}/50 windowed ops are oracle-backed"
 
 
 def test_helper_edit_flags_caller_stale(tmp_path):
@@ -122,7 +18,7 @@ def test_helper_edit_flags_caller_stale(tmp_path):
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import op_closure_source, op_source_hash
+    from check_ops import op_closure_source, op_source_hash
 
     def load(version: str, body: str):
         p = tmp_path / f"fakemod_{version}.py"
@@ -168,7 +64,7 @@ def test_mutable_constant_hash_is_runtime_stable_but_edit_sensitive(tmp_path):
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import op_closure_source
+    from check_ops import op_closure_source
 
     def load(version: str, src: str):
         p = tmp_path / f"fakemut_{version}.py"
@@ -210,7 +106,7 @@ def test_function_local_import_flags_caller_stale(tmp_path):
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import op_closure_source, op_source_hash
+    from check_ops import op_closure_source, op_source_hash
 
     def build(version: str, helper_body: str, cache_init: str = "{}"):
         pkgdir = tmp_path / f"fakepkg_{version}"
@@ -266,16 +162,17 @@ def test_function_local_import_flags_caller_stale(tmp_path):
 def test_closure_hash_excludes_path_dunders(tmp_path):
     """VERDICT r11 What's-wrong 1: a body referencing ``__file__`` (the
     addPyFile zip helper pattern) must NOT pull the checkout's absolute
-    path into the closure hash — otherwise a manifest row built via a
-    temp git worktree can never match the live tree and the op reports
-    perpetually STALE. Loading byte-identical source from two different
-    directories must produce byte-identical closure source."""
+    path into the closure hash — otherwise hashing another checkout
+    (``check_ops.py --changed`` exports REV to a temp dir) can never match
+    the live tree and the op always reads as changed. Loading
+    byte-identical source from two different directories must produce
+    byte-identical closure source."""
     import importlib
     import shutil
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import op_closure_source
+    from check_ops import op_closure_source
 
     PKG_SRC = {
         "__init__.py": (
@@ -320,17 +217,18 @@ def test_closure_hash_excludes_path_dunders(tmp_path):
 
 
 def test_registry_hashes_are_checkout_location_independent(tmp_path):
-    """End-to-end second-checkout regression (VERDICT r11 next-round
-    item 1's done-criterion): hashing the FULL live registry from a copy
-    of the tree at a different absolute path must give byte-identical
-    hashes for every op. This is exactly what build-manifest does via a
-    temp git worktree, so equality here is what makes `stale_ops.py
-    stale` reproducible (FRESH == all certified, STALE 0 reachable)."""
+    """End-to-end second-checkout regression: hashing the FULL live
+    registry from a copy of the tree at a different absolute path must
+    give byte-identical hashes for every op. ``check_ops.py --changed``
+    hashes REV from a temp export, so equality here is what keeps an
+    unchanged op out of its selection. Editing one op body in the copy
+    must then change exactly that op's hash — proof that each call
+    hashed the tree it was given, not the live one twice."""
     import shutil
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from stale_ops import REPO, hash_ops_at
+    from check_ops import REPO, hash_ops_at
 
     second = tmp_path / "second_checkout"
     second.mkdir()
@@ -342,3 +240,70 @@ def test_registry_hashes_are_checkout_location_independent(tmp_path):
     assert set(live) == set(other)
     diff = sorted(n for n in live if live[n] != other[n])
     assert diff == [], f"checkout-location-dependent hashes: {diff}"
+
+    _edit_op_body(second, "scan_parquet")
+    edited = hash_ops_at(str(second))
+    assert sorted(n for n in live if live[n] != edited[n]) == ["scan_parquet"]
+
+
+def _edit_op_body(root, name: str) -> None:
+    """Append a comment to the last line of op ``name``'s function in the
+    ``bpspark/`` tree under ``root``."""
+    import inspect
+
+    from bpspark.registry import all_ops
+
+    fn = all_ops()[name].fn
+    path = root / "bpspark" / os.path.basename(inspect.getsourcefile(fn))
+    src = inspect.getsource(fn)
+    text = path.read_text()
+    assert text.count(src) == 1
+    path.write_text(text.replace(src, src.rstrip("\n") + "  # edited\n"))
+
+
+def test_changed_selects_new_and_edited_ops_or_all_on_plumbing(tmp_path):
+    """``check_ops.py --changed REV`` selects exactly the ops whose
+    closure hash moved since REV: an edited op and a newly registered op,
+    not the unchanged rest. Any diff in a plumbing module (outside the
+    closure hash) selects every op and says why."""
+    import shutil
+    import subprocess
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from check_ops import REPO, changed_ops
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    shutil.copytree(os.path.join(REPO, "bpspark"), repo / "bpspark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+
+    def git(*args: str) -> None:
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=repo, check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-qm", "base")
+
+    _edit_op_body(repo, "scan_parquet")
+    with open(repo / "bpspark" / "relational.py", "a") as fh:
+        fh.write(
+            "\n\n@op(\"zz_new_op\", sql=\"SELECT 1 AS x\")\n"
+            "def zz_new_op(spark: SparkSession, sf: str) -> DataFrame:\n"
+            "    return spark.range(1)\n"
+        )
+    names, why = changed_ops("HEAD", repo=str(repo))
+    assert sorted(names) == ["scan_parquet", "zz_new_op"], why
+    assert "plumbing" not in why
+
+    with open(repo / "bpspark" / "io.py", "a") as fh:
+        fh.write("# plumbing edit\n")
+    names, why = changed_ops("HEAD", repo=str(repo))
+    assert "plumbing" in why and "bpspark/io.py" in why
+    assert len(names) == len(set(names)) and "zz_new_op" in names
+    from bpspark.registry import all_ops
+
+    assert set(names) == set(all_ops()) | {"zz_new_op"}

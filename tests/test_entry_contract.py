@@ -7,11 +7,12 @@ temp directory."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import tempfile
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCRIPT = f"""
 import sys

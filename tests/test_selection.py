@@ -365,11 +365,8 @@ def test_bm25_segment_merge_equals_multisegment_and_preserves_sources(spark, tmp
 
 
 def test_bm25_oracle_single_source():
-    """Every BM25-family certification oracle must be the one formula:
-    the three uncertified ops take theirs from _bm25_oracle directly;
-    text_bm25_rank keeps an inline literal (its driver-certified source
-    hash must not churn on a refactor) — this pin guarantees that copy
-    can never silently de-sync from the shared builder."""
+    """Every BM25-family oracle must be the one formula: all four ops
+    take their oracle SQL from _bm25_oracle with their own query terms."""
     from bpspark.search import (
         _INC_QUERY_TERMS,
         _MERGE_QUERY_TERMS,
