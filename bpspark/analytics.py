@@ -2060,13 +2060,30 @@ def _q6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def _grow_hist_tree(df):
+def _sum_y2():
+    """Σy² of the centi-unit target as an exact DECIMAL(38,0) aggregate
+    (y² of a centi-unit long still fits a long)."""
+    return F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)")).alias("syy")
+
+
+def _grow_hist_tree(df, syy: bool = False):
     """Histogram tree-grow over a binned frame (columns: y int64-exact,
     b0, b1) — the shared core of ml_decision_tree_hist and ml_gbdt_hist.
-    One map-side-combined (node, b0, b1) exact-count/sum aggregate per
-    level, split argmax on the collected ≤ nodes×256-cell histogram
-    (a bounded model literal), assignment as a pure column expression.
-    Returns (nodes dict, frame with the final ``node`` column).
+    Returns (nodes dict, frame with the final ``node`` column, Σy² over
+    the frame — an exact int when ``syy`` is set, else None).
+
+    ONE map-side-combined (b0, b1) exact-count/sum aggregate per tree:
+    every split tests ``b{f} > s``, so a row's node is a function of its
+    bin cell alone, and the 16×16 cell histogram is a sufficient
+    statistic for the whole tree — a child's cells are its parent's
+    cells split by (f, s). The level-by-level split search then runs on
+    the driver over the ≤256 collected cells (a bounded model literal)
+    and the assignment is a pure column expression. Node totals and
+    per-feature marginals are the same exact Python-int sums a
+    per-(node, cell) histogram would give, so the tree is identical to
+    a per-level grow. Scale: the joint histogram has 16^F cells — it
+    stays bounded because F = 2; a wider feature set needs per-level
+    per-feature marginal histograms instead (F×16 cells per node).
 
     Split selection maximizes ``gain = ls²/ln + rs²/rn`` (strictly above
     the no-split baseline ``sy²/n``) — algebraically the same argmin of
@@ -2079,28 +2096,28 @@ def _grow_hist_tree(df):
     2⁵³ — corpus Σ|y| beyond ~9e15 centi-units — conversions round and
     split choice degrades gracefully to the same approximate argmax
     every float-histogram GBDT makes). Ties break deterministically to
-    (smaller feature, smaller bin)."""
+    (smaller feature, smaller bin). An empty frame grows no node."""
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
+    ]
+    if syy:
+        aggs.append(_sum_y2())
+    hist = df.groupBy("b0", "b1").agg(*aggs).collect()
+    cells = [(r["b0"], r["b1"], r["n"], int(r["sy"])) for r in hist]
+    cell_node = [0] * len(cells)
     df = df.withColumn("node", F.lit(0))
     nodes: dict[int, dict] = {}
-    active = [0]
+    active = [0] if cells else []
     for depth in range(_TREE_DEPTH + 1):
-        hist = (
-            df.filter(F.col("node").isin(active))
-            .groupBy("node", "b0", "b1")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
-            )
-            .collect()
-        )
         by_node: dict[int, list] = {}
-        for r in hist:
-            by_node.setdefault(r["node"], []).append(r)
+        for c, nid in zip(cells, cell_node):
+            by_node.setdefault(nid, []).append(c)
         splits = {}
         for nid in active:
-            cells = by_node.get(nid, [])
-            n_tot = sum(r["n"] for r in cells)
-            sy_tot = sum(int(r["sy"]) for r in cells)
+            node_cells = by_node[nid]  # children keep ≥ _TREE_MIN_LEAF rows
+            n_tot = sum(c[2] for c in node_cells)
+            sy_tot = sum(c[3] for c in node_cells)
             nodes[nid] = {
                 "depth": depth, "n": n_tot, "sy": sy_tot,
                 "feature": None, "split_bin": None,
@@ -2111,9 +2128,9 @@ def _grow_hist_tree(df):
             best = None
             for f in (0, 1):
                 marg = [[0, 0] for _ in range(_TREE_BINS)]
-                for r in cells:
-                    m = marg[r[f"b{f}"]]
-                    m[0] += r["n"]; m[1] += int(r["sy"])
+                for c in node_cells:
+                    m = marg[c[f]]
+                    m[0] += c[2]; m[1] += c[3]
                 cn = cs = 0
                 for s in range(_TREE_BINS - 1):
                     cn += marg[s][0]; cs += marg[s][1]
@@ -2139,10 +2156,13 @@ def _grow_hist_tree(df):
                 F.lit(2 * nid + 1) + (F.col(f"b{f}") > s).cast("int"),
             ).otherwise(expr)
         df = df.withColumn("node", expr)
+        for i, (c, nid) in enumerate(zip(cells, cell_node)):
+            if nid in splits:
+                f, s = splits[nid]
+                cell_node[i] = 2 * nid + 1 + (c[f] > s)
         active = sorted(2 * n + 1 + side for n in splits for side in (0, 1))
-        if not active:
-            break
-    return nodes, df
+    total_syy = sum(int(r["syy"]) for r in hist) if syy else None
+    return nodes, df, total_syy
 
 
 def _tree_bin_ctes(src_rows: str = "lineitem") -> str:
@@ -2277,55 +2297,52 @@ def _hist_tree_sql() -> str:
 def ml_decision_tree_hist(spark: SparkSession, sf: str) -> DataFrame:
     """Depth-2 regression tree grown the way every distributed GBDT
     grows trees (XGBoost's approx/hist algorithm, LightGBM): features
-    are pre-binned (16 fixed-width bins), each level is ONE map-side
-    partial aggregate building the per-(node, bin-cell) moment
-    histogram — count, Σy — and split selection happens on that
-    tiny histogram, never on rows. Predicts l_extendedprice (centi-unit
-    integer y) from l_quantity and l_discount. The split objective is
-    the gain form ls²/ln + rs²/rn (Σy² cancels from every comparison
-    — see _grow_hist_tree), so the histogram carries two moments, not
-    three.
+    are pre-binned (16 fixed-width bins), ONE map-side partial
+    aggregate builds the per-bin-cell moment histogram — count, Σy —
+    and split selection happens on that tiny histogram, never on rows.
+    Predicts l_extendedprice (centi-unit integer y) from l_quantity and
+    l_discount. The split objective is the gain form ls²/ln + rs²/rn
+    (Σy² cancels from every comparison — see _grow_hist_tree), so the
+    histogram carries two moments, not three.
 
-    One 2-D (16×16) histogram per node serves BOTH features — each
-    feature's 1-D split scan is a marginal of it, so a level costs one
-    aggregate regardless of feature count up to the cell budget.
-    Moments accumulate in DECIMAL(38,0) off integer centi-units (exact,
+    One 2-D (16×16) histogram serves BOTH features and EVERY level: a
+    row's node is a function of its bin cell (every split is
+    ``b{f} > s``), so each node's cells are a subset of the root's and
+    each feature's 1-D split scan is a marginal of them. Moments
+    accumulate in DECIMAL(38,0) off integer centi-units (exact,
     associative, overflow-proof — the layout.py fingerprint idiom), so
     the variance-gain argmax runs on exact integers and ties break
     deterministically to (smaller feature, smaller bin). A split must
     leave ≥100 rows per side and strictly reduce SSE, else the node
     leaves.
 
-    The per-level collect is the |nodes|·256-cell histogram (≤ 1024
-    rows at depth 2) — a bounded model literal under the repo's
-    collect() policy, the same contract as k-means centroids. Scale:
-    per level, ONE pass over the fact table with map-side combine into
-    ≤ nodes×256 cells; assignment is a pure column expression (no
-    join); depth levels ⇒ depth passes. At 100 TB this is exactly the
-    histogram-aggregation tree-grow that powers distributed GBDT.
+    The one collect is the ≤256-cell histogram — a bounded model
+    literal under the repo's collect() policy, the same contract as
+    k-means centroids. Scale: ONE pass over the fact table per tree
+    (plus the min/max edge pass), map-side combine into ≤256 cells,
+    whatever the depth. The joint histogram has 16^F cells, bounded
+    here because F = 2; a wider feature set needs per-level marginal
+    histograms (one pass per level, F×16 cells per node). At 100 TB
+    this is the histogram-aggregation tree-grow that powers
+    distributed GBDT.
 
     Output: one row per tree node — split nodes carry (feature,
     split_bin, threshold), leaves carry NULLs — plus exact n and the
-    1e-6-quantized mean for every node. Certified two ways: a
-    pure-pandas replica test reproduces the tree byte-for-byte, and the
-    FULL-replication DuckDB oracle (_hist_tree_sql — unrolled per-level
-    CTE chain replaying binning, histograms, the staged-float gain
-    argmax, and assignment) hash-matches the whole node table."""
+    1e-6-quantized mean for every node; an empty lineitem grows no
+    node and emits no row. Certified two ways: a pure-pandas replica
+    test reproduces the tree byte-for-byte, and the FULL-replication
+    DuckDB oracle (_hist_tree_sql — unrolled per-level CTE chain
+    replaying binning, histograms, the staged-float gain argmax, and
+    assignment) hash-matches the whole node table."""
     df, edges = _binned_lineitem(spark, sf)
-    # r13 (VERDICT r12 item 6): materialize the binned frame once before
-    # the level loop — each level's histogram job otherwise re-reads the
-    # scan and re-derives the bin expressions (depth+1 passes). The frame
-    # is 3 narrow ints per row (~20 B), the same posture ml_gbdt_hist has
-    # always taken; at extreme scale re-scanning the column-pruned parquet
-    # can beat materializing — revisit with cluster storage in hand.
-    nodes, _df_assigned = _grow_hist_tree(df.localCheckpoint())
+    nodes, _, _ = _grow_hist_tree(df)
 
     rows = []
     for nid in sorted(nodes):
         nd = nodes[nid]
         f, s = nd["feature"], nd["split_bin"]
         thr = None if f is None else _q6(edges[f][0] + edges[f][1] * (s + 1))
-        mean = _q6(nd["sy"] / (100.0 * nd["n"])) if nd["n"] else None
+        mean = _q6(nd["sy"] / (100.0 * nd["n"]))
         rows.append(
             (
                 nid, nd["depth"],
@@ -2517,33 +2534,45 @@ def ml_gbdt_hist(spark: SparkSession, sf: str) -> DataFrame:
     fitting — 3 rounds of the SAME histogram tree-grow
     ml_decision_tree_hist certifies (shared `_grow_hist_tree`), each on
     the previous round's residuals, with learning rate 0.5. This is
-    the full distributed-GBDT shape (XGBoost/LightGBM): per round, per
-    level, ONE map-side-combined histogram aggregate; leaf values are
-    bounded model literals; the residual update is a pure column
-    expression (leaf → prediction via a ≤7-way CASE, then a HALF_UP
-    round back to exact centi-unit integers so the NEXT round's
-    DECIMAL moments stay exact — the trick that keeps an iterative
-    float algorithm hash-reproducible end to end). localCheckpoint per
-    round truncates lineage.
+    the full distributed-GBDT shape (XGBoost/LightGBM): per round, ONE
+    map-side-combined joint-bin histogram aggregate grows the whole
+    tree; leaf values are bounded model literals; the residual update
+    is a pure column expression (leaf → prediction via a ≤7-way CASE,
+    then a HALF_UP round back to exact centi-unit integers so the NEXT
+    round's DECIMAL moments stay exact — the trick that keeps an
+    iterative float algorithm hash-reproducible end to end). Every
+    round reads the one checkpointed binned frame through its stacked
+    residual projections — no per-round materialization.
 
     Output: every tree node of every round (leaves carry the shrunken
     leaf value) plus a per-round training-RMSE row — the RMSE sequence
     must be non-increasing (boosting on train always is; test-pinned),
     and the whole table is reproduced byte-for-byte by a sequential
-    pandas/int replica. At 100 TB: rounds × levels passes over the
-    fact table, constant-size shuffles (≤ nodes×256 cells), no row
-    ever leaves the cluster."""
+    pandas/int replica. Round r's RMSE is folded into round r+1's
+    histogram as a third moment (Σy², DECIMAL(38,0)); only the last
+    round pays a separate moments aggregate. An empty lineitem emits
+    no node rows and RMSE rows with n = 0 and a NULL value. At 100 TB:
+    rounds + 1 passes over the fact table (plus the edge pass),
+    constant-size shuffles (≤256 cells), no row ever leaves the
+    cluster. The joint histogram is 16^F cells — bounded because F = 2;
+    a wider feature set needs per-level marginal histograms."""
     import math as _math
+
+    def rmse_row(rnd: int, n: int, syy: int):
+        value = _q6(_math.sqrt(syy / n) / 100.0) if n else None
+        return (rnd, -1, None, "round_rmse", None, None, None, n, value)
 
     binned, edges = _binned_lineitem(spark, sf)
     cur = binned.localCheckpoint()
     out_rows = []
     for rnd in range(1, _GBDT_ROUNDS + 1):
-        nodes, assigned = _grow_hist_tree(cur)
-        leaves = {
-            nid: nd for nid, nd in nodes.items() if nd["feature"] is None and nd["n"] > 0
+        nodes, assigned, syy = _grow_hist_tree(cur, syy=rnd > 1)
+        if rnd > 1:  # this histogram's Σy² is the previous round's RMSE
+            out_rows.append(rmse_row(rnd - 1, nodes[0]["n"] if nodes else 0, syy))
+        preds = {
+            nid: _GBDT_LR * nd["sy"] / nd["n"]
+            for nid, nd in nodes.items() if nd["feature"] is None
         }
-        preds = {nid: _GBDT_LR * nd["sy"] / nd["n"] for nid, nd in leaves.items()}
         for nid in sorted(nodes):
             nd = nodes[nid]
             f, s = nd["feature"], nd["split_bin"]
@@ -2556,18 +2585,11 @@ def ml_gbdt_hist(spark: SparkSession, sf: str) -> DataFrame:
         pred_expr = F.lit(0.0)
         for nid, p in preds.items():
             pred_expr = F.when(F.col("node") == nid, F.lit(p)).otherwise(pred_expr)
-        cur = (
-            assigned.withColumn("y", F.round(F.col("y") - pred_expr).cast("long"))
-            .select("y", "b0", "b1")
-            .localCheckpoint()
-        )
-        mom = cur.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)")).alias("syy"),
-        ).collect()[0]
-        rmse = _math.sqrt(int(mom["syy"]) / mom["n"]) / 100.0
-        out_rows.append((rnd, -1, None, "round_rmse", None, None, None,
-                         mom["n"], _q6(rmse)))
+        cur = assigned.withColumn(
+            "y", F.round(F.col("y") - pred_expr).cast("long")
+        ).select("y", "b0", "b1")
+    mom = cur.agg(F.count(F.lit(1)).alias("n"), _sum_y2()).collect()[0]
+    out_rows.append(rmse_row(_GBDT_ROUNDS, mom["n"], int(mom["syy"] or 0)))
     return spark.createDataFrame(
         out_rows,
         "rnd int, node int, depth int, kind string, feature int, "

@@ -2219,3 +2219,47 @@ def test_video_scene_pack_overflow_raises(monkeypatch):
     pdf = pd.DataFrame({"doc_id": [1], "payload": [b"x"]})
     with pytest.raises(ValueError, match="overflows"):
         list(llm._scene_keyframe_batches(iter([pdf])))
+
+
+def test_hist_tree_ops_match_oracles_on_empty_lineitem(spark, tmp_path):
+    """Empty-input parity for both histogram-tree ops: the decision tree
+    grows no node (its oracle returns 0 rows), and GBDT emits only its
+    three round_rmse rows with n = 0 and a NULL value (SUM over zero rows
+    is NULL in the oracle)."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from tests.oracle_compare import compare_frames
+
+    empty = pq.read_table(f"{SF_SMALL}/lineitem.parquet").slice(0, 0)
+    pq.write_table(empty, tmp_path / "lineitem.parquet")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'")
+    for name, want_rows in (("ml_decision_tree_hist", 0), ("ml_gbdt_hist", 3)):
+        op = OPS[name]
+        got = op.fn(spark, str(tmp_path)).toPandas()
+        want = con.sql(op.sql).df()
+        assert len(want) == want_rows, name
+        assert compare_frames(got, want, name) == []
+
+
+def test_hist_tree_ops_job_ceilings(spark):
+    """Host-independent regression gate on the one-histogram-per-tree
+    grow: Spark jobs per call, counted through a job group on a warm
+    call (the first call may add a schema-resolution job). Per tree the
+    decision tree runs the edge min/max aggregate, ONE joint-bin
+    histogram and the output collect; GBDT adds the binned-frame
+    checkpoint, one histogram per round and the last round's moments."""
+    sc = spark.sparkContext
+    for name, ceiling in (("ml_decision_tree_hist", 5), ("ml_gbdt_hist", 12)):
+        fn = OPS[name].fn
+        fn(spark, SF_SMALL).collect()
+        group = f"job-ceiling-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn(spark, SF_SMALL).collect()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= ceiling, f"{name}: {jobs} Spark jobs > {ceiling}"

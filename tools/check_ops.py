@@ -9,7 +9,9 @@ registration order.
 
 Each selected op runs on a vanilla ``local[*]`` session from a foreign cwd
 and is compared with its DuckDB oracle by ``tests/oracle_compare.py``. One
-line per (op, sf, pass) gives the status and the Spark and oracle seconds:
+line per (op, sf, pass) gives the status, the Spark rows, the Spark jobs
+the call ran (counted through a job group) and the Spark and oracle
+seconds:
 
   PASS     oracle matched on a non-empty result
   ROWS     rows-only op (no oracle) executed
@@ -319,17 +321,33 @@ def changed_ops(rev: str, repo: str = REPO) -> tuple[list[str], str]:
     return names, f"{len(names)} of {len(now)} ops have a closure hash that differs from {rev}"
 
 
-def _check(spark, con, op, sf_dir: str) -> tuple[str, int, float, float, list]:
-    """(status, spark rows, spark s, oracle s, problems) for one op run."""
+def _run_counting_jobs(spark, op, sf_dir: str):
+    """(pandas output, Spark jobs) for one op call: the call runs under
+    its own job group, whose job ids the status tracker lists once the
+    listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"check_ops:{op.name}:{time.monotonic_ns()}"
+    sc.setJobGroup(group, op.name)
+    try:
+        pdf = op.fn(spark, sf_dir).toPandas()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return pdf, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _check(spark, con, op, sf_dir: str) -> tuple[str, int, int, float, float, list]:
+    """(status, spark rows, spark jobs, spark s, oracle s, problems) for
+    one op run."""
     from oracle_compare import compare_frames
 
     t0 = time.monotonic()
-    pdf = op.fn(spark, sf_dir).toPandas()
+    pdf, jobs = _run_counting_jobs(spark, op, sf_dir)
     if len(pdf.columns):
         pdf.sort_values(by=sorted(pdf.columns), kind="stable")
     t1 = time.monotonic()
     if op.sql is None:
-        return "ROWS", len(pdf), t1 - t0, 0.0, []
+        return "ROWS", len(pdf), jobs, t1 - t0, 0.0, []
     odf = con.sql(op.sql).df()
     t2 = time.monotonic()
     probs = compare_frames(pdf, odf, op.name)
@@ -339,7 +357,7 @@ def _check(spark, con, op, sf_dir: str) -> tuple[str, int, float, float, list]:
         status = "VACUOUS"
     else:
         status = "PASS"
-    return status, len(pdf), t1 - t0, t2 - t1, probs
+    return status, len(pdf), jobs, t1 - t0, t2 - t1, probs
 
 
 def main() -> None:
@@ -399,8 +417,8 @@ def main() -> None:
             tag = f" #{p}" if passes > 1 else ""
             for name in names:
                 try:
-                    status, rows, ts, to, probs = _check(spark, con, ops[name], sf_dir)
-                    line = f"{status} (spark {rows}r/{ts:.1f}s, oracle {to:.1f}s)"
+                    status, rows, jobs, ts, to, probs = _check(spark, con, ops[name], sf_dir)
+                    line = f"{status} (spark {rows}r/{jobs} jobs/{ts:.1f}s, oracle {to:.1f}s)"
                     if probs:
                         line += f": {probs}"
                 except Exception as ex:  # noqa: BLE001 — report, keep checking the rest
