@@ -56,11 +56,12 @@ def ensure_worker_imports(spark) -> None:
     if getattr(sc, "_bpspark_pyfile_added", False):
         return
     import pathlib
-    import tempfile
     import zipfile
 
+    from bpspark.io import scratch
+
     pkg = pathlib.Path(__file__).parent
-    zpath = pathlib.Path(tempfile.mkdtemp(prefix="bpspark_pyfile_")) / "bpspark.zip"
+    zpath = pathlib.Path(scratch("pyfile")) / "bpspark.zip"
     with zipfile.ZipFile(zpath, "w") as z:
         for f in sorted(pkg.rglob("*.py")):
             z.write(f, f"bpspark/{f.relative_to(pkg)}")

@@ -6,7 +6,8 @@ for ALL DataFrame iteration at scale: cache the loop-invariant edge list
 partitioned on the join key, re-derive a small ranks frame each round
 (one shuffle co-partitioned with edges), and localCheckpoint every few
 rounds to truncate the lineage Catalyst would otherwise re-analyze
-exponentially.
+exponentially. Unpersist the edge list once the returned frame no longer
+reads it (its last checkpoint is taken), so no call leaves a cache entry.
 """
 
 from __future__ import annotations
@@ -142,6 +143,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         # (on a real cluster: checkpoint() to durable storage instead)
         if i % 2 == 1 or i == _ITERATIONS - 1:
             ranks = ranks.localCheckpoint()
+    ew.unpersist()  # the checkpointed ranks no longer read it
     return (
         ranks.select(F.col("src").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), "node")
@@ -220,8 +222,11 @@ def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     two-hop join (e1: a-b, e2: b-c, e3 closes a-c) — the classic
     distributed triangle algorithm; with degree ≤ 16 the join fan-out per
     edge is constant, so the whole count is one bounded shuffle at any
-    scale. Integer-only output (exact cross-engine)."""
-    e = _knn_supplier_edges(spark, sf).cache()
+    scale. Integer-only output (exact cross-engine). The edge frame is
+    not cached: its four reads are one identical subtree, so exchange
+    reuse computes each of its shuffles once (sf0.1: 12 jobs uncached
+    against 15 cached, no slower), and the op leaves nothing persisted."""
+    e = _knn_supplier_edges(spark, sf)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
@@ -313,6 +318,7 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         new = nxt.join(visited, ["landmark", "node"], "left_anti").localCheckpoint()
         visited = visited.unionByName(new).localCheckpoint()
         frontier = new
+    ed.unpersist()
     return visited.groupBy("landmark", "dist").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -457,7 +463,8 @@ def graph_kcore_decompose(spark: SparkSession, sf: str) -> DataFrame:
         alive = (
             deg.filter(F.col("c") >= _KCORE_K).select("node").localCheckpoint()
         )
-    final_deg = _kcore_degrees(ed, alive)
+    final_deg = _kcore_degrees(ed, alive).localCheckpoint()
+    ed.unpersist()
     return (
         final_deg.join(alive, "node")
         .select("node", F.col("c").cast("long").alias("core_degree"))
@@ -503,6 +510,7 @@ def _label_propagation(sym_edges: DataFrame, rounds: int) -> DataFrame:
             .select("node", "label")
             .localCheckpoint()
         )
+    ed.unpersist()
     return labels
 
 

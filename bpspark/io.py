@@ -133,12 +133,40 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
 
 
-# Version tag for cross-process state directories under /tmp. These dirs
-# are memoized by existence (skip-if-_SUCCESS), and /tmp OUTLIVES one
-# driver round — without a version in the name, a logic change in a
-# state-producing op would silently serve state written by old code.
-# Bump when any state-producing op changes its written content.
-STATE_VERSION = "v3"  # r3: fixed-k IVF quantizer changes persisted index content
+# Scratch lifecycle: every file an op writes lives under ONE directory per
+# process, made lazily under tempfile.gettempdir() (so it follows TMPDIR)
+# and removed at interpreter exit. Ops return lazy frames that may read
+# these files, so the files live exactly as long as the process that can
+# still read them; nothing outlives it, nothing is shared across processes.
+_ROOT: tuple[int, str] | None = None  # (creator pid, path)
+
+
+def _remove_root(pid: int, path: str) -> None:
+    import os
+    import shutil
+
+    if os.getpid() == pid:  # a forked child must not delete the driver's files
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _root() -> str:
+    global _ROOT
+    if _ROOT is None:
+        import atexit
+        import os
+        import tempfile
+
+        _ROOT = (os.getpid(), tempfile.mkdtemp(prefix="bpspark_"))
+        atexit.register(_remove_root, *_ROOT)
+    return _ROOT[1]
+
+
+def scratch(tag: str) -> str:
+    """A fresh, empty directory for one call of op ``tag``, removed with
+    the process's scratch root at exit."""
+    import tempfile
+
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_root())
 
 
 def _file_print(full: str, rel: str) -> str:
@@ -186,66 +214,15 @@ def _sf_data_fingerprint(sf_dir: str) -> str:
 
 
 def state_dir(tag: str, sf_dir: str) -> str:
-    """Process-independent state directory for op ``tag`` at ``sf_dir``,
-    versioned two ways so stale state is never reused: STATE_VERSION
-    (older CODE revisions) and a dataset fingerprint (older DATA — a
+    """State directory for op ``tag`` at ``sf_dir`` under the process's
+    scratch root, memoized by existence within the process. The dataset
+    fingerprint in the name keeps stale state from being reused: a
     harness that regenerates the corpus at the same path must not be
-    served state derived from the previous files; the r10 BPE-memo bug
+    served state derived from the previous files (the r10 BPE-memo bug
     class, closed here for every state-dir-guarded op at once)."""
     import os
-    import tempfile
 
     return os.path.join(
-        tempfile.gettempdir(),
-        f"bpspark_{tag}_{STATE_VERSION}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_sf_data_fingerprint(sf_dir)}",
+        _root(),
+        f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{_sf_data_fingerprint(sf_dir)}",
     )
-
-
-def cleanup_stale_state(
-    dry_run: bool = False, sf_dirs: list[str] | None = None
-) -> list[str]:
-    """Delete state dirs written under OLDER STATE_VERSIONs — the garbage
-    the version bump necessarily leaves behind (a bump orphans every
-    ``bpspark_{tag}_{old}_{sf}`` tree; /tmp outlives rounds, so without
-    this they accumulate one generation per bump). With ``sf_dirs``,
-    additionally prune SUPERSEDED-FINGERPRINT dirs at the current
-    version (ADVICE r11): for each given dataset path, any
-    ``bpspark_{tag}_{cur}_{base}_{fp}`` whose basename matches but whose
-    fingerprint differs from the dataset's LIVE fingerprint was written
-    against a previous generation of the data and can never be read
-    again. Current-version, current-fingerprint dirs are never touched.
-    Returns the removed (or, with ``dry_run``, would-be-removed) paths.
-    Invoked manually or from session setup — never from inside an op
-    (ops must not mutate global state)."""
-    import glob
-    import os
-    import re
-    import shutil
-    import tempfile
-
-    live_fp = {
-        os.path.basename(d.rstrip("/")): _sf_data_fingerprint(d)
-        for d in (sf_dirs or [])
-    }
-    # fingerprint suffix OPTIONAL: dirs written by pre-fingerprint code
-    # generations have none — the version GC must still remove them
-    pat = re.compile(r"^bpspark_[A-Za-z0-9]+_(v\d+)_(.+?)(?:_([0-9a-f]{10}))?$")
-    removed: list[str] = []
-    for path in glob.glob(os.path.join(tempfile.gettempdir(), "bpspark_*_v*_*")):
-        m = pat.match(os.path.basename(path))
-        if not (m and os.path.isdir(path)):
-            continue
-        ver, base, fp = m.group(1), m.group(2), m.group(3)
-        stale_version = ver != STATE_VERSION
-        superseded = (
-            ver == STATE_VERSION
-            and fp is not None
-            and base in live_fp
-            and fp != live_fp[base]
-        )
-        if stale_version or superseded:
-            removed.append(path)
-            if not dry_run:
-                shutil.rmtree(path, ignore_errors=True)
-    return sorted(removed)

@@ -12,30 +12,26 @@ per-query shuffle."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bpspark.io import state_dir, table
+from bpspark.io import scratch, state_dir, table
 from bpspark.registry import op
-
-_SILVER_DIR: dict[str, str] = {}
-
 
 def silver_orders_path(spark: SparkSession, sf: str) -> str:
     """Write orders once per (process, sf) as a year-partitioned silver
     table; later reads prune partitions."""
-    if sf not in _SILVER_DIR:
-        d = tempfile.mkdtemp(prefix="bpspark_silver_")
+    import os as _os
+
+    d = state_dir("silver", sf)
+    if not _os.path.exists(_os.path.join(d, "_SUCCESS")):
         (
             table(spark, sf, "orders")
             .withColumn("order_year", F.year("o_orderdate"))
             .write.partitionBy("order_year")
             .parquet(d, mode="overwrite")
         )
-        _SILVER_DIR[sf] = d
-    return _SILVER_DIR[sf]
+    return d
 
 
 @op(
@@ -81,7 +77,7 @@ def _ensure_bucketed_tables(spark: SparkSession, sf: str) -> tuple[str, str]:
 
         tag = uuid.uuid4().hex[:10]
         to, tl = f"bp_orders_b_{tag}", f"bp_lineitem_b_{tag}"
-        base = tempfile.mkdtemp(prefix="bpspark_bucketed_")
+        base = scratch("bucketed")
         # explicit paths → external tables in a guaranteed-writable tmp dir
         # (the default managed location lives under the *caller's* cwd in
         # spark-warehouse/, which may not be writable for the driver)
@@ -154,7 +150,7 @@ def sink_overwrite_dynamic(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
         )
 
-    d = tempfile.mkdtemp(prefix="bpspark_dynover_")
+    d = scratch("dynover")
     summary(docs).write.mode("overwrite").partitionBy("lang").parquet(d)
     (
         summary(docs.filter((F.col("lang") == "en") & (F.col("n_chars") >= 100)))
@@ -190,7 +186,6 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     this runs per-partition-folder with a target of
     files.maxPartitionBytes-sized outputs."""
     import os as _os
-    import tempfile
 
     base = state_dir("compact", sf)
     frag, packed = _os.path.join(base, "frag"), _os.path.join(base, "packed")
@@ -248,7 +243,6 @@ def sink_merge_scd1(spark: SparkSession, sf: str) -> DataFrame:
     rewrite only partitions containing updated keys (see
     sink_overwrite_dynamic)."""
     import os as _os
-    import tempfile
 
     o = table(spark, sf, "orders")
 
@@ -292,7 +286,6 @@ def sink_range_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     results are layout-invariant; the plan test asserts the narrow-span
     property on the files themselves."""
     import os as _os
-    import tempfile
 
     dst = state_dir("range", sf)
     if not _os.path.exists(_os.path.join(dst, "_SUCCESS")):
@@ -391,7 +384,6 @@ def sink_zorder_clustered(spark: SparkSession, sf: str) -> DataFrame:
     this is the layout for scan-heavy multi-predicate workloads; the
     trade is one full shuffle+sort at write time."""
     import os as _os
-    import tempfile
 
     li = table(spark, sf, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"
@@ -463,7 +455,6 @@ def mv_incremental_refresh(spark: SparkSession, sf: str) -> DataFrame:
     so the two-stage (state + delta) association is bit-identical to the
     oracle's single pass."""
     import os as _os
-    import tempfile
 
     raw = table(spark, sf, "orders").select(
         "o_orderdate", "o_orderpriority", "o_totalprice"
@@ -556,7 +547,6 @@ def sink_merge_scd2(spark: SparkSession, sf: str) -> DataFrame:
     partitions containing changed keys rewrite (sink_overwrite_dynamic).
     Oracle states the post-merge dimension declaratively."""
     import os as _os
-    import tempfile
 
     c = table(spark, sf, "customer")
     base = c.select(F.col("c_custkey").alias("k"), F.col("c_mktsegment").alias("seg"))
@@ -718,7 +708,7 @@ def catalog_stats_cbo(spark: SparkSession, sf: str) -> DataFrame:
 
     tag = _uuid.uuid4().hex[:10]
     tbl = f"bp_stats_{tag}"
-    base = tempfile.mkdtemp(prefix="bpspark_cbostats_")
+    base = scratch("cbostats")
     table(spark, sf, "orders").select("o_orderkey", "o_custkey").write.format(
         "parquet"
     ).option("path", f"{base}/{tbl}").saveAsTable(tbl)
@@ -1265,7 +1255,7 @@ def backfill_stale_partitions_run(
     # pure function of its inputs (a healed silver from a previous run
     # would make detection find nothing and flip was_backfilled):
     # years >= 1997 silently missed every o_orderkey%7==0 order.
-    silver = tempfile.mkdtemp(prefix="bpspark_backfill_")
+    silver = scratch("backfill")
     stale_load = src.filter(
         ~((F.col("order_year") >= 1997) & (F.col("o_orderkey") % 7 == 0))
     )
@@ -1376,7 +1366,7 @@ def maintenance_rf_refresh(spark: SparkSession, sf: str) -> DataFrame:
         src.unionByName(inserts)
         .filter(F.col("o_orderkey") % 13 != 0)
     )
-    snap = tempfile.mkdtemp(prefix="bpspark_rf_")
+    snap = scratch("rf")
     after.write.mode("overwrite").parquet(snap)
     return (
         spark.read.parquet(snap)
@@ -1494,7 +1484,7 @@ def maintenance_delete_where_cow(spark: SparkSession, sf: str) -> DataFrame:
             return _dt.datetime.combine(v, _dt.time())
         return None  # INT96/statless → unknown
 
-    out_dir = tempfile.mkdtemp(prefix="bpspark_cowdel_out_")
+    out_dir = scratch("cowdel_out")
     rewritten, carried = [], []
     for f in sorted(_glob.glob(_os.path.join(src_dir, "part-*.parquet"))):
         md = _pq.read_metadata(f)
@@ -1578,7 +1568,7 @@ def sink_compression_codecs(spark: SparkSession, sf: str) -> DataFrame:
     li = table(spark, sf, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_orderkey"
     )
-    base = tempfile.mkdtemp(prefix="bpspark_codec_")
+    base = scratch("codec")
     sizes = {}
     for codec in ("snappy", "zstd"):
         d = f"{base}/{codec}"
@@ -1657,7 +1647,7 @@ def layout_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     self (test-pinned); real deployments run this nightly per table to
     decide when re-clustering pays.
 
-    Cross-engine: the state dir is written ONCE (versioned via
+    Cross-engine: the state dir is written ONCE per process (via
     state_dir) and the report reads the FILES back
     (hive-partitioned by layout/pid), while the oracle restates the
     identical envelope computation from the orders table (the repo's

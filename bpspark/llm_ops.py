@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import state_dir, table
+from bpspark.io import scratch, state_dir, table
 from bpspark.registry import op
 
 
@@ -4499,7 +4499,6 @@ def dedup_incremental_exact(spark: SparkSession, sf: str) -> DataFrame:
     idempotency (MetadataIngestionServiceImpl existence check) at the
     content level."""
     import os as _os
-    import tempfile
 
     d = table(spark, sf, "documents")
     idx_state = state_dir("dedupidx", sf)
@@ -4531,11 +4530,11 @@ def dedup_incremental_exact(spark: SparkSession, sf: str) -> DataFrame:
         F.col("s_hash").isNull().alias("is_novel"),
     )
     # Demonstrate the index append (partition-targeted at scale) into a
-    # PER-PROCESS staging dir: the op itself must stay a pure function of
-    # (sf, code version) for the driver's repeated correctness runs, so the
+    # PER-CALL staging dir: the op itself must stay a pure function of
+    # sf for the driver's repeated correctness runs, so the
     # shared index is never mutated here — production would merge this
     # staged append into the index as its own committed step.
-    append_stage = tempfile.mkdtemp(prefix="bpspark_dedupidx_append_")
+    append_stage = scratch("dedupidx_append")
     decisions.filter("is_novel").select("content_hash").write.mode("append").parquet(
         append_stage
     )

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from bpspark import errors
 from bpspark.config import IngestionConfig
 from bpspark.fixtures import default_dir
+from bpspark.io import scratch
 from bpspark.registry import op
 from bpspark.sources import explode_entries, parse_zips, scan_drop_folder
 
@@ -346,10 +347,8 @@ def pipeline_idempotent_rerun(spark: SparkSession, sf: str) -> DataFrame:
 def sink_control_table_op(spark: SparkSession, sf: str) -> DataFrame:
     """R14/R17: idempotent control-table sink — write twice, read once;
     the second append contributes nothing."""
-    import tempfile
-
     _, _, res = _fixture_ingest(spark)
-    control = tempfile.mkdtemp(prefix="bpspark_control_") + "/workflows"
+    control = scratch("control") + "/workflows"
     sink_control_table(res.workflows_new, control)
     sink_control_table(res.workflows_new, control)  # replay must be a no-op
     return spark.read.parquet(control).select("workflow_id", "isbn").orderBy("isbn")

@@ -493,8 +493,8 @@ def search_bm25_segment_merge(spark: SparkSession, sf: str) -> DataFrame:
     the output fan-out); query cost after the merge is the same
     postings-bounded plan, now over 1 segment's worth of file metadata
     instead of N — which is the point of compacting. Merged index
-    persists via versioned state_dir; re-runs answer from it
-    (idempotent `_built` marker)."""
+    persists via state_dir for the life of the process; re-runs answer
+    from it (idempotent `_built` marker)."""
     import os as _os
 
     from bpspark.io import state_dir
@@ -538,10 +538,10 @@ def search_bm25_incremental(spark: SparkSession, sf: str) -> DataFrame:
     aggregates + sorted write) — the base corpus is NEVER re-tokenized;
     query cost ∝ the probed terms' postings across segments, not corpus
     size; segment compaction (many → few) is sink_compact_small_files'
-    job and changes no statistic. Segments persist via versioned
-    state_dir; a re-run reuses them (idempotent `_built` marker), which
-    doubles as the fresh-reader path: the second sweep pass answers the
-    query purely from the on-disk index."""
+    job and changes no statistic. Segments persist via state_dir for
+    the life of the process; a re-run reuses them (idempotent `_built`
+    marker), which doubles as the fresh-reader path: the second sweep
+    pass answers the query purely from the on-disk index."""
     import os as _os
 
     from bpspark.io import state_dir

@@ -1191,9 +1191,9 @@ def sink_training_shards(spark: SparkSession, sf: str) -> DataFrame:
     from bpspark.io import state_dir
 
     N_SHARDS = 8
-    # versioned stable dir + mode("overwrite"): re-exports replace the
-    # previous tree instead of accumulating a fresh mkdtemp per call (the
-    # companion test also reads this exact path, no /tmp globbing races)
+    # stable state dir + mode("overwrite"): re-exports replace the
+    # previous tree instead of accumulating a fresh scratch dir per call
+    # (the companion test also reads this exact path, no globbing races)
     out = state_dir("shards", sf)
     docs = table(spark, sf, "documents").select(
         "doc_id", "text", (F.col("doc_id") % N_SHARDS).alias("shard")

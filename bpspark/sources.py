@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from bpspark import errors
 from bpspark.fixtures import default_dir
+from bpspark.io import scratch, state_dir
 from bpspark.parse import extract_isbn_from_path, parse_metadata_zip
 from bpspark.registry import op
 
@@ -168,29 +169,24 @@ def ingest_properties_zip(spark: SparkSession, sf: str) -> DataFrame:
 def sink_append_parquet(spark: SparkSession, sf: str) -> DataFrame:
     """R11 bronze sink: append raw arrivals (path, length, ingest batch id),
     then read back. Parquet append partitioned by ingest date at scale."""
-    import tempfile
-
     drop = f"{default_dir()}/drop"
-    bronze = tempfile.mkdtemp(prefix="bpspark_bronze_")
+    bronze = scratch("bronze")
     raw = scan_drop_folder(spark, drop).select("zip_name", "isbn", "length")
     raw.write.mode("append").parquet(bronze)
     return spark.read.parquet(bronze)
 
 
-_FORMAT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _roundtrip_dir(spark: SparkSession, sf: str, fmt: str) -> str:
-    """Write the documents table once per (sf, fmt) into a temp dir in the
-    given format; return the path. Partitioned write + partitioned read —
-    the same code path a cluster uses for multi-file JSONL/CSV corpora."""
-    import tempfile
+    """Write the documents table once per (process, sf, fmt) into a state
+    dir in the given format; return the path. Partitioned write +
+    partitioned read — the same code path a cluster uses for multi-file
+    JSONL/CSV corpora."""
+    import os
 
-    from bpspark.io import state_dir, table
+    from bpspark.io import table
 
-    key = (sf, fmt)
-    if key not in _FORMAT_CACHE:
-        d = tempfile.mkdtemp(prefix=f"bpspark_{fmt}_")
+    d = state_dir(fmt, sf)
+    if not os.path.exists(os.path.join(d, "_SUCCESS")):
         docs = table(spark, sf, "documents")
         if fmt == "json":
             docs.select("doc_id", "text", "lang", "source").write.mode(
@@ -200,8 +196,7 @@ def _roundtrip_dir(spark: SparkSession, sf: str, fmt: str) -> str:
             docs.select("doc_id", "lang", "source", "n_chars").write.mode(
                 "overwrite"
             ).option("header", True).csv(d)
-        _FORMAT_CACHE[key] = d
-    return _FORMAT_CACHE[key]
+    return d
 
 
 @op(
@@ -261,7 +256,6 @@ def scan_orc(spark: SparkSession, sf: str) -> DataFrame:
     BIGINT sum is order-independent exact."""
     import os as _os
 
-    from bpspark.io import state_dir
     from bpspark.io import table as _table
 
     dst = _os.path.join(state_dir("orc", sf), "lineitem")
@@ -300,9 +294,7 @@ def scan_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     pays the footer-merge cost when mergeSchema is requested — keep it
     off for stable-schema 100 TB scans."""
     import os as _os
-    import tempfile
 
-    from bpspark.io import state_dir
     from bpspark.io import table as _table
 
     base = state_dir("evo", sf)
@@ -433,7 +425,6 @@ def stream_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
     for the two-run union."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise RuntimeError("pyspark >= 4.0 required for the Python DataSource API")
-    import tempfile as _tf
 
     from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
@@ -479,7 +470,7 @@ def stream_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
         spark.dataSource.register(BookFeedStreamSource)
     except Exception:
         pass
-    stage = _tf.mkdtemp(prefix="bpspark_pyfeed_")
+    stage = scratch("pyfeed")
     sink, ckpt = f"{stage}/sink", f"{stage}/ckpt"
     from bpspark.streaming import harness_shuffle
 
@@ -522,7 +513,6 @@ def scan_xml(spark: SparkSession, sf: str) -> DataFrame:
     same rationale as scan_csv)."""
     import os as _os
 
-    from bpspark.io import state_dir
     from bpspark.io import table as _table
 
     dst = _os.path.join(state_dir("xml", sf), "documents")
@@ -570,7 +560,6 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
     VALUE (see stream_python_datasource)."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise RuntimeError("pyspark >= 4.0 required for the Python DataSource API")
-    import tempfile as _tf
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -628,7 +617,7 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
         spark.dataSource.register(JsonlSinkDataSource)
     except Exception:  # already registered in this session
         pass
-    out = _tf.mkdtemp(prefix="bpspark_pyds_sink_")
+    out = scratch("pyds_sink")
     (
         table(spark, sf, "customer")
         .select("c_custkey", "c_acctbal")
@@ -784,7 +773,6 @@ def sink_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
     import json as _json
     import os as _os
     import shutil as _shutil
-    import tempfile as _tf
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -849,7 +837,7 @@ def sink_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
     except Exception:  # already registered in this session
         pass
 
-    stage = _tf.mkdtemp(prefix="bpspark_pyds_ssink_")
+    stage = scratch("pyds_ssink")
     src, out, ckpt = f"{stage}/src", f"{stage}/out", f"{stage}/ckpt"
     _os.makedirs(src)
     _os.makedirs(out)

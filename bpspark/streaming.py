@@ -26,13 +26,12 @@ from __future__ import annotations
 
 import contextlib
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bpspark.io import table
+from bpspark.io import scratch, state_dir, table
 from bpspark.registry import op
 from bpspark.sources import ZIP_GLOB, with_zip_keys
 from bpspark.search import _bm25_oracle as _search_mod_bm25_oracle
@@ -63,14 +62,12 @@ def harness_shuffle(spark: SparkSession, n: int = 8):
 BINFILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
 
-_STAGED_EVENTS: dict[str, str] = {}
-
-
 def events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """events as a file-source stream (parquet NANOS ts → µs timestamp).
 
     The file source needs a *directory*; the testdata table is a single
-    parquet file, so it is staged (once per sf) into a temp dir.
+    parquet file, so it is staged (once per process and sf) into a state
+    dir.
 
     The stream schema is not hard-coded: a one-time batch probe of the
     staged file (``io.read_events_raw``) decides whether ``ts`` arrives as
@@ -80,14 +77,15 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
     normalization as the batch path."""
     from bpspark import io
 
-    if sf not in _STAGED_EVENTS:
+    d = state_dir("events_src", sf)
+    if not os.path.exists(f"{d}/events.parquet"):
         import shutil
 
-        d = tempfile.mkdtemp(prefix="bpspark_events_src_")
-        shutil.copy(f"{sf}/events.parquet", f"{d}/events.parquet")
-        _STAGED_EVENTS[sf] = d
-    probe = io.read_events_raw(spark, f"{_STAGED_EVENTS[sf]}/events.parquet")
-    df = spark.readStream.schema(probe.schema).parquet(_STAGED_EVENTS[sf])
+        os.makedirs(d, exist_ok=True)
+        shutil.copy(f"{sf}/events.parquet", f"{d}/.events.parquet.tmp")
+        os.replace(f"{d}/.events.parquet.tmp", f"{d}/events.parquet")
+    probe = io.read_events_raw(spark, f"{d}/events.parquet")
+    df = spark.readStream.schema(probe.schema).parquet(d)
     return io.normalize_events_ts(spark, df)
 
 
@@ -96,7 +94,7 @@ def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataF
     sink; return the sink as a DataFrame. Test/driver harness only — real
     deployments write to a table sink with the same checkpoint semantics."""
     name = f"bpspark_mem_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bpspark_ckpt_")
+    ckpt = scratch("ckpt")
     with harness_shuffle(stream_df.sparkSession):
         q = (
             stream_df.writeStream.format("memory")
@@ -250,7 +248,7 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
     import glob as _glob
     import shutil
 
-    stage = tempfile.mkdtemp(prefix="bpspark_wm_")
+    stage = scratch("wm")
     src = f"{stage}/src"
     os.makedirs(src)
     ckpt = f"{stage}/ckpt"
@@ -316,7 +314,7 @@ def stream_dedup_state(spark: SparkSession, sf: str) -> DataFrame:
     from bpspark.fixtures import default_dir
 
     fx = default_dir()
-    stage = tempfile.mkdtemp(prefix="bpspark_dedup_")
+    stage = scratch("dedup")
     import shutil
 
     for sub in ("a", "b"):
@@ -392,7 +390,7 @@ def stream_stateful_counter(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stage = tempfile.mkdtemp(prefix="bpspark_state_")
+    stage = scratch("state")
     src = f"{stage}/src"
     os.makedirs(src)
     ckpt = f"{stage}/ckpt"
@@ -493,7 +491,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     Returns the control table after two runs + a replay; the test drives
     _stream_ingest_run directly to inspect the chapters/quarantine/control
     dirs."""
-    return _stream_ingest_run(spark, tempfile.mkdtemp(prefix="bpspark_stream_ingest_"))
+    return _stream_ingest_run(spark, scratch("stream_ingest"))
 
 
 def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
@@ -573,8 +571,8 @@ def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
 def stream_drop_folder(spark: SparkSession, sf: str) -> DataFrame:
     """R1+R16 as Structured Streaming: the drop folder consumed with
     checkpointed exactly-once-per-file offsets. Production trigger is
-    ProcessingTime(poll_interval) (IngestionConfig, 10s like the reference
-    cron); AvailableNow here so the op terminates."""
+    ProcessingTime("10 seconds") (the reference's cronExpression
+    0/10 * * * * ?); AvailableNow here so the op terminates."""
     from bpspark.fixtures import default_dir
 
     fx = default_dir()
@@ -610,7 +608,7 @@ def stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     state — the form that holds up on an unbounded 100 TB/day stream.
     Replayed here via file source + AvailableNow; the complete replay makes
     the batch theta join the exact oracle."""
-    stage = tempfile.mkdtemp(prefix="bpspark_ssj_")
+    stage = scratch("ssj")
     src = f"{stage}/src"
     table(spark, sf, "events").select("event_id", "ts", "user_id").write.parquet(src)
     schema = "event_id long, ts timestamp, user_id long"
@@ -651,7 +649,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf: str) -> DataFrame:
     from bpspark.fixtures import default_dir
 
     fx = default_dir()
-    stage = tempfile.mkdtemp(prefix="bpspark_dedup_wm_")
+    stage = scratch("dedup_wm")
     import shutil
 
     for sub in ("a", "b"):
@@ -694,7 +692,7 @@ def stream_mv_refresh(spark: SparkSession, sf: str) -> DataFrame:
     oracle is the plain batch aggregate over ALL events, proving
     stream-merge ≡ recompute. State versions double as the audit trail
     (tests assert ≥4 versions and version-monotone group counts)."""
-    stage = tempfile.mkdtemp(prefix="bpspark_smv_")
+    stage = scratch("smv")
     src = f"{stage}/src"
     (
         table(spark, sf, "events")
@@ -854,7 +852,7 @@ def stream_outer_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     symmetric hash join state is bounded by rate × (watermark + interval)
     on both sides — the only outer-join form that survives an unbounded
     stream."""
-    stage = tempfile.mkdtemp(prefix="bpspark_ssoj_")
+    stage = scratch("ssoj")
     src = f"{stage}/src"
     # harness subsets to a quarter of the users: per-user join semantics are
     # unchanged (the interval join never crosses users) and the replay
@@ -927,7 +925,7 @@ def stream_scd_join(spark: SparkSession, sf: str) -> DataFrame:
     broadcast per micro-batch; facts never shuffle."""
     import shutil
 
-    stage = tempfile.mkdtemp(prefix="bpspark_scdj_")
+    stage = scratch("scdj")
     src, out, dim_cur = f"{stage}/src", f"{stage}/out", f"{stage}/dim_current"
     ev = table(spark, sf, "events").select("event_id", "ts", "user_id", "event_type")
     cutoff = ev.approxQuantile("event_id", [0.5], 0.0)[0]
@@ -1006,9 +1004,9 @@ def stream_state_introspection(spark: SparkSession, sf: str) -> DataFrame:
     any other scan, and the read is against the checkpoint, never the
     live store."""
     ev = table(spark, sf, "events").select("event_type", "user_id")
-    src = tempfile.mkdtemp(prefix="bpspark_ssintro_src_")
+    src = scratch("ssintro_src")
     ev.coalesce(1).write.mode("overwrite").parquet(src)
-    ckpt = tempfile.mkdtemp(prefix="bpspark_ssintro_ckpt_")
+    ckpt = scratch("ssintro_ckpt")
     with harness_shuffle(spark):
         q = (
             spark.readStream.schema("event_type string, user_id long")
@@ -1068,7 +1066,7 @@ def stream_chained_stateful(spark: SparkSession, sf: str) -> DataFrame:
     hash. Scale: dedup state ∝ rate × watermark (keys expire), window
     state ∝ open windows; both shuffle on their own keys."""
     ev = table(spark, sf, "events").select("event_id", "ts", "user_id")
-    src = tempfile.mkdtemp(prefix="bpspark_chain_src_")
+    src = scratch("chain_src")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     sentinel = spark.createDataFrame(
         [(10_000_000_000, max_ts, -1)],
@@ -1078,7 +1076,7 @@ def stream_chained_stateful(spark: SparkSession, sf: str) -> DataFrame:
     ev.unionByName(ev).unionByName(sentinel).coalesce(1).write.mode(
         "overwrite"
     ).parquet(src)
-    ckpt = tempfile.mkdtemp(prefix="bpspark_chain_ckpt_")
+    ckpt = scratch("chain_ckpt")
     with harness_shuffle(spark):
         stream = (
             spark.readStream.schema("event_id long, ts timestamp, user_id long")
@@ -1157,7 +1155,7 @@ def stream_session_timeout(spark: SparkSession, sf: str) -> DataFrame:
     sentinel = spark.createDataFrame(
         [(-1, max_ts, 10_000_000_000)], "user_id long, ts timestamp, event_id long"
     ).select("user_id", (F.col("ts") + F.expr("INTERVAL 10 HOURS")).alias("ts"), "event_id")
-    stage = tempfile.mkdtemp(prefix="bpspark_sesst_")
+    stage = scratch("sesst")
     src = f"{stage}/src"
     ev.unionByName(sentinel).coalesce(1).write.parquet(src)
 
@@ -1314,7 +1312,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from bpspark.llm_ops import _band_index_probe, _minhash_bands
 
     d = table(spark, sf, "documents").select("doc_id", "text")
-    stage = tempfile.mkdtemp(prefix="bpspark_smhd_")
+    stage = scratch("smhd")
     src = f"{stage}/src"
     idx = f"{stage}/index"
     out = f"{stage}/decisions"
@@ -1406,20 +1404,6 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # data column; listing leaves avoids partition-discovery adding a
     # second one)
     return spark.read.parquet(*sorted(_glob.glob(f"{out}/batch=*"))).orderBy("doc_id")
-
-
-def _materialize_and_clean(spark: SparkSession, df: DataFrame, stage: str) -> DataFrame:
-    """Collect a BOUNDED result (per-cell summaries / top-k rows — the
-    audited bounded-driver-visit class) and then DELETE the op's mkdtemp
-    staging tree, returning a local-relation frame with the identical
-    schema. Without this, every invocation of a staged index op leaves a
-    full index copy in /tmp (the driver sweeps each op twice per round;
-    state_dir GC only covers versioned state dirs, not per-call stages)."""
-    import shutil
-
-    rows, schema = df.collect(), df.schema
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 def _ivf_stream_quantizer(e_train: DataFrame):
@@ -1549,9 +1533,9 @@ def stream_ivf_index_append(spark: SparkSession, sf: str) -> DataFrame:
     happened offline at quantizer training); queries partition-prune
     exactly as sim_ivf_index_persist, reading nprobe/k of the postings.
     Checkpointed file offsets give exactly-once per wave."""
-    stage = tempfile.mkdtemp(prefix="bpspark_sivf_")
+    stage = scratch("sivf")
     summary, _cent, _idx = _stream_ivf_index_build(spark, sf, stage)
-    return _materialize_and_clean(spark, summary, stage)
+    return summary
 
 
 def _ivf_batched_index_build(spark: SparkSession, sf: str, stage: str) -> str:
@@ -1678,11 +1662,9 @@ def stream_bm25_index_append(spark: SparkSession, sf: str) -> DataFrame:
     terms' postings across live segments."""
     from bpspark.search import _bm25_query_segments
 
-    stage = tempfile.mkdtemp(prefix="bpspark_sbm25_")
+    stage = scratch("sbm25")
     segs = _stream_bm25_segments_build(spark, sf, stage)
-    return _materialize_and_clean(
-        spark, _bm25_query_segments(spark, segs, list(_SBM25_QUERY_TERMS)), stage
-    )
+    return _bm25_query_segments(spark, segs, list(_SBM25_QUERY_TERMS))
 
 
 @op("sim_ivf_index_retrain", sql=None)
@@ -1718,7 +1700,7 @@ def sim_ivf_index_retrain(spark: SparkSession, sf: str) -> DataFrame:
 
     from bpspark.llm_ops import _assign_home, _with_norm
 
-    stage = tempfile.mkdtemp(prefix="bpspark_sivfr_")
+    stage = scratch("sivfr")
     idx = _ivf_batched_index_build(spark, sf, stage)
     e = _with_norm(table(spark, sf, "embeddings")).select("vec_id", "embedding", "norm")
     new_cent, _k = _ivf_stream_quantizer(e)
@@ -1745,12 +1727,10 @@ def sim_ivf_index_retrain(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.max("n") / F.avg("n"), 6).alias("imbalance"),
         ).select(F.lit(phase).alias("phase"), "*")
 
-    return _materialize_and_clean(
-        spark,
+    return (
         balance(old, "before")
         .unionAll(balance(spark.read.parquet(new_idx), "after"))
-        .orderBy("phase"),
-        stage,
+        .orderBy("phase")
     )
 
 
@@ -1780,7 +1760,7 @@ def sim_ivf_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     cell-pruned reads open O(cells) files instead of
     O(batches × cells) — after a day of 1-minute micro-batches that is
     1440× fewer footer reads for identical bytes of postings."""
-    stage = tempfile.mkdtemp(prefix="bpspark_sivfc_")
+    stage = scratch("sivfc")
     idx = _ivf_batched_index_build(spark, sf, stage)
     compacted = f"{stage}/compacted"
     _ivf_compact_index(spark, idx, compacted)
@@ -1790,13 +1770,11 @@ def sim_ivf_index_compact(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("cluster_id")
         .agg(F.count_distinct("_f").alias("n_files"))
     )
-    return _materialize_and_clean(
-        spark,
+    return (
         _ivf_index_cell_summary(comp)
         .join(n_files, "cluster_id")
         .select("cluster_id", "n_vecs", "n_files", "vec_hash")
-        .orderBy("cluster_id"),
-        stage,
+        .orderBy("cluster_id")
     )
 
 
@@ -1926,7 +1904,7 @@ def stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     import bpspark
 
     bpspark.ensure_worker_imports(spark)
-    stage = tempfile.mkdtemp(prefix="bpspark_shh_")
+    stage = scratch("shh")
     src, idx, ckpt = f"{stage}/src", f"{stage}/index", f"{stage}/ckpt"
     os.makedirs(src, exist_ok=True)
     d = table(spark, sf, "documents").select("doc_id", "text")
@@ -1979,7 +1957,7 @@ def stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("tok").alias("term"), "cnt")
         .orderBy(F.col("cnt").desc(), "term")
     )
-    return _materialize_and_clean(spark, out, stage)
+    return out
 
 
 from bpspark.llm_ops import _ER_FULL_RECOMPUTE_SQL as _ER_ORACLE
@@ -2017,7 +1995,7 @@ def stream_er_resolve(spark: SparkSession, sf: str) -> DataFrame:
     import glob as _glob
     import shutil
 
-    stage = tempfile.mkdtemp(prefix="bpspark_ser_")
+    stage = scratch("ser")
     src, reg, ckpt = f"{stage}/src", f"{stage}/reg", f"{stage}/ckpt"
     os.makedirs(src, exist_ok=True)
 
@@ -2082,4 +2060,4 @@ def stream_er_resolve(spark: SparkSession, sf: str) -> DataFrame:
     out = _er_entity_output(
         final.select("id", F.col("cluster_id")), final.select("id", "name")
     )
-    return _materialize_and_clean(spark, out, stage)
+    return out

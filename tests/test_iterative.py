@@ -569,3 +569,17 @@ def test_kcore_fixpoint_and_invariants(spark):
             alive -= drop
         want = {n: len(adj[n] & alive) for n in alive if len(adj[n] & alive) > 0}
         assert dict(zip(got["node"], got["core_degree"])) == want, sf
+
+
+def test_graph_ops_leave_no_cache_entry(spark):
+    """Every graph op releases what it caches: the loop-invariant edge
+    frame is unpersisted once the returned frame no longer reads it, so
+    repeated calls do not pile up CacheManager entries (pagerank's edge
+    plan reads a fresh checkpoint each call, so each call used to add
+    one)."""
+    ops = all_ops()
+    names = sorted(n for n in ops if n.startswith("graph_"))
+    spark.catalog.clearCache()
+    for name in names:
+        ops[name].fn(spark, SF).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), names

@@ -516,9 +516,11 @@ def test_mv_refresh_delta_pushdown_no_base_rescan(spark):
     aggregate must carry the pushed cutover predicate (work ∝ delta), and
     the MV state must come from the parquet state table, not a second
     full orders aggregation."""
+    from bpspark.io import state_dir
+
     plan = plan_of(spark, "mv_incremental_refresh")
     assert "GreaterThanOrEqual(o_orderdate,1997-01-01" in plan
-    assert "bpspark_mv_v" in plan  # versioned state parquet feeds the merge join
+    assert state_dir("mv", SF_SMALL) in plan  # state parquet feeds the merge join
     # exactly one orders scan (the delta side)
     assert plan.count("orders.parquet") == 1, plan.count("orders.parquet")
 
@@ -1245,16 +1247,13 @@ def test_state_dir_invalidates_on_data_change(tmp_path):
     assert state_dir("probe", str(sf)) not in (d1, d2)
 
 
-def test_state_dir_content_sample_and_superseded_pruning(tmp_path, monkeypatch):
-    """ADVICE r11 closures: (a) a same-size regeneration whose mtime is
-    pinned back to the original (coarse-granularity filesystems) must
-    STILL invalidate — the fingerprint samples file content, not just
-    stat; (b) cleanup_stale_state(sf_dirs=...) prunes current-version
-    state dirs whose fingerprint was superseded by a data rewrite,
-    while leaving the live-fingerprint dir untouched."""
+def test_state_dir_content_sample(tmp_path):
+    """ADVICE r11 closure: a same-size regeneration whose mtime is pinned
+    back to the original (coarse-granularity filesystems) must STILL
+    invalidate — the fingerprint samples file content, not just stat."""
     import os
 
-    from bpspark.io import cleanup_stale_state, state_dir
+    from bpspark.io import state_dir
 
     sf = tmp_path / "sfY"
     sf.mkdir()
@@ -1268,16 +1267,3 @@ def test_state_dir_content_sample_and_superseded_pruning(tmp_path, monkeypatch):
     os.utime(tbl, ns=(st.st_atime_ns, st.st_mtime_ns))
     d2 = state_dir("probe", str(sf))
     assert d2 != d1, "content change with identical stat() was not detected"
-
-    # superseded-fingerprint pruning: d1 is dead (its data generation is
-    # gone), d2 is live — only d1 may be removed
-    os.makedirs(d1, exist_ok=True)
-    os.makedirs(d2, exist_ok=True)
-    removed = cleanup_stale_state(sf_dirs=[str(sf)])
-    assert d1 in removed and not os.path.exists(d1)
-    assert d2 not in removed and os.path.exists(d2)
-    # without sf_dirs, current-version dirs are never touched
-    os.makedirs(d1, exist_ok=True)
-    assert d1 not in cleanup_stale_state()
-    os.rmdir(d1)
-    os.rmdir(d2)

@@ -34,25 +34,33 @@ def test_python_datasource_partition_parallel(spark):
     assert {r.book_id for r in rows} == set(range(1000))
 
 
-def test_cleanup_stale_state_removes_only_old_versions(tmp_path, monkeypatch):
-    """The state GC must remove dirs from older STATE_VERSIONs only —
-    current-version state and non-bpspark dirs are untouched."""
+def test_scratch_and_state_share_one_process_root(tmp_path):
+    """Every file an op writes lives under ONE per-process ``bpspark_*``
+    directory under ``tempfile.gettempdir()``: per-call scratch dirs are
+    fresh, state dirs are stable, and the exit hook removes a root only in
+    the process that made it (a forked child must not delete it)."""
     import os
-    import tempfile as _tf
+    import tempfile
 
     from bpspark import io as bio
 
-    monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
-    cur = os.path.join(str(tmp_path), f"bpspark_foo_{bio.STATE_VERSION}_sf0.001")
-    old = os.path.join(str(tmp_path), "bpspark_foo_v1_sf0.001")
-    other = os.path.join(str(tmp_path), "unrelated_dir")
-    for d in (cur, old, other):
-        os.makedirs(d)
-    assert bio.cleanup_stale_state(dry_run=True) == [old]
-    assert os.path.isdir(old)  # dry run touches nothing
-    assert bio.cleanup_stale_state() == [old]
-    assert not os.path.exists(old)
-    assert os.path.isdir(cur) and os.path.isdir(other)
+    root = bio._root()
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    assert os.path.basename(root).startswith("bpspark_")
+    a, b = bio.scratch("probe"), bio.scratch("probe")
+    assert a != b and os.path.dirname(a) == os.path.dirname(b) == root
+    sd = bio.state_dir("probe", "/root/testdata/sf0.001")
+    assert os.path.dirname(sd) == root
+    assert bio.state_dir("probe", "/root/testdata/sf0.001") == sd
+    os.rmdir(a)
+    os.rmdir(b)
+
+    other = tmp_path / "root"
+    other.mkdir()
+    bio._remove_root(os.getpid() + 1, str(other))
+    assert other.is_dir()
+    bio._remove_root(os.getpid(), str(other))
+    assert not other.exists()
 
 
 def test_engine_leaves_scratch_placement_alone(spark):

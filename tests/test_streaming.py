@@ -145,13 +145,13 @@ def test_stream_mv_refresh_versions_and_monotone_groups(spark):
     members or appear)."""
     import glob
     import os
-    import tempfile
 
+    from bpspark.io import _root
     from bpspark.registry import all_ops
 
-    before = set(glob.glob(os.path.join(tempfile.gettempdir(), "bpspark_smv_*")))
+    before = set(glob.glob(os.path.join(_root(), "smv_*")))
     all_ops()["stream_mv_refresh"].fn(spark, SF_SMALL).count()
-    new_stage = [d for d in glob.glob(os.path.join(tempfile.gettempdir(), "bpspark_smv_*")) if d not in before]
+    new_stage = [d for d in glob.glob(os.path.join(_root(), "smv_*")) if d not in before]
     assert len(new_stage) == 1
     versions = sorted(
         glob.glob(os.path.join(new_stage[0], "state_v*")),
