@@ -2,12 +2,19 @@
 
 Connected components already powers dedup_cluster_cc (llm_ops); this
 module adds PageRank — the canonical iterative join+agg loop. The pattern
-for ALL DataFrame iteration at scale: cache the loop-invariant edge list
-partitioned on the join key, re-derive a small ranks frame each round
-(one shuffle co-partitioned with edges), and localCheckpoint every few
-rounds to truncate the lineage Catalyst would otherwise re-analyze
-exponentially. Unpersist the edge list once the returned frame no longer
-reads it (its last checkpoint is taken), so no call leaves a cache entry.
+for ALL DataFrame iteration at scale: repartition the loop-invariant edge
+list on the join key and localCheckpoint it (eager, so AQE has sized the
+repartition before the checkpoint is written), re-derive a small ranks
+frame each round, and localCheckpoint every few rounds to truncate the
+lineage Catalyst would otherwise re-analyze exponentially.
+
+The edge list is not cached: a cached plan's partition count is frozen
+at spark.sql.shuffle.partitions (AQE may not coalesce a cached plan's
+output), so every round would run that many tasks per stage however few
+edges there are — 200 in a vanilla session. The checkpoint does not carry the
+hash partitioning forward under AQE (an adaptive plan reports none), so
+each round's join shuffles the edge list again, at the size AQE picks
+for it. A checkpoint leaves no cache entry behind.
 """
 
 from __future__ import annotations
@@ -68,10 +75,10 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     distinct (o_custkey, l_suppkey) pair that co-occurs in an order,
     symmetrized so every node has out-degree and rank mass is conserved:
     Σranks = N at every step, up to the per-round quantization). 5 rounds
-    of contribution join + hash agg; edges are deduped, cached, and
-    hash-partitioned on src once, so each round's join reuses that
-    exchange and only the (node, rank) frame (tiny relative to edges)
-    moves. Oracle-backed (upgraded r6): the fixed 5 rounds unroll into
+    of contribution join + hash agg; the (src, dst, deg) edge frame is
+    built once, repartitioned on src and checkpointed, so each round
+    reads it at the partition count AQE chose (see the module
+    docstring). Oracle-backed (upgraded r6): the fixed 5 rounds unroll into
     chained CTEs; each round's summed mass is quantized with the
     tie-free floor(x·1e6+0.5)/1e6 in both engines, so cross-engine /
     cross-partitioning float summation order (~1e-14) does not
@@ -94,8 +101,8 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         # r13: the symmetrization + degree + weight build below consumes
         # this join+distinct subtree twice — materialize it once (bounded:
         # the distinct trade-pair set, smaller than the ew frame the op
-        # already caches; on a real cluster: checkpoint() or rely on the
-        # ew cache alone)
+        # already checkpoints; on a real cluster: checkpoint() or rely on
+        # the ew checkpoint alone)
         .localCheckpoint()
     )
     # r13: symmetrize via one explode instead of unionAll of two selects —
@@ -110,17 +117,17 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("e")
     ).select("e.*")
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # loop-invariant: (src, dst, deg(src)), hash-partitioned on src once
-    ew = edges.join(out_deg, "src").repartition("src").cache()
+    # loop-invariant: (src, dst, deg(src)), repartitioned on src and
+    # checkpointed once (not cached: see the module docstring)
+    ew = edges.join(out_deg, "src").repartition("src").localCheckpoint()
     ranks = out_deg.select("src", F.lit(1.0).alias("rank")).localCheckpoint()
     for i in range(_ITERATIONS):
         contribs = (
             # shuffle_hash hint (r13): the planner otherwise sort-merges,
-            # re-SORTING the |E|-row cached frame EVERY round; the hash
+            # re-SORTING the |E|-row edge frame EVERY round; the hash
             # join builds from the |nodes|-row ranks side per partition
             # instead — no per-round sort, and unlike a broadcast it stays
-            # safe when |nodes| is huge (guide §3.1). Exchange on ew is
-            # still reused from the cache's src partitioning.
+            # safe when |nodes| is huge (guide §3.1).
             ew.join(ranks.hint("shuffle_hash"), "src")
             .select(
                 F.col("dst").alias("src"),
@@ -143,7 +150,6 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         # (on a real cluster: checkpoint() to durable storage instead)
         if i % 2 == 1 or i == _ITERATIONS - 1:
             ranks = ranks.localCheckpoint()
-    ew.unpersist()  # the checkpointed ranks no longer read it
     return (
         ranks.select(F.col("src").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), "node")
@@ -283,12 +289,12 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-source BFS shortest paths from 3 landmark nodes (the smallest
     supplier keys) over the bounded-degree similarity graph, emitted as a
     per-landmark distance histogram. The distributed-BFS shape: the
-    symmetrized edge list is hash-partitioned on src ONCE and cached
+    symmetrized edge list is repartitioned on src and checkpointed ONCE
     (loop-invariant); each round joins only the FRONTIER (nodes first
     reached last round — monotonically shrinking) against it, and an
     anti-join against the visited set guarantees every node keeps its
-    first (= minimal) distance. 6 bounded rounds ⇒ 6 co-partitioned
-    shuffles total; per-round state is |new nodes|, never |paths| — the
+    first (= minimal) distance. 6 bounded rounds, each one join of the
+    frontier with the edges; per-round state is |new nodes|, never |paths| — the
     oracle's recursive CTE enumerates (landmark, node, dist) rows with
     UNION dedup and MIN-collapses, provably the same map. Landmark count
     and round bound are literals on both sides, keeping the check exact
@@ -298,7 +304,7 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .repartition("src")
-        .cache()
+        .localCheckpoint()
     )
     lm = (
         ed.select(F.col("src").alias("node"))
@@ -318,7 +324,6 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         new = nxt.join(visited, ["landmark", "node"], "left_anti").localCheckpoint()
         visited = visited.unionByName(new).localCheckpoint()
         frontier = new
-    ed.unpersist()
     return visited.groupBy("landmark", "dist").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -376,10 +381,10 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     hash-certifiable. 3 rounds; output is the community size histogram
     (all-integer, exact cross-engine).
 
-    Plan: the symmetrized edge list is hash-partitioned on dst ONCE and
-    cached (loop-invariant); each round shuffles only the (node, label)
-    frame — |nodes| rows, tiny next to edges — through one co-partitioned
-    join + one vote count + one argmax window sharing the node
+    Plan: the symmetrized edge list is repartitioned on dst and
+    checkpointed ONCE (loop-invariant); each round joins it with the
+    (node, label) frame — |nodes| rows, tiny next to edges — then runs
+    one vote count + one argmax window sharing the node
     partitioning. localCheckpoint per round truncates the lineage
     Catalyst would otherwise re-analyze quadratically. At 100 TB this is
     the standard Pregel-on-DataFrames shape (degree ≤ 16 bounds each
@@ -442,19 +447,19 @@ def graph_kcore_decompose(spark: SparkSession, sf: str) -> DataFrame:
     pinned by a test that runs one extra round and asserts nothing
     else peels). Output: each surviving node with its in-core degree.
 
-    Plan: the symmetrized edge list is hash-partitioned and cached
-    once (loop-invariant); each round is two semi-joins of edges
+    Plan: the symmetrized edge list is repartitioned on src and
+    checkpointed once (loop-invariant); each round is two semi-joins of edges
     against the shrinking alive set + one count — alive is |nodes|
     rows, tiny next to edges, and the join fan-out is bounded by the
     knn graph's degree ≤ 16. localCheckpoint per round truncates
     lineage. At 100 TB this is the same Pregel-on-DataFrames shape as
-    LPA/PageRank: constant rounds, edge frame shuffled once."""
+    LPA/PageRank: constant rounds over an edge frame built once."""
     e = _knn_supplier_edges(spark, sf)
     ed = (
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .repartition("src")
-        .cache()
+        .localCheckpoint()
     )
     alive = ed.select(F.col("src").alias("node")).distinct().localCheckpoint()
     deg = None
@@ -463,8 +468,7 @@ def graph_kcore_decompose(spark: SparkSession, sf: str) -> DataFrame:
         alive = (
             deg.filter(F.col("c") >= _KCORE_K).select("node").localCheckpoint()
         )
-    final_deg = _kcore_degrees(ed, alive).localCheckpoint()
-    ed.unpersist()
+    final_deg = _kcore_degrees(ed, alive)
     return (
         final_deg.join(alive, "node")
         .select("node", F.col("c").cast("long").alias("core_degree"))
@@ -489,7 +493,7 @@ def _label_propagation(sym_edges: DataFrame, rounds: int) -> DataFrame:
     reference."""
     from pyspark.sql.window import Window
 
-    ed = sym_edges.repartition("dst").cache()
+    ed = sym_edges.repartition("dst").localCheckpoint()
     labels = (
         ed.select(F.col("src").alias("node"))
         .distinct()
@@ -510,7 +514,6 @@ def _label_propagation(sym_edges: DataFrame, rounds: int) -> DataFrame:
             .select("node", "label")
             .localCheckpoint()
         )
-    ed.unpersist()
     return labels
 
 

@@ -572,14 +572,43 @@ def test_kcore_fixpoint_and_invariants(spark):
 
 
 def test_graph_ops_leave_no_cache_entry(spark):
-    """Every graph op releases what it caches: the loop-invariant edge
-    frame is unpersisted once the returned frame no longer reads it, so
-    repeated calls do not pile up CacheManager entries (pagerank's edge
-    plan reads a fresh checkpoint each call, so each call used to add
-    one)."""
+    """No graph op leaves a CacheManager entry: the loop-invariant edge
+    frames are checkpointed, not cached, so repeated calls cannot pile up
+    entries (pagerank's edge plan reads a fresh checkpoint each call, so
+    when it was cached each call added one)."""
     ops = all_ops()
     names = sorted(n for n in ops if n.startswith("graph_"))
     spark.catalog.clearCache()
     for name in names:
         ops[name].fn(spark, SF).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), names
+
+
+def test_graph_loops_task_ceiling(spark):
+    """Host-independent regression gate on the iterative graph ops'
+    partition counts: at ``spark.sql.shuffle.partitions`` = 200 (the
+    vanilla default) each call runs ≤ 300 Spark tasks, summed from the
+    status tracker over its job group's stages. A loop-invariant edge
+    frame held in the cache keeps all 200 partitions (AQE may not
+    coalesce a cached plan's output), so every round runs 200-task
+    stages on a few hundred edges: 1695–3261 tasks per call."""
+    sc = spark.sparkContext
+    ops = all_ops()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        for name in ("graph_pagerank", "graph_shortest_paths",
+                     "graph_kcore_decompose", "graph_label_propagation"):
+            group = f"task-ceiling-{name}"
+            sc.setJobGroup(group, name)
+            try:
+                ops[name].fn(spark, SF).collect()
+            finally:
+                sc.setJobGroup("", "")
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
+            st = sc.statusTracker()
+            stages = {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
+            tasks = sum(info.numTasks for info in map(st.getStageInfo, stages) if info)
+            assert tasks <= 300, f"{name}: {tasks} Spark tasks > 300"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

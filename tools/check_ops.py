@@ -10,10 +10,12 @@ registration order.
 Each selected op runs on a vanilla ``local[*]`` session from a foreign cwd
 and is compared with its DuckDB oracle by ``tests/oracle_compare.py``. One
 line per (op, sf, pass) gives the status, the Spark rows, the Spark jobs
-the call ran (counted through a job group) and the Spark and oracle
-seconds. Before each SF's ops, an untimed warm-up reads every table once
-and starts the Python workers, so no op's figures carry the first-read
-schema job or the worker start-up:
+and tasks the call ran (counted through a job group) and the Spark and
+oracle seconds (a stage that several jobs list counts its tasks once).
+Before each SF's ops, an untimed warm-up reads every table once, starts
+the Python workers and makes one throwaway op call, so no op's figures
+carry the first-read schema job or the worker start-up, and the first op
+does not carry the session's first code generation and JIT:
 
   PASS     oracle matched on a non-empty result
   ROWS     rows-only op (no oracle) executed
@@ -323,10 +325,10 @@ def changed_ops(rev: str, repo: str = REPO) -> tuple[list[str], str]:
     return names, f"{len(names)} of {len(now)} ops have a closure hash that differs from {rev}"
 
 
-def _run_counting_jobs(spark, op, sf_dir: str):
-    """(pandas output, Spark jobs) for one op call: the call runs under
-    its own job group, whose job ids the status tracker lists once the
-    listener bus has drained."""
+def _run_counting(spark, op, sf_dir: str):
+    """(pandas output, Spark jobs, Spark tasks) for one op call: the call
+    runs under its own job group, whose jobs (and their stages' tasks)
+    the status tracker lists once the listener bus has drained."""
     sc = spark.sparkContext
     group = f"check_ops:{op.name}:{time.monotonic_ns()}"
     sc.setJobGroup(group, op.name)
@@ -335,32 +337,40 @@ def _run_counting_jobs(spark, op, sf_dir: str):
     finally:
         sc.setJobGroup("", "")
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return pdf, len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    tasks = sum(info.numTasks for info in map(st.getStageInfo, stages) if info)
+    return pdf, len(jobs), tasks
 
 
 def _warm_up(spark, sf_dir: str) -> None:
     """Pay the one-time costs before any op is timed: the first read of
     each table resolves its schema in a job of its own (later reads hit
-    io's schema cache), and the first Python UDF starts the workers."""
+    io's schema cache), the first Python UDF starts the workers, and the
+    first op call pays JVM code generation and JIT (one throwaway
+    ``scan_parquet`` call)."""
     from bpspark.io import TABLES, table
+    from bpspark.registry import all_ops
 
     for t in TABLES:
         table(spark, sf_dir, t)
     spark.range(4).mapInPandas(lambda it: it, "id long").collect()
+    all_ops()["scan_parquet"].fn(spark, sf_dir).toPandas()
 
 
-def _check(spark, con, op, sf_dir: str) -> tuple[str, int, int, float, float, list]:
-    """(status, spark rows, spark jobs, spark s, oracle s, problems) for
-    one op run."""
+def _check(spark, con, op, sf_dir: str) -> tuple[str, int, int, int, float, float, list]:
+    """(status, spark rows, spark jobs, spark tasks, spark s, oracle s,
+    problems) for one op run."""
     from oracle_compare import compare_frames
 
     t0 = time.monotonic()
-    pdf, jobs = _run_counting_jobs(spark, op, sf_dir)
+    pdf, jobs, tasks = _run_counting(spark, op, sf_dir)
     if len(pdf.columns):
         pdf.sort_values(by=sorted(pdf.columns), kind="stable")
     t1 = time.monotonic()
     if op.sql is None:
-        return "ROWS", len(pdf), jobs, t1 - t0, 0.0, []
+        return "ROWS", len(pdf), jobs, tasks, t1 - t0, 0.0, []
     odf = con.sql(op.sql).df()
     t2 = time.monotonic()
     probs = compare_frames(pdf, odf, op.name)
@@ -370,7 +380,7 @@ def _check(spark, con, op, sf_dir: str) -> tuple[str, int, int, float, float, li
         status = "VACUOUS"
     else:
         status = "PASS"
-    return status, len(pdf), jobs, t1 - t0, t2 - t1, probs
+    return status, len(pdf), jobs, tasks, t1 - t0, t2 - t1, probs
 
 
 def main() -> None:
@@ -431,8 +441,11 @@ def main() -> None:
             tag = f" #{p}" if passes > 1 else ""
             for name in names:
                 try:
-                    status, rows, jobs, ts, to, probs = _check(spark, con, ops[name], sf_dir)
-                    line = f"{status} (spark {rows}r/{jobs} jobs/{ts:.1f}s, oracle {to:.1f}s)"
+                    status, rows, jobs, tasks, ts, to, probs = _check(spark, con, ops[name], sf_dir)
+                    line = (
+                        f"{status} (spark {rows}r/{jobs} jobs/{tasks} tasks/{ts:.1f}s, "
+                        f"oracle {to:.1f}s)"
+                    )
                     if probs:
                         line += f": {probs}"
                 except Exception as ex:  # noqa: BLE001 — report, keep checking the rest
