@@ -934,60 +934,25 @@ def sim_incremental_topk(spark: SparkSession, sf: str) -> DataFrame:
 @op("sim_cosine_ivf", sql=None)  # approximate — recall vs brute force in tests
 def sim_cosine_ivf(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-style ANN: a FIXED-k (√n, capped at IVF_MAX_K) hash-ordered
-    deterministic centroid sample; every vector is assigned to its nearest
-    centroid (broadcast centroid table); queries probe their IVF_NPROBE
-    nearest clusters. This is the 100 TB shape: the quantizer is O(k·d)
-    regardless of corpus size, the corpus is hash-partitioned by
-    cluster_id, and a query touches nprobe/k of the corpus (8/65536 at the
-    cap) instead of all of it. nprobe=8 is the recall/latency dial at a
-    standard production setting — the synthetic corpus is isotropic (the
-    worst case for any bucketed ANN), where 8 probes of √n clusters hold
-    recall@5 ≥ 0.5; clustered corpora measure far higher
-    (tools/ann_recall.py, docs/SCALE.md)."""
+    deterministic centroid sample, shipped as the literal quantizer
+    (_ivf_centroid_literal with no Lloyd rounds); every vector is assigned
+    map-side to its nearest centroid, and queries probe their IVF_NPROBE
+    nearest clusters (_centroid_ranking). This is the 100 TB shape: the
+    quantizer is O(k·d) regardless of corpus size, the corpus is
+    hash-partitioned by cluster_id, and a query touches nprobe/k of the
+    corpus (8/65536 at the cap) instead of all of it. nprobe=8 is the
+    recall/latency dial at a standard production setting — the synthetic
+    corpus is isotropic (the worst case for any bucketed ANN), where 8
+    probes of √n clusters hold recall@5 ≥ 0.5; clustered corpora measure
+    far higher (docs/SCALE.md)."""
     e = _with_norm(table(spark, sf, "embeddings"))
-    k = _ivf_target_k(e.count())
-    cents = (
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(k)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("norm").alias("c_norm"),
-        )
-    )
-    sim_to_cent = (_dot("embedding", "c_emb") / (F.col("norm") * F.col("c_norm")))
-    ranked = (
-        e.join(F.broadcast(cents))
-        .select("vec_id", "embedding", "norm", "cent_id", sim_to_cent.alias("csim"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-            ),
-        )
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "embedding", "norm", "cent_id")
+    cent_lit, _k = _ivf_centroid_literal(e, train_iters=0)
+    assigned = _ivf_probe_assign(e, IVF_NPROBE, cent_lit)
     # queries search their IVF_NPROBE nearest clusters (recall/latency
     # dial; corpus vectors still live in exactly one cluster)
-    q = ranked.filter((F.col("vec_id") < 10) & (F.col("rn") <= IVF_NPROBE)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        "cent_id",
-    )
-    scored = (
-        assigned.join(F.broadcast(q), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("q_emb", "embedding") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    probes = _probe_queries(assigned.filter(F.col("vec_id") < 10))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        _top5(_ivf_candidates(assigned, F.broadcast(probes)), F.col("cosine").desc())
         .select("query_id", "neighbor_id", F.round("cosine", 8).alias("cosine"))
         .orderBy("query_id", "neighbor_id")
     )
@@ -2022,55 +1987,56 @@ def sim_cosine_lsh(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # nprobe for the corpus×corpus kNN graph. Chosen from the measured
-# recall/candidate-fraction curve (tools/ann_recall.py, recorded in
-# docs/SCALE.md; re-measured after the fixed-k quantizer fix): with
-# k=√n clusters, nprobe=4 reaches recall@5 = 0.94 on a clustered corpus
-# (the realistic shape) while scoring ~10% of all pairs; on the isotropic
-# synthetic corpus (adversarial for any bucketed ANN) recall is ∝ the
-# corpus fraction scanned with a ~3x clustering gain (0.36 at 9%).
+# recall/candidate-fraction curve recorded in docs/SCALE.md (re-measured
+# after the fixed-k quantizer fix): with k=√n clusters, nprobe=4 reaches
+# recall@5 = 0.94 on a clustered corpus (the realistic shape) while
+# scoring ~10% of all pairs; on the isotropic synthetic corpus
+# (adversarial for any bucketed ANN) recall is ∝ the corpus fraction
+# scanned with a ~3x clustering gain (0.36 at 9%).
 IVF_KNN_NPROBE = 4
 
 
+def _typed_literal(value, dtype: str) -> F.Column:
+    """A python value as ONE constant column of SQL type ``dtype``: the
+    from_json of its JSON text, which Catalyst folds to a single literal.
+
+    One leaf node however large the value. A parsed SQL array literal is a
+    node per element, and every analysis of every frame that carries it
+    walks them all: ~1 s of plan analysis per frame op for a 44×64
+    quantizer, against ~0.1 s this way. JSON carries doubles exactly
+    (shortest repr, correctly rounded parse) and NaN/±Infinity, and the
+    type holds for an empty value too, where a bare ``array()`` is
+    array<void>, which no field access resolves against (an empty corpus
+    trains no centroids and collects no queries)."""
+    import json
+
+    return F.from_json(F.lit(json.dumps(value)), dtype)
+
+
 def _centroid_literal_from_rows(cents: list[tuple[int, list[float]]]):
-    """(cent_id, vector) rows → literal array<struct<cent_id,c_emb,c_norm>>.
-
-    ONE parsed expr (r12): the per-struct F.lit/F.struct form cost ~5 py4j
-    calls per centroid — ~0.25 s of driver time per build at k=44, and the
-    Lloyd loop rebuilds the literal every round. Literal types unchanged
-    (bare int ≡ F.lit(int) IntegerType, ``…D`` ≡ F.lit(float) DoubleType),
-    so every certified IVF-ladder plan computes identical values.
-
-    Non-finite guard (ADVICE r12): ``repr(float('nan')) + 'D'`` is
-    unparseable SQL ('nanD'), unlike the old F.lit path — any non-finite
-    component falls back to the literal-object build (identical
-    expression tree, just more py4j calls). Unreachable from finite
-    embeddings (means of finite values are finite) — pure robustness."""
+    """(cent_id, vector) rows → literal array<struct<cent_id,c_emb,c_norm>>:
+    the one quantizer form every IVF, routing and streaming-index op
+    scores against. The norm guard (``or 1.0``) makes a zero centroid
+    score csim 0.0, as in the DuckDB replay."""
     import math
 
-    parts = []
+    rows = []
     for cid, emb in cents:
         fs = [float(x) for x in emb]
-        nrm = math.sqrt(sum(x * x for x in fs)) or 1.0
-        if not all(map(math.isfinite, fs + [nrm])):
-            return F.array(*[
-                F.struct(
-                    F.lit(int(c)).alias("cent_id"),
-                    F.array(*[F.lit(float(x)) for x in e]).alias("c_emb"),
-                    F.lit(
-                        math.sqrt(sum(float(x) * float(x) for x in e)) or 1.0
-                    ).alias("c_norm"),
-                )
-                for c, e in cents
-            ])
-        arr = "array(" + ",".join(f"{x!r}D" for x in fs) + ")"
-        parts.append(
-            f"named_struct('cent_id', {int(cid)}, 'c_emb', {arr}, 'c_norm', {nrm!r}D)"
-        )
-    return F.expr("array(" + ",".join(parts) + ")")
+        rows.append({
+            "cent_id": int(cid),
+            "c_emb": fs,
+            "c_norm": math.sqrt(sum(x * x for x in fs)) or 1.0,
+        })
+    return _typed_literal(rows, "array<struct<cent_id:int,c_emb:array<double>,c_norm:double>>")
 
 
-def _assign_home(e: DataFrame, cent_lit) -> DataFrame:
-    """Map-side nearest-centroid assignment against a literal quantizer."""
+def _centroid_ranking(cent_lit) -> F.Column:
+    """The literal quantizer's centroids ranked for the row's ``embedding``
+    and ``norm``, nearest first: array<struct<csim, cent_id>> by csim
+    DESC, cent_id DESC. The one centroid ranking: [0] is the home cell, a
+    prefix is the probe list, [0].csim − [1].csim the top-2 margin.
+    Map-side; no join, no shuffle."""
     scored = F.transform(
         cent_lit,
         lambda c: F.struct(
@@ -2085,7 +2051,19 @@ def _assign_home(e: DataFrame, cent_lit) -> DataFrame:
             c["cent_id"].alias("cent_id"),
         ),
     )
-    return e.withColumn("home_cent", F.reverse(F.array_sort(scored))[0]["cent_id"])
+    return F.reverse(F.array_sort(scored))
+
+
+def _home_cent(ranked) -> F.Column:
+    """The nearest centroid's id from a _centroid_ranking, typed non-null.
+    A nullable join key makes Catalyst infer isnotnull(home_cent) and push
+    it below the projection, which then ranks every vector twice."""
+    return F.coalesce(ranked[0]["cent_id"], F.lit(-1))
+
+
+def _assign_home(e: DataFrame, cent_lit) -> DataFrame:
+    """Map-side nearest-centroid assignment against a literal quantizer."""
+    return e.withColumn("home_cent", _home_cent(_centroid_ranking(cent_lit)))
 
 
 IVF_TRAIN_ITERS = 2
@@ -2183,49 +2161,76 @@ def _ivf_centroid_literal(
 def _ivf_probe_assign(
     e: DataFrame, nprobe: int, cent_lit=None, portable: bool = False
 ) -> DataFrame:
-    """Per-vector nearest-``nprobe`` centroids, computed entirely map-side
-    against the literal quantizer: vec_id, embedding, norm, home_cent
-    (nearest), probe_cents (array of the nprobe nearest). Pass a prebuilt
-    ``cent_lit`` to reuse one trained quantizer across calls (the recall
-    harness times queries, not training); ``portable`` selects the
+    """Per-vector centroid ranking, map-side against the literal quantizer:
+    vec_id, embedding, norm, home_cent (nearest), probe_cents (the
+    ``nprobe`` nearest) and margin (top-2 csim gap). Pass a prebuilt
+    ``cent_lit`` to reuse one trained quantizer; ``portable`` selects the
     oracle-replicable quantizer training (see _ivf_centroid_literal)."""
     if cent_lit is None:
         cent_lit, _k = _ivf_centroid_literal(e, portable=portable)
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding"),
-                        c["c_emb"],
-                        lambda x, y: x.cast("double") * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("norm") * c["c_norm"])
-            ).alias("csim"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    # descending csim, centroid id as tiebreak → deterministic probe order
-    ordered = F.reverse(F.array_sort(scored))
-    top = F.slice(ordered, 1, nprobe)
+    ranked = _centroid_ranking(cent_lit)
     return e.select(
         "vec_id",
         "embedding",
         "norm",
-        top[0]["cent_id"].alias("home_cent"),
-        F.transform(top, lambda s: s["cent_id"]).alias("probe_cents"),
+        _home_cent(ranked).alias("home_cent"),
+        F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cent_id"]).alias("probe_cents"),
+        # F.get: a one-centroid quantizer gives a NULL margin, not an
+        # out-of-bounds error
+        (ranked[0]["csim"] - F.get(ranked, 1)["csim"]).alias("margin"),
     )
 
 
-def _ivf_knn_graph(
-    e: DataFrame, nprobe: int, k: int = 5, cent_lit=None, portable: bool = False
-) -> DataFrame:
+def _as_queries(df: DataFrame, *extra) -> DataFrame:
+    """A (vec_id, embedding, norm) frame as the query side of a scoring
+    join: (query_id, q_emb, q_norm, *extra)."""
+    return df.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+        *extra,
+    )
+
+
+def _probe_queries(assigned: DataFrame) -> DataFrame:
+    """_ivf_probe_assign rows as queries, one row per probed cell.
+    explode_outer, not explode: Catalyst infers size(probe_cents) > 0
+    under an inner explode and pushes it below the projection, ranking
+    every query twice. The list is never empty, and the cent_id join
+    drops the NULL row an empty one would give."""
+    return _as_queries(assigned, F.explode_outer("probe_cents").alias("cent_id"))
+
+
+def _cosine_pairs(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine) of joined query × vector rows — the
+    sequential-fold cosine of q_emb/q_norm against embedding/norm, the
+    query itself excluded."""
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (_dot("q_emb", "embedding") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
+    )
+
+
+def _ivf_candidates(assigned: DataFrame, probes: DataFrame) -> DataFrame:
+    """Cosine of each probe query against every vector homed in the probed
+    cell: the IVF candidate set, one equi-join on cent_id. Wrap ``probes``
+    in F.broadcast when it is a small query set."""
+    home = assigned.select(F.col("home_cent").alias("cent_id"), "vec_id", "embedding", "norm")
+    return _cosine_pairs(home.join(probes, "cent_id"))
+
+
+def _top5(scored: DataFrame, by) -> DataFrame:
+    """The 5 best rows per query_id ranked by ``by``, ties to the lower
+    neighbor_id (the exact re-rank every ANN op ends with)."""
+    w = Window.partitionBy("query_id").orderBy(by, "neighbor_id")
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+
+
+def _ivf_knn_graph(e: DataFrame) -> DataFrame:
     """Approximate kNN graph over the WHOLE corpus (every vector is a
-    query): IVF-bucketed candidate generation, one shuffle on cent_id.
+    query, probing IVF_KNN_NPROBE cells of the portable quantizer):
+    IVF-bucketed candidate generation, one shuffle on cent_id.
 
     100 TB shape: assignment is map-side (literal quantizer); the corpus
     is hash-partitioned once by home cluster; each vector's probe list
@@ -2234,40 +2239,16 @@ def _ivf_knn_graph(
     are the residual risk, same as LSH buckets: with a trained (k-means)
     quantizer cluster sizes concentrate near n/k; a degenerate corpus
     needs the BUCKET_CAP discipline used by dedup_near_minhash."""
-    assigned = _ivf_probe_assign(e, nprobe, cent_lit=cent_lit, portable=portable)
-    home = assigned.select(
-        F.col("home_cent").alias("cent_id"), "vec_id", "embedding", "norm"
-    )
-    probes = assigned.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        F.explode("probe_cents").alias("cent_id"),
-    )
-    scored = (
-        home.join(probes, "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot("q_emb", "embedding")
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+    assigned = _ivf_probe_assign(e, IVF_KNN_NPROBE, portable=True)
+    return _top5(
+        _ivf_candidates(assigned, _probe_queries(assigned)), F.col("cosine").desc()
+    ).select(
+        "query_id",
+        "neighbor_id",
         # tie-free quantization, not ROUND (r9: the r8 oracle standard —
         # the cosine itself is a bit-identical left fold cross-engine,
         # and floor(x·1e8+0.5)/1e8 is the same float ops in both engines)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.floor(F.col("cosine") * 1e8 + F.lit(0.5)) / 1e8).alias("cosine"),
-        )
+        (F.floor(F.col("cosine") * 1e8 + F.lit(0.5)) / 1e8).alias("cosine"),
     )
 
 
@@ -2452,8 +2433,8 @@ def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
     actually matters for near-dup mining and diversity sampling over a
     training corpus. sim_cosine_topk/sim_cosine_ivf answer a small query
     set; this op answers n queries without an n² plan. Recall vs brute
-    force is measured by sim_ivf_recall_eval and tools/ann_recall.py
-    (curve recorded in docs/SCALE.md).
+    force is measured by sim_ivf_recall_eval (the nprobe curve is
+    recorded in docs/SCALE.md).
 
     Oracle (upgraded r9, rows-only → full replication): the op runs the
     PORTABLE quantizer (md5 seeds, vec_id%3 sample, quantized Lloyd
@@ -2462,8 +2443,7 @@ def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
     (_ivf_knn_oracle_sql). The certified xxhash64 IVF ladder is
     untouched — portable mode is this pair's own path. Vector norms are
     zero-guarded on both engines (ADVICE r9, _with_norm_guarded)."""
-    e = _with_norm_guarded(table(spark, sf, "embeddings"))
-    return _ivf_knn_graph(e, nprobe=IVF_KNN_NPROBE, portable=True)
+    return _ivf_knn_graph(_with_norm_guarded(table(spark, sf, "embeddings")))
 
 
 @op("sim_ivf_recall_eval", sql=_ivf_recall_oracle_sql())
@@ -2480,31 +2460,11 @@ def sim_ivf_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     quality tripwire. Vector norms zero-guarded both engines (ADVICE
     r9, _with_norm_guarded)."""
     e = _with_norm_guarded(table(spark, sf, "embeddings"))
-    approx = _ivf_knn_graph(e, nprobe=IVF_KNN_NPROBE, portable=True).filter(
-        F.col("query_id") % 29 == 0
-    )
-    q = e.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    truth_scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot("q_emb", "embedding")
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    truth = (
-        truth_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+    approx = _ivf_knn_graph(e).filter(F.col("query_id") % 29 == 0)
+    q = _as_queries(e.filter(F.col("vec_id") % 29 == 0))
+    truth = _top5(
+        _cosine_pairs(e.join(F.broadcast(q))), F.col("cosine").desc()
+    ).select("query_id", "neighbor_id")
     hits = truth.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
         truth.agg(
@@ -2517,7 +2477,9 @@ def sim_ivf_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
             "truth_pairs",
             "hit_pairs",
             (
-                F.floor(F.col("hit_pairs") / F.col("truth_pairs") * 1e4 + F.lit(0.5))
+                # try_divide: an empty corpus has no truth pairs (NULL
+                # recall, as DuckDB's x / 0), not a DIVIDE_BY_ZERO error
+                F.floor(F.try_divide("hit_pairs", "truth_pairs") * 1e4 + F.lit(0.5))
                 / 1e4
             ).alias("recall_at_5"),
         )
@@ -5099,11 +5061,7 @@ def sim_ivf_index_persist(spark: SparkSession, sf: str) -> DataFrame:
         )
         # quantizer sidecar: one row per centroid (k x d floats — the part
         # of the index small enough to broadcast to every query site)
-        cents = spark.range(0, 1).select(F.explode(cent_lit).alias("c")).select(
-            F.col("c.cent_id").alias("cent_id"),
-            F.col("c.c_emb").alias("c_emb"),
-            F.col("c.c_norm").alias("c_norm"),
-        )
+        cents = spark.range(1).select(F.inline(cent_lit))  # cent_id, c_emb, c_norm
         cents.coalesce(1).write.mode("overwrite").parquet(quant_path)
         _os.makedirs(f"{idx}/_built", exist_ok=True)
 
@@ -5112,59 +5070,30 @@ def sim_ivf_index_persist(spark: SparkSession, sf: str) -> DataFrame:
 
 def _ivf_index_query(spark: SparkSession, sf: str, query_ids: list, nprobe: int = 2) -> DataFrame:
     """Query path of the persisted IVF index: reads ONLY the on-disk
-    artifact (quantizer sidecar + cluster-partitioned corpus); the probed
-    cluster ids become a partition-pruning predicate (tested with a
-    single query: <= nprobe of the cluster dirs are ever scanned)."""
-    import os as _os
-
+    artifact (quantizer sidecar + cluster-partitioned corpus). The sidecar
+    rows become the literal quantizer, the queries rank it map-side, and
+    the probed cluster ids become a partition-pruning predicate (tested
+    with a single query: <= nprobe of the cluster dirs are ever scanned)."""
     from bpspark.io import state_dir
 
     idx = state_dir("ivfidx", sf)
-    quant_path, corpus_path = f"{idx}/quantizer", f"{idx}/corpus"
-    quant = spark.read.parquet(quant_path)
-    corpus = spark.read.parquet(corpus_path)
+    quant = spark.read.parquet(f"{idx}/quantizer").select("cent_id", "c_emb").collect()
+    cent_lit = _centroid_literal_from_rows(sorted((r["cent_id"], r["c_emb"]) for r in quant))
+    # explicit schema: an empty corpus leaves no data file to infer it from
+    corpus = spark.read.schema(
+        "vec_id long, embedding array<float>, norm double, cluster_id int"
+    ).parquet(f"{idx}/corpus")
     queries = _with_norm(
         table(spark, sf, "embeddings").filter(F.col("vec_id").isin(query_ids))
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
     )
-    # rank clusters per query against the sidecar (tiny broadcast)
-    csim = _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    probe = (
-        queries.join(F.broadcast(quant))
-        .select("query_id", "q_emb", "q_norm", "cent_id", csim.alias("csim"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("csim").desc(), F.col("cent_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= nprobe)
-    )
+    probe = _probe_queries(_ivf_probe_assign(queries, nprobe, cent_lit))
     # the probed cluster ids become a partition-pruning predicate on the
     # corpus table (collected: nprobe x |queries| <= 20 ints)
     probed = sorted({r["cent_id"] for r in probe.select("cent_id").collect()})
     pruned = corpus.filter(F.col("cluster_id").isin(probed))
-    scored = (
-        pruned.join(
-            F.broadcast(probe.select("query_id", "q_emb", "q_norm", "cent_id")),
-            pruned.cluster_id == F.col("cent_id"),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("q_emb", "embedding") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    scored = _cosine_pairs(pruned.join(F.broadcast(probe), pruned.cluster_id == F.col("cent_id")))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        _top5(scored, F.col("cosine").desc())
         .select("query_id", "neighbor_id", F.round("cosine", 8).alias("cosine"))
         .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
     )
@@ -5173,85 +5102,40 @@ def _ivf_index_query(spark: SparkSession, sf: str, query_ids: list, nprobe: int 
 PQ_M, PQ_K = 4, 8  # 4 subspaces x 16 dims, 8 centroids each -> 4x3 bits/vector
 
 
-def _pq_books_literal(books) -> F.Column:
-    """[m][k][sub_d] codebooks as ONE parsed literal: array of per-subspace
-    arrays of centroid arrays (no structs — see the lambda-binding note in
-    _pq_train). Centroid index IS the code."""
-    per_s = []
-    for cents in books:
-        per_s.append(
-            "array(" + ",".join(
-                "array(" + ",".join(f"{v!r}D" for v in c) + ")" for c in cents
-            ) + ")"
-        )
-    return F.expr("array(" + ",".join(per_s) + ")")
-
-
-def _pq_train(spark: SparkSession, e: DataFrame, m: int = PQ_M, k: int = PQ_K):
+def _pq_train(spark: SparkSession, e: DataFrame):
     """Train product-quantization codebooks: split the d-dim space into
-    ``m`` contiguous subspaces and run 2 distributed Lloyd rounds — ALL
-    subspaces per round in ONE job (the corpus explodes to (vec,
-    subspace) rows, assignment is map-side against the combined
-    codebook literal, new means are one groupBy(subspace, code, dim)
+    PQ_M contiguous subspaces and run 2 distributed Lloyd rounds — ALL
+    subspaces per round in ONE job (assignment is _pq_encode_long against
+    the current codebooks, new means are one groupBy(subspace, code, dim)
     aggregate; only m×k×(d/m) doubles reach the driver per round).
-    Means are rounded to 9dp so re-training on the same data yields
-    identical codebooks regardless of partition-sum order. Returns
-    [m][k][d/m] python lists (the shippable codebook: 4×8×16 floats)."""
-    d = len(e.select("embedding").first()["embedding"])
-    sub_d = d // m
-
-    subs = e.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice("embedding", s * sub_d + 1, sub_d).alias("sub"),
-                )
-                for s in range(m)
-            ])
-        ).alias("x"),
-    ).select("vec_id", F.col("x.s").alias("s"), F.col("x.sub").alias("sub"))
-
-    seed_rows = (
-        e.filter(F.col("vec_id") % 61 == 0).orderBy("vec_id").limit(k).collect()
-    )
+    Seeds are the first PQ_K vectors with vec_id % 61 == 0, topped up in
+    vec_id order when fewer exist; a corpus under PQ_K vectors trains one
+    centroid per vector. Means are rounded to 9dp so re-training on the
+    same data yields identical codebooks regardless of partition-sum
+    order. Returns [m][k][d/m] python lists (the shippable codebook:
+    4×8×16 floats)."""
+    seeds = e.orderBy(F.col("vec_id") % 61 != 0, "vec_id").limit(PQ_K).collect()
+    sub_d = len(seeds[0]["embedding"]) // PQ_M if seeds else 0
     books = [
-        [[float(x) for x in r["embedding"][s * sub_d : (s + 1) * sub_d]] for r in seed_rows]
-        for s in range(m)
+        [[float(x) for x in r["embedding"][s * sub_d : (s + 1) * sub_d]] for r in seeds]
+        for s in range(PQ_M)
     ]
-
     for _ in range(2):
-        # NB: never close over a python loop var with a default arg inside
-        # an HOF lambda (``lambda c, s=s``) — PySpark counts parameters to
-        # pick the unary vs binary (element, index) lambda form, so the
-        # defaulted name is silently REBOUND to the array-index column and
-        # every expression using it reads garbage (found the hard way).
-        # Plain distances array + array_position(array_min) keeps the
-        # lambda unary; centroid index == code (literal is in index order).
-        cents_here = F.element_at(_pq_books_literal(books), F.col("s") + 1)
-        darr = F.transform(
-            cents_here,
-            lambda c: F.aggregate(
-                F.zip_with(F.col("sub"), c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-        )
-        assigned = subs.withColumn(
-            "code", (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-        )
         means = (
-            assigned.select("s", "code", F.posexplode("sub"))
-            .groupBy("s", "code", "pos")
+            _pq_encode_long(e, books)
+            .select("subspace", "code", F.posexplode("sub"))
+            .groupBy("subspace", "code", "pos")
             .agg(F.round(F.avg(F.col("col").cast("double")), 9).alias("mu"))
-            .groupBy("s", "code")
+            .groupBy("subspace", "code")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
             .collect()
         )
-        new = {(int(r["s"]), int(r["code"])): [float(x["mu"]) for x in r["pm"]] for r in means}
+        new = {
+            (int(r["subspace"]), int(r["code"])): [float(x["mu"]) for x in r["pm"]]
+            for r in means
+        }
         books = [
-            [new.get((s, i), books[s][i]) for i in range(k)] for s in range(m)
+            [new.get((s, i), c) for i, c in enumerate(cents)] for s, cents in enumerate(books)
         ]
     return books
 
@@ -5277,35 +5161,40 @@ def embedding_pq_encode(spark: SparkSession, sf: str) -> DataFrame:
     MSE ≪ the codebook-mean baseline."""
     e = _embeddings_with_planted_twins(spark, sf).select("vec_id", "embedding")
     books = _pq_train(spark, e)
-    return _pq_encode_long(e, books).orderBy("vec_id", "subspace")
+    return _pq_encode_long(e, books).drop("sub").orderBy("vec_id", "subspace")
 
 
 def _pq_encode_long(e: DataFrame, books) -> DataFrame:
-    """(vec_id, subspace, code, recon_dist) for every vector — the ONE
-    verified encode shape (numpy-parity-tested). Long form on purpose:
-    the subspace index is a COLUMN consumed by element_at, so the
-    transform lambda stays unary — building m sibling transform columns
-    with ``lambda c, s=s`` closures turns them binary (PySpark binds the
-    defaulted name to the array index; see _pq_train) and corrupts every
-    code. Wide consumers pivot this frame instead."""
-    sub_d = len(books[0][0])  # derive from the trained codebooks, never
-    # hardcode: a d != 64 corpus would otherwise zip_with a longer slice
-    # against a shorter centroid, null-padding the distance fold silently
-    lit = _pq_books_literal(books)
+    """(vec_id, subspace, sub, code, recon_dist) for every vector and
+    subspace — the ONE encode path (numpy-parity-tested), shared by
+    training, encoding and both ADC searches. Long form on purpose: the
+    subspace index is a COLUMN consumed by element_at, so the transform
+    lambda stays unary. Never close over a python loop var with a default
+    arg inside an HOF lambda (``lambda c, s=s``): PySpark counts
+    parameters to pick the unary vs binary (element, index) lambda form,
+    so the defaulted name is silently REBOUND to the array-index column
+    and every code reads garbage. Wide consumers pivot (_pq_codes_wide).
+    sub_d comes from the codebooks, never hardcoded: a d != 64 corpus
+    would otherwise zip_with a longer slice against a shorter centroid,
+    null-padding the distance fold silently."""
+    sub_d = len(books[0][0]) if books[0] else 0  # an empty corpus trains none
     subs = e.select(
         "vec_id",
-        F.explode(
+        F.inline(
             F.array(*[
                 F.struct(
-                    F.lit(s).alias("s"),
+                    F.lit(s).alias("subspace"),
                     F.slice("embedding", s * sub_d + 1, sub_d).alias("sub"),
                 )
                 for s in range(PQ_M)
             ])
-        ).alias("x"),
-    ).select("vec_id", F.col("x.s").alias("subspace"), F.col("x.sub").alias("sub"))
+        ),
+    )
+    # codebooks [m][k][sub_d] as one literal: arrays, not structs (the
+    # lambda-binding note above); the centroid index IS the code
+    books_lit = _typed_literal(books, "array<array<array<double>>>")
     darr = F.transform(
-        F.element_at(lit, F.col("subspace") + 1),
+        F.element_at(books_lit, F.col("subspace") + 1),
         lambda c: F.aggregate(
             F.zip_with(F.col("sub"), c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
             F.lit(0.0),
@@ -5315,9 +5204,43 @@ def _pq_encode_long(e: DataFrame, books) -> DataFrame:
     return subs.select(
         "vec_id",
         "subspace",
+        "sub",
         (F.array_position(darr, F.array_min(darr)) - 1).cast("int").alias("code"),
         F.round(F.array_min(darr), 6).alias("recon_dist"),
     )
+
+
+def _pq_codes_wide(e: DataFrame, books) -> DataFrame:
+    """One row per vector with its PQ_M codes (code0, code1, …): the
+    long-form encode pivoted by a conditional agg on vec_id (m values per
+    key, map-side combine)."""
+    return _pq_encode_long(e, books).groupBy("vec_id").agg(*[
+        F.max(F.when(F.col("subspace") == s, F.col("code"))).alias(f"code{s}")
+        for s in range(PQ_M)
+    ])
+
+
+def _adc_table(emb, books) -> list[list[float]]:
+    """One query's ADC table: its exact squared distance to every codebook
+    centroid, [subspace][code], computed in Python from the collected
+    query (m×k doubles per query)."""
+    import math
+
+    qv = [float(x) for x in emb]
+    sub_d = len(books[0][0])
+    return [
+        [math.fsum((qv[s * sub_d + j] - c[j]) ** 2 for j in range(sub_d)) for c in cents]
+        for s, cents in enumerate(books)
+    ]
+
+
+def _adc_dist() -> F.Column:
+    """ADC distance of a codes row against its exploded query ``q``: the
+    query table's entries at the row's codes, summed (6dp)."""
+    return F.round(
+        sum(F.element_at(F.element_at(F.col("q.t"), s + 1), F.col(f"code{s}") + 1) for s in range(PQ_M)),
+        6,
+    ).alias("adc_dist")
 
 
 @op("sim_pq_adc_search", sql=None)  # approximate ANN — recall floor in tests
@@ -5338,66 +5261,25 @@ def sim_pq_adc_search(spark: SparkSession, sf: str) -> DataFrame:
     Tests pin recall of the planted twins (approximate distance must
     still rank the twin at the top) and the top-k's agreement with exact
     brute force."""
-    import math
-
     e = _embeddings_with_planted_twins(spark, sf).select("vec_id", "embedding")
     books = _pq_train(spark, e)
-    sub_d = len(books[0][0])  # from the codebooks — see _pq_encode_long
-    # encode via the ONE verified long-form shape (_pq_encode_long), then
-    # pivot to a row per vector with its m codes — a cheap conditional agg
-    # on vec_id (m=4 values per key, map-side combine)
-    codes = (
-        _pq_encode_long(e, books)
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.max(
-                    F.when(F.col("subspace") == s, F.col("code"))
-                ).alias(f"code{s}")
-                for s in range(PQ_M)
-            ]
-        )
-    )
     # query side: exact distance tables to every centroid, computed on the
     # driver from the collected query vectors (10 queries x m x k doubles)
     # and shipped as ONE literal — every corpus row scores ALL queries in
     # the same map pass, then one window takes the top-5 per query
-    qrows = (
-        table(spark, sf, "embeddings").filter(F.col("vec_id") < 10).collect()
+    qrows = table(spark, sf, "embeddings").filter(F.col("vec_id") < 10).collect()
+    q_lit = _typed_literal(
+        [{"qid": r["vec_id"], "t": _adc_table(r["embedding"], books)} for r in qrows],
+        "array<struct<qid:bigint,t:array<array<double>>>>",
     )
-    q_structs = []
-    for qr in qrows:
-        qv = [float(x) for x in qr["embedding"]]
-        tables = [
-            [
-                math.fsum(
-                    (qv[s * sub_d + j] - books[s][i][j]) ** 2 for j in range(sub_d)
-                )
-                for i in range(PQ_K)
-            ]
-            for s in range(PQ_M)
-        ]
-        tab = "array(" + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in row) + ")" for row in tables
-        ) + ")"
-        q_structs.append(f"struct({qr['vec_id']}L as qid, {tab} as t)")
-    q_lit = F.expr("array(" + ",".join(q_structs) + ")")
-    exploded = codes.select("*", F.explode(q_lit).alias("q")).filter(
-        F.col("vec_id") != F.col("q.qid")
+    scored = (
+        _pq_codes_wide(e, books)
+        .select("*", F.explode(q_lit).alias("q"))
+        .filter(F.col("vec_id") != F.col("q.qid"))
+        .select(F.col("q.qid").alias("query_id"), F.col("vec_id").alias("neighbor_id"), _adc_dist())
     )
-    adc = sum(
-        F.element_at(F.element_at(F.col("q.t"), s + 1), F.col(f"code{s}") + 1)
-        for s in range(PQ_M)
-    )
-    scored = exploded.select(
-        F.col("q.qid").alias("query_id"),
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(adc, 6).alias("adc_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        _top5(scored, "adc_dist")
         .select("query_id", "neighbor_id", "adc_dist")
         .orderBy("query_id", "adc_dist", "neighbor_id")
     )
@@ -5431,65 +5313,35 @@ def sim_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
     e = _with_norm(_embeddings_with_planted_twins(spark, sf).select("vec_id", "embedding"))
     cent_lit, _n_cells = _ivf_centroid_literal(e)
     books = _pq_train(spark, e)
-    assigned = _assign_home(e, cent_lit).select("vec_id", "home_cent")
-    codes = (
-        _pq_encode_long(e, books)
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("subspace") == s, F.col("code"))).alias(f"code{s}")
-                for s in range(PQ_M)
-            ]
-        )
+    index = _pq_codes_wide(e, books).join(
+        _assign_home(e, cent_lit).select("vec_id", "home_cent"), "vec_id"
     )
-    index = codes.join(assigned, "vec_id")
-
     # query side: probe lists from the SAME quantizer (map-side, then a
     # 10-row collect) + exact per-subspace ADC tables from the codebooks
-    import math
-
-    sub_d = len(books[0][0])
-    qrows = _ivf_probe_assign(
-        e.filter(F.col("vec_id") < 10), IVF_NPROBE, cent_lit
-    ).collect()
-    q_structs = []
-    for qr in sorted(qrows, key=lambda r: r["vec_id"]):
-        qv = [float(x) for x in qr["embedding"]]
-        tables = [
-            [
-                math.fsum(
-                    (qv[s * sub_d + j] - books[s][i][j]) ** 2 for j in range(sub_d)
-                )
-                for i in range(PQ_K)
-            ]
-            for s in range(PQ_M)
-        ]
-        tab = "array(" + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in row) + ")" for row in tables
-        ) + ")"
-        probes = "array(" + ",".join(str(int(c)) for c in qr["probe_cents"]) + ")"
-        q_structs.append(
-            f"struct({qr['vec_id']}L as qid, {probes} as probes, {tab} as t)"
-        )
-    q_lit = F.expr("array(" + ",".join(q_structs) + ")")
+    qrows = (
+        _ivf_probe_assign(e.filter(F.col("vec_id") < 10), IVF_NPROBE, cent_lit)
+        .select("vec_id", "embedding", "probe_cents")
+        .collect()
+    )
+    q_lit = _typed_literal(
+        [
+            {"qid": r["vec_id"], "probes": r["probe_cents"], "t": _adc_table(r["embedding"], books)}
+            for r in sorted(qrows, key=lambda r: r["vec_id"])
+        ],
+        "array<struct<qid:bigint,probes:array<int>,t:array<array<double>>>>",
+    )
     cand = index.select("*", F.explode(q_lit).alias("q")).filter(
         F.array_contains(F.col("q.probes"), F.col("home_cent"))
         & (F.col("vec_id") != F.col("q.qid"))
-    )
-    adc = sum(
-        F.element_at(F.element_at(F.col("q.t"), s + 1), F.col(f"code{s}") + 1)
-        for s in range(PQ_M)
     )
     scored = cand.select(
         F.col("q.qid").alias("query_id"),
         F.col("vec_id").alias("neighbor_id"),
         F.col("home_cent").alias("cell"),
-        F.round(adc, 6).alias("adc_dist"),
+        _adc_dist(),
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        _top5(scored, "adc_dist")
         .select("query_id", "neighbor_id", "cell", "adc_dist")
         .orderBy("query_id", "adc_dist", "neighbor_id")
     )
@@ -5678,8 +5530,8 @@ _ADAPTIVE_NPROBE = 4
 # signal is a top-2 CELL-MARGIN, which needs cells coarse enough to have
 # meaningful boundaries, not fine retrieval cells — so the adaptive op caps
 # k at 512 and enters its linear O(n·512·d) regime at n = 512² ≈ 262k
-# (probed: tools/adaptive_route_probe.py, docs/SCALE.md; recall floor
-# re-asserted by test_adaptive_route_beats_pure_ivf). Fewer, larger cells at
+# (measured on synthetic corpora up to 1.2M vectors, docs/SCALE.md; recall
+# floor re-asserted by test_adaptive_route_beats_pure_ivf). Fewer, larger cells at
 # fixed nprobe also probe a LARGER candidate fraction, so IVF-routed recall
 # is equal-or-better than the uncapped form; the cost dial at 100 TB is
 # nprobe/τ, not k.
@@ -5723,75 +5575,26 @@ def sim_adaptive_route(spark: SparkSession, sf: str) -> DataFrame:
     quantizer is capped at _ADAPTIVE_MAX_K=512 cells (vs IVF_MAX_K=65536
     for the retrieval ops) so the per-vector assignment — this op's cost
     center — is O(n·512·d), linear in n beyond 262k vectors (measured:
-    docs/SCALE.md adaptive-route probe)."""
-    return _adaptive_route_frame(spark, _with_norm(table(spark, sf, "embeddings")))
-
-
-def _adaptive_route_frame(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """Core of sim_adaptive_route over a prepared (vec_id, embedding, norm)
-    frame — factored out so tools/adaptive_route_probe.py can drive the
-    identical plan with a synthetic multi-million-vector corpus (the sf test
-    dirs stop at ~80k vectors, below the n = 262k point where the capped
-    quantizer saturates and the linear regime begins)."""
+    docs/SCALE.md, adaptive-route saturation)."""
+    e = _with_norm(table(spark, sf, "embeddings"))
     cent_lit, _k = _ivf_centroid_literal(e, k=_adaptive_route_k(e.count()))
-    scored_cents = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (
-                F.aggregate(
-                    F.zip_with(F.col("embedding"), c["c_emb"], lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("norm") * c["c_norm"])
-            ).alias("csim"),
-            c["cent_id"].alias("cent_id"),
-        ),
+    assigned = _ivf_probe_assign(e, _ADAPTIVE_NPROBE, cent_lit)
+    queries = assigned.filter(F.col("vec_id") < 25).withColumn(
+        "route", F.when(F.col("margin") < _ADAPTIVE_MARGIN, "exact").otherwise("ivf")
     )
-    ordered = F.reverse(F.array_sort(scored_cents))
-    queries = (
-        e.filter(F.col("vec_id") < 25)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            (ordered[0]["csim"] - ordered[1]["csim"]).alias("margin"),
-            F.slice(F.transform(ordered, lambda s: s["cent_id"]), 1, _ADAPTIVE_NPROBE).alias(
-                "probe_cents"
-            ),
-        )
-        .withColumn("route", F.when(F.col("margin") < _ADAPTIVE_MARGIN, "exact").otherwise("ivf"))
+    ivf_scored = _ivf_candidates(
+        assigned, F.broadcast(_probe_queries(queries.filter(F.col("route") == "ivf")))
     )
-    corpus = _assign_home(e, cent_lit).select(
-        "vec_id", "embedding", "norm", F.col("home_cent").alias("cent_id")
+    exact_scored = _cosine_pairs(
+        e.join(F.broadcast(_as_queries(queries.filter(F.col("route") == "exact"))))
     )
-    cos = _dot("q_emb", "embedding") / (F.col("q_norm") * F.col("norm"))
-    ivf_scored = (
-        corpus.join(
-            F.broadcast(
-                queries.filter(F.col("route") == "ivf").select(
-                    "query_id", "q_emb", "q_norm", F.explode("probe_cents").alias("cent_id")
-                )
-            ),
-            "cent_id",
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"),
-                F.lit("ivf").alias("route"))
-    )
-    exact_scored = (
-        e.join(
-            F.broadcast(queries.filter(F.col("route") == "exact").select("query_id", "q_emb", "q_norm")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"),
-                F.lit("exact").alias("route"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     return (
-        ivf_scored.unionByName(exact_scored)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        _top5(
+            ivf_scored.withColumn("route", F.lit("ivf")).unionByName(
+                exact_scored.withColumn("route", F.lit("exact"))
+            ),
+            F.col("cosine").desc(),
+        )
         .select("query_id", "neighbor_id", F.round("cosine", 8).alias("cosine"), "route")
         .orderBy("query_id", "neighbor_id")
     )

@@ -290,7 +290,7 @@ def _semdedup_oracle_sql() -> str:
     the PORTABLE IVF quantizer funnel (_ivf_portable_cte_sql over the
     twinned corpus — md5 seeds, vec_id%3 sample, floor-quantized Lloyd
     means; rn=1 of ``pa`` is the home cluster, the same comparator as
-    _assign_home's reverse(array_sort)), within-cluster pairwise cosine
+    llm_ops._centroid_ranking), within-cluster pairwise cosine
     as list_sum folds over identical doubles (the TOPK_SQL pattern) with
     the cap filter, and min-label connected components as the recursive
     reach CTE (the split_leakage_safe / dedup_cluster_canonicalize

@@ -1416,6 +1416,15 @@ def _ivf_stream_quantizer(e_train: DataFrame):
     return _ivf_centroid_literal(e_train)
 
 
+def _ivf_postings(spark: SparkSession, path: str) -> DataFrame:
+    """The (vec_id, cluster_id) postings under ``path`` — per batch
+    (batch={i}/cluster_id={c}, ``batch`` then reads as a column too) or
+    compacted (cluster_id={c}). The explicit schema reads an empty
+    corpus's index, partition dirs with no data file, as 0 rows instead
+    of failing schema inference."""
+    return spark.read.schema("vec_id long, cluster_id int").parquet(path)
+
+
 def _ivf_index_cell_summary(assigned: DataFrame) -> DataFrame:
     """Per-cell scalar summary of an IVF postings table — (cluster_id,
     n_vecs, vec_hash) with vec_hash a sha2 over the canonically sorted
@@ -1491,13 +1500,7 @@ def _stream_ivf_index_build(spark: SparkSession, sf: str, stage: str):
         )
         q.awaitTermination()
 
-    # basePath makes batch= AND cluster_id= both parse as partition
-    # columns under one root (explicit leaf dirs alone trip Spark's
-    # conflicting-directory-structures check)
-    assigned = spark.read.option("basePath", idx).parquet(
-        *sorted(_glob.glob(f"{idx}/batch=*"))
-    )
-    return _ivf_index_cell_summary(assigned), cent_lit, idx
+    return _ivf_index_cell_summary(_ivf_postings(spark, idx)), cent_lit, idx
 
 
 @op("stream_ivf_index_append", sql=None)
@@ -1569,13 +1572,9 @@ def _ivf_compact_index(spark: SparkSession, idx: str, compacted: str) -> None:
     O(cells) files instead of O(batches × cells) — the streaming append's
     small-files debt, paid down offline (FAISS merge / Lucene compaction
     for the ANN index)."""
-    import glob as _glob
-
-    assigned = spark.read.option("basePath", idx).parquet(
-        *sorted(_glob.glob(f"{idx}/batch=*"))
-    )
     (
-        assigned.select("vec_id", "cluster_id")
+        _ivf_postings(spark, idx)
+        .select("vec_id", "cluster_id")
         .repartition("cluster_id")
         .write.mode("overwrite")
         .partitionBy("cluster_id")
@@ -1696,17 +1695,13 @@ def sim_ivf_index_retrain(spark: SparkSession, sf: str) -> DataFrame:
     probe), map-side assignment O(n·k·d), one cell-partitioned write —
     a full-corpus pass by design, scheduled like quantizer training
     itself; the online append path never pays it."""
-    import glob as _glob
-
     from bpspark.llm_ops import _assign_home, _with_norm
 
     stage = scratch("sivfr")
     idx = _ivf_batched_index_build(spark, sf, stage)
     e = _with_norm(table(spark, sf, "embeddings")).select("vec_id", "embedding", "norm")
     new_cent, _k = _ivf_stream_quantizer(e)
-    old = spark.read.option("basePath", idx).parquet(
-        *sorted(_glob.glob(f"{idx}/batch=*"))
-    ).select("vec_id", "cluster_id")
+    old = _ivf_postings(spark, idx).select("vec_id", "cluster_id")
     rebucketed = _assign_home(old.select("vec_id").join(e, "vec_id"), new_cent).select(
         "vec_id", F.col("home_cent").alias("cluster_id")
     )
@@ -1725,11 +1720,13 @@ def sim_ivf_index_retrain(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("n").alias("n_vecs"),
             F.max("n").alias("max_cell"),
             F.round(F.max("n") / F.avg("n"), 6).alias("imbalance"),
-        ).select(F.lit(phase).alias("phase"), "*")
+        ).select(F.lit(phase).alias("phase"), "*").filter(
+            F.col("n_cells") > 0  # an index with no cells has no balance row
+        )
 
     return (
         balance(old, "before")
-        .unionAll(balance(spark.read.parquet(new_idx), "after"))
+        .unionAll(balance(_ivf_postings(spark, new_idx), "after"))
         .orderBy("phase")
     )
 
@@ -1764,7 +1761,7 @@ def sim_ivf_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     idx = _ivf_batched_index_build(spark, sf, stage)
     compacted = f"{stage}/compacted"
     _ivf_compact_index(spark, idx, compacted)
-    comp = spark.read.parquet(compacted)
+    comp = _ivf_postings(spark, compacted)
     n_files = (
         comp.select("cluster_id", F.input_file_name().alias("_f"))
         .groupBy("cluster_id")

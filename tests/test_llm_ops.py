@@ -2263,3 +2263,76 @@ def test_hist_tree_ops_job_ceilings(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         assert jobs <= ceiling, f"{name}: {jobs} Spark jobs > {ceiling}"
+
+
+IVF_FAMILY = (
+    "sim_cosine_ivf",
+    "sim_knn_graph_ivf",
+    "sim_ivf_recall_eval",
+    "sim_ivf_index_persist",
+    "embedding_pq_encode",
+    "sim_pq_adc_search",
+    "sim_ivfpq_search",
+    "sim_adaptive_route",
+    "stream_ivf_index_append",
+    "sim_ivf_index_retrain",
+    "sim_ivf_index_compact",
+    "dedup_semdedup",
+)
+
+
+def _sf_copy_with_embeddings(dst, rows: int) -> str:
+    """A dataset dir that links every table of SF_SMALL except
+    ``embeddings``, which keeps only its first ``rows`` rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from bpspark.io import TABLES
+
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(f"{SF_SMALL}/{t}.parquet", dst / f"{t}.parquet")
+    emb = pq.read_table(f"{SF_SMALL}/embeddings.parquet")
+    pq.write_table(emb.slice(0, rows), dst / "embeddings.parquet")
+    return str(dst)
+
+
+def test_ivf_family_on_empty_corpus(spark, tmp_path):
+    """An empty embeddings table trains an empty quantizer and no PQ
+    codebook; that literal must still be typed, so every IVF, PQ,
+    routing and streaming-index op plans and returns 0 rows — and the
+    oracle-backed ones match DuckDB (sim_ivf_recall_eval's one row reads
+    0 queries, 0 pairs and a NULL recall on both engines)."""
+    from tests.conftest import duck_con
+    from tests.oracle_compare import compare_frames
+
+    sf = _sf_copy_with_embeddings(tmp_path, 0)
+    con = duck_con(sf)
+    for name in IVF_FAMILY:
+        o = OPS[name]
+        got = o.fn(spark, sf).toPandas()
+        if o.sql is None:
+            assert len(got) == 0, (name, got)
+            continue
+        problems = compare_frames(got, con.sql(o.sql).df(), name)
+        assert not problems, "\n".join(problems)
+        assert len(got) == (1 if name == "sim_ivf_recall_eval" else 0), (name, got)
+    con.close()
+
+
+def test_pq_ops_on_corpus_short_of_seeds(spark, tmp_path):
+    """100 vectors hold only 2 with vec_id % 61 == 0, fewer than PQ_K
+    codebook seeds: training tops the seeds up in vec_id order, so all
+    three PQ ops return rows, every code lies in [0, PQ_K), and a second
+    call reproduces the first."""
+    from bpspark import llm_ops
+
+    sf = _sf_copy_with_embeddings(tmp_path, 100)
+    for name in ("embedding_pq_encode", "sim_pq_adc_search", "sim_ivfpq_search"):
+        a = OPS[name].fn(spark, sf).toPandas()
+        b = OPS[name].fn(spark, sf).toPandas()
+        assert len(a) > 0, name
+        assert a.equals(b), name
+        if "code" in a.columns:
+            assert a.code.between(0, llm_ops.PQ_K - 1).all(), name

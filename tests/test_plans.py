@@ -1267,3 +1267,20 @@ def test_state_dir_content_sample(tmp_path):
     os.utime(tbl, ns=(st.st_atime_ns, st.st_mtime_ns))
     d2 = state_dir("probe", str(sf))
     assert d2 != d1, "content change with identical stat() was not detected"
+
+
+@pytest.mark.parametrize("name", ["sim_cosine_ivf", "sim_ivf_index_persist"])
+def test_ivf_centroid_assignment_is_a_projection(spark, name):
+    """Centroid assignment and query probing rank the literal quantizer
+    inside a projection: no nested-loop join against a centroid table and
+    no Window that ranks centroids (partitioned by vec_id or ordered by
+    csim) anywhere in the plan."""
+    import re
+
+    plan = plan_of(spark, name)
+    assert "BroadcastNestedLoopJoin" not in plan
+    windows = re.findall(r"\(\d+\) Window\s*\n(?:Input[^\n]*\n)?Arguments: ([^\n]*)", plan)
+    assert windows, "the top-5 re-rank window is missing from the plan"
+    for args in windows:
+        assert "csim" not in args, args
+        assert not re.search(r"\], \[vec_id#", args), args

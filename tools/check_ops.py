@@ -26,8 +26,11 @@ does not carry the session's first code generation and JIT:
 Every output, rows-only included, also gets a pandas multi-column sort:
 list/dict cells make its factorize step throw, which breaks any consumer
 that canonicalizes rows. ``--double`` runs every op twice in one session,
-so state or conf leaks show on the second pass. Exit 1 on any FAIL,
-VACUOUS or ERROR.
+so state or conf leaks show on the second pass. Per-op seconds are
+comparable across commits only from that second pass: each op compiles
+its own plans on its first call in a session (``graph_pagerank`` read
+8.8 s on the first pass and 5.1 s on the second at sf0.01), which the
+warm-up cannot absorb. Exit 1 on any FAIL, VACUOUS or ERROR.
 
 The closure hash (``op_source_hash(op_closure_source(fn), sql)``) covers
 the op body, its oracle SQL and the transitive package-wide helper
