@@ -150,6 +150,9 @@ def generate(target_dir: str) -> str:
 
 
 def default_dir() -> str:
-    """Shared fixture dir for registered rows-only ops."""
-    d = os.environ.get("BPSPARK_FIXTURE_DIR", "/tmp/bpspark_fixtures")
-    return generate(d)
+    """Shared fixture dir for registered rows-only ops: the deployment path
+    ``BPSPARK_FIXTURE_DIR`` when set, else ``fixtures`` under the process's
+    scratch root (generated once per process, removed with the root)."""
+    from bpspark.io import _root
+
+    return generate(os.environ.get("BPSPARK_FIXTURE_DIR") or os.path.join(_root(), "fixtures"))

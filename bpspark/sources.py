@@ -472,20 +472,11 @@ def stream_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
         pass
     stage = scratch("pyfeed")
     sink, ckpt = f"{stage}/sink", f"{stage}/ckpt"
-    from bpspark.streaming import harness_shuffle
+    from bpspark.streaming import drain
 
-    with harness_shuffle(spark):
-        for _ in range(2):  # second run must RESUME from the committed offset
-            q = (
-                spark.readStream.format("bpspark_bookfeed")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    for _ in range(2):  # second run must RESUME from the committed offset
+        feed = spark.readStream.format("bpspark_bookfeed").load()
+        drain(feed.writeStream.format("parquet").option("path", sink), ckpt)
     return spark.read.parquet(sink)
 
 
@@ -772,7 +763,6 @@ def sink_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
     import glob as _glob
     import json as _json
     import os as _os
-    import shutil as _shutil
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -781,6 +771,7 @@ def sink_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     from bpspark.io import table
+    from bpspark.streaming import drain, stage_waves
 
     class _StreamShardCommit(WriterCommitMessage):
         def __init__(self, shard: str, n: int) -> None:
@@ -839,31 +830,16 @@ def sink_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
 
     stage = scratch("pyds_ssink")
     src, out, ckpt = f"{stage}/src", f"{stage}/out", f"{stage}/ckpt"
-    _os.makedirs(src)
     _os.makedirs(out)
     cust = table(spark, sf, "customer").select("c_custkey", "c_acctbal")
-    waves = [cust.filter(F.col("c_custkey") % 2 == 0), cust.filter(F.col("c_custkey") % 2 == 1)]
-    for i, w in enumerate(waves):
-        tmp = f"{stage}/w{i}_tmp"
-        w.coalesce(1).write.parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        _shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
+    stage_waves(src, *(cust.filter(F.col("c_custkey") % 2 == i) for i in range(2)))
     stream = (
         spark.readStream.schema("c_custkey bigint, c_acctbal double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .repartition(2)
     )
-    q = (
-        stream.writeStream.format("bpspark_jsonl_stream_sink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.format("bpspark_jsonl_stream_sink").option("path", out), ckpt)
 
     manifests = sorted(_glob.glob(f"{out}/_MANIFEST-*.json"))
     if len(manifests) != 2:

@@ -16,6 +16,18 @@ Two op families:
   stream-static join, the drop-folder source): run as real streaming
   queries into a memory sink → rows-only checks.
 
+Replay harness — the one contract every op here and in ``sources.py``
+that runs a real streaming query follows:
+- input arrives through :func:`stage_waves`: one parquet file per wave,
+  in arrival order (fixed, strictly increasing mtimes, so
+  ``maxFilesPerTrigger=1`` delivers one wave per micro-batch);
+- the query runs through :func:`drain`: AvailableNow trigger on a
+  checkpoint the op owns (fresh, or its own from an earlier run), 8 state
+  partitions, started and awaited in one call;
+- memory sinks (:func:`run_to_memory`) are for tests and the op registry
+  only; a deployment writes a table sink with the same checkpoint
+  semantics under a ProcessingTime trigger.
+
 Scale: windowed aggs shuffle on (window, key) with partial aggregation;
 watermarks bound state size — without them a 100 TB stream's state grows
 forever. Session windows use Spark's native session_window operator
@@ -24,12 +36,14 @@ forever. Session windows use Spark's native session_window operator
 
 from __future__ import annotations
 
-import contextlib
+import glob
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from bpspark.io import scratch, state_dir, table
 from bpspark.registry import op
@@ -37,27 +51,47 @@ from bpspark.sources import ZIP_GLOB, with_zip_keys
 from bpspark.search import _bm25_oracle as _search_mod_bm25_oracle
 
 
-@contextlib.contextmanager
-def harness_shuffle(spark: SparkSession, n: int = 8):
-    """Clamp ``spark.sql.shuffle.partitions`` for the duration of a replay
-    harness's streaming query, restoring the caller's value afterwards.
+def drain(writer: DataStreamWriter, ckpt: str) -> StreamingQuery:
+    """Run a built stream writer (sink + output mode set) to completion:
+    AvailableNow from checkpoint ``ckpt``, started and awaited here.
 
-    A streaming query's STATE STORE count is fixed at first start from the
-    session's shuffle-partition setting, and every micro-batch (including
-    no-data watermark batches) pays per-partition state-store open/commit
-    I/O — on the driver's vanilla session (200 partitions) that overhead
-    is ~6× the useful work at harness scale (measured: the outer interval
-    join replay runs 26.8 s at 32 partitions, 8.7 s at 4). Harness queries
-    always start from a FRESH checkpoint, so the clamp never conflicts
+    ``spark.sql.shuffle.partitions`` is clamped to 8 for the run and the
+    caller's value restored afterwards, also when the query fails. A
+    streaming query's STATE STORE count is fixed at first start from that
+    setting, and every micro-batch (including no-data watermark batches)
+    pays per-partition state-store open/commit I/O — on the driver's
+    vanilla session (200 partitions) that overhead is ~6× the useful work
+    at harness scale (measured: the outer interval join replay runs 26.8 s
+    at 32 partitions, 8.7 s at 4). Harness queries always start from a
+    FRESH checkpoint or resume their own, so the clamp never conflicts
     with restored state. Production deployments size this to the cluster
     instead (state partitions ≈ executor cores × small factor)."""
+    spark = writer._spark
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, "8")
     try:
-        yield
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
+    return q
+
+
+def stage_waves(src: str, *waves: DataFrame) -> None:
+    """Stage each frame as exactly one parquet file ``src/wave{i}.parquet``,
+    numbered on from the files already in ``src``. File ``i`` gets the
+    fixed mtime 1_700_000_000 + i seconds, strictly increasing, so a
+    ``maxFilesPerTrigger=1`` stream delivers the waves in index order."""
+    os.makedirs(src, exist_ok=True)
+    for i, w in enumerate(waves, start=len(os.listdir(src))):
+        tmp = f"{scratch('wave')}/w"
+        w.coalesce(1).write.parquet(tmp)
+        (part,) = glob.glob(f"{tmp}/*.parquet")
+        dst = f"{src}/wave{i}.parquet"
+        shutil.move(part, dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
 
 BINFILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
@@ -79,8 +113,6 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
 
     d = state_dir("events_src", sf)
     if not os.path.exists(f"{d}/events.parquet"):
-        import shutil
-
         os.makedirs(d, exist_ok=True)
         shutil.copy(f"{sf}/events.parquet", f"{d}/.events.parquet.tmp")
         os.replace(f"{d}/.events.parquet.tmp", f"{d}/events.parquet")
@@ -90,21 +122,12 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataFrame:
-    """Execute a streaming plan to completion (AvailableNow) into a memory
-    sink; return the sink as a DataFrame. Test/driver harness only — real
-    deployments write to a table sink with the same checkpoint semantics."""
+    """:func:`drain` a streaming plan into a memory sink; return the sink
+    as a DataFrame. Test/driver harness only — real deployments write to
+    a table sink with the same checkpoint semantics."""
     name = f"bpspark_mem_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch("ckpt")
-    with harness_shuffle(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    drain(writer, scratch("ckpt"))
     return stream_df.sparkSession.table(name)
 
 
@@ -245,13 +268,8 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
     upgrade: 499/4986 emitted rows both engines).
 
     Returns one summary row so the invariant is self-evident."""
-    import glob as _glob
-    import shutil
-
     stage = scratch("wm")
-    src = f"{stage}/src"
-    os.makedirs(src)
-    ckpt = f"{stage}/ckpt"
+    src, ckpt = f"{stage}/src", f"{stage}/ckpt"
     ev = table(spark, sf, "events")
     on_time = ev.filter(F.col("event_id") % 2 == 0)
     late = ev.filter(F.col("event_id") % 2 == 1).withColumn(
@@ -279,25 +297,12 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.col("w.start").alias("window_start"), "n_events")
         )
-        with harness_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(sink).outputMode("append"), ckpt)
 
-    def add_file(df: DataFrame, name: str) -> None:
-        tmp = f"{stage}/{name}_tmp"
-        df.coalesce(1).write.parquet(tmp)
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], f"{src}/{name}.parquet")
-
-    add_file(on_time, "b1")
+    stage_waves(src, on_time)
     run_once()
     rows_after_b1 = totals["rows"]
-    add_file(late, "b2")
+    stage_waves(src, late)
     run_once()
     rows_after_b2 = totals["rows"]
     return spark.createDataFrame(
@@ -306,28 +311,30 @@ def stream_watermark_late(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _two_delivery_stage(tag: str) -> str:
+    """Stage the two-delivery ZIP fixture under a fresh ``scratch(tag)``:
+    drop dirs ``a`` and ``b`` both deliver ISBN …001 and ``a`` also …002,
+    copied in that order. Returns the ``{stage}/*`` glob to stream."""
+    from bpspark.fixtures import default_dir
+
+    fx, stage = default_dir(), scratch(tag)
+    for sub, isbn in (("a", "9780000000001"), ("b", "9780000000001"), ("a", "9780000000002")):
+        os.makedirs(f"{stage}/{sub}", exist_ok=True)
+        shutil.copy(f"{fx}/drop/{isbn}.zip", f"{stage}/{sub}/{isbn}.zip")
+    return f"{stage}/*"
+
+
 @op("stream_dedup_state", sql=None)
 def stream_dedup_state(spark: SparkSession, sf: str) -> DataFrame:
     """R8-R10 streaming form: exactly-once per ISBN across micro-batches via
     watermarked dropDuplicates (state-store backed). Two drop dirs deliver
     the same ISBN twice; one row survives."""
-    from bpspark.fixtures import default_dir
-
-    fx = default_dir()
-    stage = scratch("dedup")
-    import shutil
-
-    for sub in ("a", "b"):
-        os.makedirs(f"{stage}/{sub}")
-        shutil.copy(f"{fx}/drop/9780000000001.zip", f"{stage}/{sub}/9780000000001.zip")
-    shutil.copy(f"{fx}/drop/9780000000002.zip", f"{stage}/a/9780000000002.zip")
-
     stream = (
         spark.readStream.format("binaryFile")
         .schema(BINFILE_SCHEMA)
         .option("pathGlobFilter", ZIP_GLOB)
         .option("maxFilesPerTrigger", 1)
-        .load(f"{stage}/*")
+        .load(_two_delivery_stage("dedup"))
         .transform(with_zip_keys)
         .withWatermark("modificationTime", "1 hour")
         .dropDuplicates(["isbn"])
@@ -387,13 +394,10 @@ def stream_stateful_counter(spark: SparkSession, sf: str) -> DataFrame:
     stream_mv_refresh. The pre-r5 float-state form rounded a
     pandas-summation-ordered double into the state each batch, which
     could never be hash-certified."""
-    import shutil
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stage = scratch("state")
-    src = f"{stage}/src"
-    os.makedirs(src)
-    ckpt = f"{stage}/ckpt"
+    src, ckpt = f"{stage}/src", f"{stage}/ckpt"
     ev = table(spark, sf, "events").select("user_id", "event_id", "value")
     half1 = ev.filter(F.col("event_id") % 2 == 0)
     half2 = ev.filter(F.col("event_id") % 2 == 1)
@@ -440,26 +444,11 @@ def stream_stateful_counter(spark: SparkSession, sf: str) -> DataFrame:
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
         )
-        with harness_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(sink).outputMode("update"), ckpt)
 
-    import glob as _glob
-
-    def add_file(df: DataFrame, name: str) -> None:
-        tmp = f"{stage}/{name}_tmp"
-        df.coalesce(1).write.parquet(tmp)
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], f"{src}/{name}.parquet")
-
-    add_file(half1, "b1")
+    stage_waves(src, half1)
     run_once()
-    add_file(half2, "b2")
+    stage_waves(src, half2)
     run_once()
     from pyspark.sql.window import Window as _W
 
@@ -495,8 +484,6 @@ def stream_ingest_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
-    import shutil
-
     from bpspark.fixtures import default_dir
     from bpspark.pipeline import Ledgers, commit_batch, ingest_from_arrivals
 
@@ -541,14 +528,7 @@ def _stream_ingest_run(spark: SparkSession, stage: str) -> DataFrame:
             .option("recursiveFileLookup", "true")
             .load(drop)
         )
-        with harness_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(process_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(process_batch), ckpt)
 
     run_once()
     for n in names[5:]:
@@ -646,23 +626,12 @@ def stream_dedup_within_watermark(spark: SparkSession, sf: str) -> DataFrame:
     whole game: state size is bounded by (rate × watermark), not by
     history. Same two-delivery fixture as stream_dedup_state; one row
     per ISBN survives."""
-    from bpspark.fixtures import default_dir
-
-    fx = default_dir()
-    stage = scratch("dedup_wm")
-    import shutil
-
-    for sub in ("a", "b"):
-        os.makedirs(f"{stage}/{sub}")
-        shutil.copy(f"{fx}/drop/9780000000001.zip", f"{stage}/{sub}/9780000000001.zip")
-    shutil.copy(f"{fx}/drop/9780000000002.zip", f"{stage}/a/9780000000002.zip")
-
     stream = (
         spark.readStream.format("binaryFile")
         .schema(BINFILE_SCHEMA)
         .option("pathGlobFilter", ZIP_GLOB)
         .option("maxFilesPerTrigger", 1)
-        .load(f"{stage}/*")
+        .load(_two_delivery_stage("dedup_wm"))
         .transform(with_zip_keys)
         .withWatermark("modificationTime", "1 hour")
         .dropDuplicatesWithinWatermark(["isbn"])
@@ -738,17 +707,12 @@ def stream_mv_refresh(spark: SparkSession, sf: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(nxt)
         state["cur"], state["n"] = nxt, state["n"] + 1
 
-    with harness_shuffle(spark):
-        q = (
-            spark.readStream.schema("user_id long, event_type string, v decimal(18,2)")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{stage}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = (
+        spark.readStream.schema("user_id long, event_type string, v decimal(18,2)")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(merge_batch), f"{stage}/ckpt")
     if state["cur"] is None:
         # survives python -O (r11 review: bare asserts are stripped)
         raise RuntimeError("SCD merge stream produced no snapshot")
@@ -852,8 +816,7 @@ def stream_outer_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     symmetric hash join state is bounded by rate × (watermark + interval)
     on both sides — the only outer-join form that survives an unbounded
     stream."""
-    stage = scratch("ssoj")
-    src = f"{stage}/src"
+    src = scratch("ssoj")
     # harness subsets to a quarter of the users: per-user join semantics are
     # unchanged (the interval join never crosses users) and the replay
     # costs 4x less state/probe work per micro-batch — the sweep runs this
@@ -882,7 +845,7 @@ def stream_outer_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     # across micro-batches, real events in later batches would arrive
     # behind the sentinel-advanced watermark and be dropped as late input
     # (observed: 7/5000 rows lost at sf0.01 with a multi-file stage).
-    ev.unionByName(sentinel).coalesce(1).write.parquet(src)
+    stage_waves(src, ev.unionByName(sentinel))
     schema = "event_id long, ts timestamp, user_id long"
 
     def side(parity: int, prefix: str) -> DataFrame:
@@ -923,22 +886,11 @@ def stream_scd_join(spark: SparkSession, sf: str) -> DataFrame:
     (pinned by tests/test_streaming.py). Rows-only: output depends on
     batch boundaries by design. Scale: the dim re-read is one small
     broadcast per micro-batch; facts never shuffle."""
-    import shutil
-
     stage = scratch("scdj")
     src, out, dim_cur = f"{stage}/src", f"{stage}/out", f"{stage}/dim_current"
     ev = table(spark, sf, "events").select("event_id", "ts", "user_id", "event_type")
     cutoff = ev.approxQuantile("event_id", [0.5], 0.0)[0]
-    os.makedirs(src)
-    for i, wave in enumerate(
-        (ev.filter(F.col("event_id") <= cutoff), ev.filter(F.col("event_id") > cutoff))
-    ):
-        wdir = f"{stage}/w{i}"
-        wave.coalesce(1).write.parquet(wdir)
-        part = next(p for p in os.listdir(wdir) if p.endswith(".parquet"))
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(f"{wdir}/{part}", dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+    stage_waves(src, ev.filter(F.col("event_id") <= cutoff), ev.filter(F.col("event_id") > cutoff))
 
     types = ev.select("event_type").distinct()
 
@@ -959,17 +911,12 @@ def stream_scd_join(spark: SparkSession, sf: str) -> DataFrame:
         )
         write_dim("v2")  # the dim update lands between batches
 
-    with harness_shuffle(spark):
-        q = (
-            spark.readStream.schema("event_id long, ts timestamp, user_id long, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", f"{stage}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = (
+        spark.readStream.schema("event_id long, ts timestamp, user_id long, event_type string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    drain(stream.writeStream.foreachBatch(handle), f"{stage}/ckpt")
     return spark.read.parquet(out).select(
         "event_id", "event_type", "dim_label", "batch_id"
     )
@@ -1003,24 +950,17 @@ def stream_state_introspection(spark: SparkSession, sf: str) -> DataFrame:
     per state partition — reading 100 TB of job state parallelizes like
     any other scan, and the read is against the checkpoint, never the
     live store."""
-    ev = table(spark, sf, "events").select("event_type", "user_id")
     src = scratch("ssintro_src")
-    ev.coalesce(1).write.mode("overwrite").parquet(src)
+    stage_waves(src, table(spark, sf, "events").select("event_type", "user_id"))
     ckpt = scratch("ssintro_ckpt")
-    with harness_shuffle(spark):
-        q = (
-            spark.readStream.schema("event_type string, user_id long")
-            .parquet(src)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("user_id").alias("s"))
-            .writeStream.format("memory")
-            .queryName(f"bpspark_ssintro_{uuid.uuid4().hex[:8]}")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = (
+        spark.readStream.schema("event_type string, user_id long")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("user_id").alias("s"))
+    )
+    # the state store under ``ckpt`` is the output; the sink is discarded
+    drain(stream.writeStream.format("noop").outputMode("complete"), ckpt)
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     if not meta or meta[0]["operatorName"] != "stateStoreSave":
         # survives python -O (r11 review: bare asserts are stripped)
@@ -1073,32 +1013,18 @@ def stream_chained_stateful(spark: SparkSession, sf: str) -> DataFrame:
         "event_id long, ts timestamp, user_id long",
     ).select("event_id", (F.col("ts") + F.expr("INTERVAL 10 HOURS")).alias("ts"), "user_id")
     # one file so no real event arrives behind the sentinel-advanced watermark
-    ev.unionByName(ev).unionByName(sentinel).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    ckpt = scratch("chain_ckpt")
-    with harness_shuffle(spark):
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp, user_id long")
-            .parquet(src)
-            .withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .filter(F.col("user_id") != -1)
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        name = f"bpspark_chain_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("window_start")
+    stage_waves(src, ev.unionByName(ev).unionByName(sentinel))
+    stream = (
+        spark.readStream.schema("event_id long, ts timestamp, user_id long")
+        .parquet(src)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .filter(F.col("user_id") != -1)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    return run_to_memory(stream).orderBy("window_start")
 
 
 @op(
@@ -1155,9 +1081,8 @@ def stream_session_timeout(spark: SparkSession, sf: str) -> DataFrame:
     sentinel = spark.createDataFrame(
         [(-1, max_ts, 10_000_000_000)], "user_id long, ts timestamp, event_id long"
     ).select("user_id", (F.col("ts") + F.expr("INTERVAL 10 HOURS")).alias("ts"), "event_id")
-    stage = scratch("sesst")
-    src = f"{stage}/src"
-    ev.unionByName(sentinel).coalesce(1).write.parquet(src)
+    src = scratch("sesst")
+    stage_waves(src, ev.unionByName(sentinel))
 
     GAP_US = 30 * 60 * 1_000_000
 
@@ -1306,9 +1231,6 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     In-batch (same-wave) near-dups are the batch LSH op's job
     (minhash_candidate_pairs) before the index append; this op verifies
     the cross-batch state path."""
-    import glob as _glob
-    import shutil
-
     from bpspark.llm_ops import _band_index_probe, _minhash_bands
 
     d = table(spark, sf, "documents").select("doc_id", "text")
@@ -1317,7 +1239,6 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     idx = f"{stage}/index"
     out = f"{stage}/decisions"
     ckpt = f"{stage}/ckpt"
-    os.makedirs(src)
 
     def twins(lo: int, n: int = 10) -> DataFrame:
         """Near-duplicate twins of docs [lo, lo+n): shifted ids + one
@@ -1330,17 +1251,12 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    waves = [
+    stage_waves(
+        src,
         d.filter(F.col("doc_id") < 200),
         d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 400)).unionByName(twins(0)),
         d.filter(F.col("doc_id") >= 400).unionByName(twins(200)),
-    ]
-    for i, w in enumerate(waves):
-        tmp = f"{stage}/w{i}_tmp"
-        w.coalesce(1).write.parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))  # strict arrival order
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # IDEMPOTENT BY BATCH ID: both sinks write to a batch={id}
@@ -1356,7 +1272,7 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
             # index = all PRIOR batches' committed subdirs (never this
             # batch's own, even on replay)
             prior = [
-                d for d in _glob.glob(f"{idx}/batch=*")
+                d for d in glob.glob(f"{idx}/batch=*")
                 if int(d.rsplit("=", 1)[1]) < batch_id
             ]
             if prior:
@@ -1392,18 +1308,11 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with harness_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(process), ckpt)
     # read the committed batch subdirs explicitly (batch_id is already a
     # data column; listing leaves avoids partition-discovery adding a
     # second one)
-    return spark.read.parquet(*sorted(_glob.glob(f"{out}/batch=*"))).orderBy("doc_id")
+    return spark.read.parquet(*sorted(glob.glob(f"{out}/batch=*"))).orderBy("doc_id")
 
 
 def _ivf_stream_quantizer(e_train: DataFrame):
@@ -1455,24 +1364,13 @@ def _stream_ivf_index_build(spark: SparkSession, sf: str, stage: str):
     quantizer trains on wave-0 only and is FROZEN before the stream
     starts — batches 1-2 are assigned against centroids their vectors
     never influenced, which is the production contract under test."""
-    import glob as _glob
-    import shutil
-
     from bpspark.llm_ops import _assign_home, _with_norm
 
     e = _with_norm(table(spark, sf, "embeddings")).select("vec_id", "embedding", "norm")
     src, idx, ckpt = f"{stage}/src", f"{stage}/index", f"{stage}/ckpt"
-    os.makedirs(src, exist_ok=True)
-
     waves = [e.filter(F.pmod("vec_id", F.lit(3)) == i) for i in range(3)]
     cent_lit, _k = _ivf_stream_quantizer(waves[0])
-
-    for i, w in enumerate(waves):
-        tmp = f"{stage}/w{i}_tmp"
-        w.coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))  # strict arrival order
+    stage_waves(src, *waves)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # Map-side assignment against the frozen broadcast-literal
@@ -1491,15 +1389,7 @@ def _stream_ivf_index_build(spark: SparkSession, sf: str, stage: str):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with harness_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    drain(stream.writeStream.foreachBatch(process), ckpt)
     return _ivf_index_cell_summary(_ivf_postings(spark, idx)), cent_lit, idx
 
 
@@ -1592,21 +1482,11 @@ def _stream_bm25_segments_build(spark: SparkSession, sf: str, stage: str) -> lis
     source; each foreachBatch flushes one immutable segment
     (seg={batch_id}, idempotent overwrite on replay). Returns the sorted
     segment dirs."""
-    import glob as _glob
-    import shutil
-
     from bpspark.search import _bm25_build_segment
 
     src, idx, ckpt = f"{stage}/src", f"{stage}/index", f"{stage}/ckpt"
-    os.makedirs(src, exist_ok=True)
     d = table(spark, sf, "documents").select("doc_id", "text")
-    waves = [d.filter(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)]
-    for i, w in enumerate(waves):
-        tmp = f"{stage}/w{i}_tmp"
-        w.coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    stage_waves(src, *(d.filter(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _bm25_build_segment(batch_df, f"{idx}/seg={batch_id}")
@@ -1616,15 +1496,8 @@ def _stream_bm25_segments_build(spark: SparkSession, sf: str, stage: str) -> lis
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with harness_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sorted(_glob.glob(f"{idx}/seg=*"))
+    drain(stream.writeStream.foreachBatch(process), ckpt)
+    return sorted(glob.glob(f"{idx}/seg=*"))
 
 
 @op("stream_bm25_index_append", sql=_search_mod_bm25_oracle(_SBM25_QUERY_TERMS))
@@ -1895,24 +1768,13 @@ def stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     count addition (search_bm25_segment_merge's contract)."""
     from bpspark.analytics import _HH_K, _mg_partition
 
-    import glob as _glob
-    import shutil
-
     import bpspark
 
     bpspark.ensure_worker_imports(spark)
     stage = scratch("shh")
     src, idx, ckpt = f"{stage}/src", f"{stage}/index", f"{stage}/ckpt"
-    os.makedirs(src, exist_ok=True)
     d = table(spark, sf, "documents").select("doc_id", "text")
-    for i in range(3):
-        tmp = f"{stage}/w{i}_tmp"
-        d.filter(F.pmod("doc_id", F.lit(3)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    stage_waves(src, *(d.filter(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         tok = batch_df.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
@@ -1933,17 +1795,9 @@ def stream_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with harness_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    segs = spark.read.parquet(*sorted(_glob.glob(f"{idx}/seg=*")))
-    cands = spark.read.parquet(*sorted(_glob.glob(f"{idx}/cand=*"))).distinct()
+    drain(stream.writeStream.foreachBatch(process), ckpt)
+    segs = spark.read.parquet(*sorted(glob.glob(f"{idx}/seg=*")))
+    cands = spark.read.parquet(*sorted(glob.glob(f"{idx}/cand=*"))).distinct()
     n = segs.agg(F.sum("cnt").alias("c"))
     out = (
         segs.join(F.broadcast(cands), segs.tok == cands.term, "left_semi")
@@ -1989,12 +1843,8 @@ def stream_er_resolve(spark: SparkSession, sf: str) -> DataFrame:
     the entities wave 2 created). Per-batch cost at 100 TB: touched
     blocks only; the registry is (id, attrs, cluster) rows — read one
     version, write one version, never re-pair history."""
-    import glob as _glob
-    import shutil
-
     stage = scratch("ser")
     src, reg, ckpt = f"{stage}/src", f"{stage}/reg", f"{stage}/ckpt"
-    os.makedirs(src, exist_ok=True)
 
     s = table(spark, sf, "supplier").select(
         F.col("s_suppkey").alias("id"),
@@ -2003,14 +1853,7 @@ def stream_er_resolve(spark: SparkSession, sf: str) -> DataFrame:
         F.col("s_acctbal").alias("bal"),
     )
     base_with_v1, v2 = _er_variant_corpus(s)
-    v1 = base_with_v1.filter(F.col("id") >= 1_000_000)
-    waves = [s, v1, v2]
-    for i, w in enumerate(waves):
-        tmp = f"{stage}/w{i}_tmp"
-        w.coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(_glob.glob(f"{tmp}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    stage_waves(src, s, base_with_v1.filter(F.col("id") >= 1_000_000), v2)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         prev = f"{reg}/v{batch_id - 1}"
@@ -2043,16 +1886,8 @@ def stream_er_resolve(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with harness_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    last = sorted(_glob.glob(f"{reg}/v*"), key=lambda p: int(p.rsplit("v", 1)[1]))[-1]
+    drain(stream.writeStream.foreachBatch(process), ckpt)
+    last = sorted(glob.glob(f"{reg}/v*"), key=lambda p: int(p.rsplit("v", 1)[1]))[-1]
     final = spark.read.parquet(last)
     out = _er_entity_output(
         final.select("id", F.col("cluster_id")), final.select("id", "name")

@@ -405,3 +405,19 @@ def test_commit_batch_replay_after_crash_writes_each_row_once(
             got = _sorted_rows(spark, f"{out}/{table}")
             assert got == _sorted_rows(spark, f"{clean}/{table}"), table
             assert len(got) == len(set(got)), table
+
+
+def test_fixture_default_dir_lies_under_scratch_root(monkeypatch, tmp_path):
+    """Unset ``BPSPARK_FIXTURE_DIR``, the shared fixture set is generated
+    under the process's scratch root, so a run leaves nothing behind in
+    the temp dir; the variable still overrides it."""
+    import os
+
+    from bpspark.io import _root
+
+    monkeypatch.delenv("BPSPARK_FIXTURE_DIR", raising=False)
+    d = fixtures.default_dir()
+    assert os.path.commonpath([d, _root()]) == _root()
+    assert os.path.isdir(os.path.join(d, "drop"))
+    monkeypatch.setenv("BPSPARK_FIXTURE_DIR", str(tmp_path))
+    assert fixtures.default_dir() == str(tmp_path)

@@ -403,3 +403,110 @@ def test_stream_er_equals_batch_and_incremental(spark):
     }
     assert frames["stream_er_resolve"].equals(frames["er_resolve_entities"])
     assert frames["stream_er_resolve"].equals(frames["er_incremental_resolve"])
+
+
+# ---------------------------------------------------------------------------
+# the replay harness: drain (one runner) and stage_waves (one stager)
+# ---------------------------------------------------------------------------
+
+
+def test_drain_failure_restores_conf_and_leaves_no_active_query(spark, tmp_path):
+    """A foreachBatch that raises surfaces as StreamingQueryException from
+    drain; the caller's shuffle-partition value is back and no query is
+    left running."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from bpspark.streaming import drain, stage_waves
+
+    src = str(tmp_path / "src")
+    stage_waves(src, spark.range(3))
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("sink failed")
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        writer = spark.readStream.schema("id long").parquet(src).writeStream.foreachBatch(boom)
+        with pytest.raises(StreamingQueryException):
+            drain(writer, str(tmp_path / "ckpt"))
+        assert spark.conf.get(key) == "3"
+        assert spark.streams.active == []
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stage_waves_one_file_per_wave_in_arrival_order(spark, tmp_path):
+    """Two stage_waves calls on one dir give wave0 then wave1, each one
+    parquet file (even from a multi-partition frame), with strictly
+    increasing mtimes; a maxFilesPerTrigger=1 stream sees one batch per
+    wave, in order."""
+    import os
+
+    from bpspark.streaming import drain, stage_waves
+
+    src = str(tmp_path / "src")
+    stage_waves(src, spark.range(0, 5).repartition(3))
+    stage_waves(src, spark.range(5, 8))
+    assert sorted(os.listdir(src)) == ["wave0.parquet", "wave1.parquet"]
+    assert all(os.path.isfile(f"{src}/wave{i}.parquet") for i in range(2))
+    m0, m1 = (os.stat(f"{src}/wave{i}.parquet").st_mtime_ns for i in range(2))
+    assert m0 < m1
+
+    seen = []
+
+    def collect(batch_df, batch_id):
+        seen.append((batch_id, sorted(r.id for r in batch_df.collect())))
+
+    stream = spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+    drain(stream.writeStream.foreachBatch(collect), str(tmp_path / "ckpt"))
+    assert seen == [(0, [0, 1, 2, 3, 4]), (1, [5, 6, 7])]
+
+
+HARNESS_MICRO_BATCHES = {
+    # one data batch, then one no-data batch whose watermark advance
+    # evicts state / fires timers
+    "stream_outer_interval_join": 2,
+    "stream_chained_stateful": 2,
+    "stream_session_timeout": 2,
+}
+
+
+def test_harness_micro_batch_counts(spark):
+    """Each replay runs the fixed number of micro-batches its staging
+    implies, counted as progress events by a StreamingQueryListener."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from bpspark.registry import all_ops
+
+    progress = []
+
+    class Count(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(event.progress.batchId)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    listener = Count()
+    spark.streams.addListener(listener)
+    try:
+        counts = {}
+        for name in HARNESS_MICRO_BATCHES:
+            bus.waitUntilEmpty(30_000)
+            progress.clear()
+            all_ops()[name].fn(spark, SF_SMALL).collect()
+            bus.waitUntilEmpty(30_000)
+            counts[name] = len(progress)
+    finally:
+        spark.streams.removeListener(listener)
+    assert counts == HARNESS_MICRO_BATCHES
