@@ -17,7 +17,7 @@ Scale stance (the whole point of these ops at 100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -244,54 +244,102 @@ def _minhash_bands(docs: DataFrame) -> DataFrame:
     )
 
 
+def band_pairs(
+    rows: DataFrame, key: Sequence[str], *, carry: Sequence[str] = (),
+    cap: int | None = None, slices: int = 1, probe: DataFrame | None = None,
+) -> DataFrame:
+    """The pairs of rows that share a bucket key: the one pair emitter
+    under every LSH and cluster self-join (minhash, simhash, the Hamming
+    LSH of the image/audio/video ops, SemDeDup's cluster self-join).
+
+    ``rows`` are ``(doc_id, *key, *carry)``. The result is the DISTINCT
+    canonical pairs ``(doc_a, doc_b, <carry>_a…, <carry>_b…)`` with
+    doc_a < doc_b, each carry column renamed with the side's suffix.
+    Callers build their own keys and run their own verify step on the
+    carried columns.
+
+    - ``cap``: exact buckets of more than ``cap`` rows are dropped before
+      any pair is formed, counted by ONE ``count().over(partitionBy(key))``
+      whose exchange an unsliced self-join reuses. A bucket past the cap is
+      boilerplate-level duplication (the exact-dedup path's job) or an
+      under-provisioned quantizer; callers audit it with a plain count
+      aggregate (minhash_bucket_overflow). A two-level count aggregate
+      plus broadcast anti-join drops hot rows map-side instead, but
+      costs three more jobs per call: minhash on sf0.001 with its planted
+      twins (4-core host, warm calls) took 7 jobs and 1.8–3.0 s that way
+      against the window's 4 jobs and 1.3–2.1 s, same 64 pairs.
+    - ``slices = k`` splits every bucket triangularly (guide §2.5; a salt
+      cannot split a join's hot key, slicing both sides can): one side
+      carries ``pmod(xxhash64(doc_id), k)`` and is replicated k ways on
+      the other side's slice id, so each pair meets exactly once, at
+      (key, slice(a), slice(b)), and a hot bucket's B² work spreads over
+      k² tasks. Replication costs k× of the band rows, nothing of the
+      corpus. ``slices = 1`` is the plain self-join.
+    - ``probe``: a frame of probe keys in the same ``(doc_id, *key,
+      *carry)`` shape, matched against the capped exact rows with
+      doc ≠ doc and then canonicalized (the 1-bit multi-probe of the
+      Hamming LSH: a pair whose band differs by one bit reaches the
+      other doc's small exact bucket).
+
+    The pair-key repartition runs BEFORE the distinct: hash(doc_a, doc_b)
+    satisfies the distinct's clustering, so the distinct adds no exchange
+    and runs at the session's parallelism instead of being coalesced by
+    AQE onto one or two tasks (simhash: 1.4 M candidate rows at sf0.1).
+    Pinned against a brute-force self-join and one-bit-flip join for
+    several slice counts and caps by a property test in
+    tests/test_llm_ops.py."""
+    key, carry = list(key), list(carry)
+    if cap is not None:
+        rows = rows.withColumn(
+            "bucket_rows", F.count(F.lit(1)).over(Window.partitionBy(*key))
+        ).filter(F.col("bucket_rows") <= cap)
+
+    def side(df: DataFrame, s: str, other: str) -> DataFrame:
+        df = df.select(
+            F.col("doc_id").alias(f"doc_{s}"), *key,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+        if slices == 1:
+            return df
+        return df.withColumn(
+            f"slice_{s}", F.pmod(F.xxhash64(f"doc_{s}"), F.lit(slices))
+        ).withColumn(f"slice_{other}", F.explode(F.sequence(F.lit(0), F.lit(slices - 1))))
+
+    a = side(rows if probe is None else probe, "a", "b")
+    on = key + ([] if slices == 1 else ["slice_a", "slice_b"])
+    a_first = F.col("doc_a") < F.col("doc_b")
+    b = side(rows, "b", "a")
+    if probe is None and slices == 1:
+        # both sides come out of the cap window already partitioned and
+        # sorted on the key: a merge join adds no exchange, where AQE's
+        # broadcast of the small side costs one more job per call
+        b = b.hint("merge")
+    pairs = a.join(b, on).filter(
+        a_first if probe is None else F.col("doc_a") != F.col("doc_b")
+    )
+
+    def canonical(c: str, s: str, other: str) -> F.Column:
+        own, swapped = F.col(f"{c}_{s}"), F.col(f"{c}_{other}")
+        return F.when(a_first, own).otherwise(swapped).alias(f"{c}_{s}")
+
+    return (
+        pairs.select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+            *[canonical(c, "a", "b") for c in carry],
+            *[canonical(c, "b", "a") for c in carry],
+        )
+        .repartition(rows.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b")
+        .distinct()
+    )
+
+
 def minhash_candidate_pairs(docs: DataFrame) -> DataFrame:
-    """MinHash-LSH banding candidate pairs, emitted *within buckets only* —
-    no all-pairs comparison ever materializes, and bucket fan-out is hard-
-    capped at BUCKET_CAP (see inline note)."""
-    bands = _minhash_bands(docs)
-    # One aggregation per (band, bucket), then pair combinations emitted from
-    # each bucket's member list — the signature is computed exactly once (a
-    # self-join would re-derive the whole minhash plan for both sides), and
-    # the only shuffle key is (band, bucket). Buckets are tiny by design for
-    # genuinely-near-dup content, but a degenerate corpus (boilerplate docs
-    # sharing one signature) can produce a hot bucket whose pair expansion is
-    # O(B²) and whose collect_list is unbounded. Guard: count bucket sizes
-    # with a window over the SAME (band,bucket) partitioning (no extra
-    # shuffle — the groupBy below reuses it) and drop oversized buckets
-    # BEFORE any member list materializes. Overflowed buckets are an audit
-    # signal (see minhash_bucket_overflow): a >CAP bucket means the docs are
-    # boilerplate-identical and belong to the *exact*-dedup path, not
-    # pairwise near-dup scoring.
-    # (r13 MEASURED AND REVERTED: a two-level count aggregate + broadcast
-    # anti-join — the quality.py de-skew shape — drops a degenerate hot
-    # bucket's rows map-side instead of sorting them into one task, but
-    # needs the bands frame materialized to avoid a double signature
-    # evaluation, and that eager checkpoint costs a fixed job per
-    # invocation: the graded dedup_near_minhash 8-rep floor regressed
-    # 0.73 → 1.06 s. The window's skew exposure here is bounded to
-    # corpora that are overwhelmingly exact-duplicate — which belong to
-    # the exact-dedup path anyway — so the r12 form stays.)
-    wb = Window.partitionBy("band", "bucket")
-    kept = (
-        bands.withColumn("bsz", F.count(F.lit(1)).over(wb))
-        .filter((F.col("bsz") <= BUCKET_CAP) & (F.col("bsz") > 1))
-        .drop("bsz")
-    )
-    buckets = (
-        kept.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> transform("
-                "slice(ids, i + 2, size(ids)), "
-                "y -> named_struct('doc_a', x, 'doc_b', y))))"
-            )
-        ).alias("p")
-    )
-    return pairs.select(F.col("p.doc_a"), F.col("p.doc_b")).distinct()
+    """MinHash-LSH banding candidate pairs (doc_a, doc_b), emitted within
+    (band, bucket) buckets only by band_pairs — no all-pairs comparison
+    ever materializes — with buckets of more than BUCKET_CAP docs dropped
+    (audited by minhash_bucket_overflow)."""
+    return band_pairs(_minhash_bands(docs), ["band", "bucket"], cap=BUCKET_CAP)
 
 
 def minhash_bucket_overflow(docs: DataFrame) -> DataFrame:
@@ -570,56 +618,15 @@ def _simhash_oracle_sql() -> str:
     """
 
 
-def _tri_band_pairs(bands: DataFrame, n_parts: int, k: int = 8) -> DataFrame:
-    """Unique co-(band, chunk) ordered pairs (doc_a < doc_b, hamming ≤ 7)
-    from a (doc_id, sig_hi, sig_lo, band, chunk) frame, via the triangular
-    skew decomposition (guide §2.5): both sides sliced by the deterministic
-    pmod(xxhash64(doc_id), k) and replicated k ways on the other side's
-    slice id, so each pair meets exactly once — at (band, chunk, slice(a),
-    slice(b)) — and one hot bucket's B² expansion spreads over k² tasks
-    instead of one. The pair-key repartition BEFORE the distinct satisfies
-    the distinct's clustering (hash(doc_a, doc_b) ⊆ (doc_a, doc_b, hamming)),
-    so the distinct adds no exchange and cannot be AQE-coalesced onto 1-2
-    tasks. Identical pair set to the plain (band, chunk) self-join — pinned
-    by tests/test_llm_ops.py::test_tri_band_pairs_equals_plain_self_join."""
-    la = bands.selectExpr("*", f"pmod(xxhash64(doc_id), {k}) as sa").selectExpr(
-        "*", f"explode(sequence(0, {k - 1})) as sb"
-    )
-    rb = bands.selectExpr("*", f"pmod(xxhash64(doc_id), {k}) as sb").selectExpr(
-        "*", f"explode(sequence(0, {k - 1})) as sa"
-    )
-    a, b = la.alias("a"), rb.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.sa") == F.col("b.sa"))
-            & (F.col("a.sb") == F.col("b.sb"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
-                + F.bit_count(F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi")))
-            ).cast("long").alias("hamming"),
-        )
-        .repartition(n_parts, "doc_a", "doc_b")
-        .distinct()
-        .filter(F.col("hamming") <= 7)
-    )
-
-
 @op("dedup_simhash", sql=_simhash_oracle_sql())
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash near-dup: 64-bit md5-majority-vote signature per doc,
     computed ENTIRELY JVM-side as two 32-bit halves (sig_hi, sig_lo — see
     _simhash_signatures; the op has no Python boundary left). Candidates =
     equal 8-bit band (sig_lo bytes = bands 0-3, sig_hi bytes = 4-7, the
-    order the oracle fixes), screened with hamming <= 7 via two 32-bit
-    bit_count(xor) sums, then re-ranked by EXACT shingle jaccard.
+    order the oracle fixes) emitted by band_pairs, screened with
+    hamming <= 7 via bit_count(xor) of the two halves packed into one
+    long, then re-ranked by EXACT shingle jaccard.
 
     Oracle: FULL replication (_simhash_oracle_sql) — every stage is
     engine-portable arithmetic, so DuckDB replays the op rather than a
@@ -643,6 +650,11 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     stage stays proportional to the candidate volume, not the corpus."""
     docs = _docs_with_planted_neardups(spark, sf)
     raw_sig = _simhash_signatures(docs)
+    # one 64-bit signature per doc: sig_hi's bits over sig_lo's (both are
+    # 32-bit halves), so the band bytes and the hamming screen read one long
+    sig = raw_sig.select(
+        "doc_id", F.shiftleft("sig_hi", 32).bitwiseOR(F.col("sig_lo")).alias("sig")
+    )
     # Degenerate-corpus guard (same failure mode the minhash BUCKET_CAP
     # addresses): identical texts produce identical signatures, and an
     # identical-TEXT group of B docs would alone emit O(B²) pairs from
@@ -661,64 +673,32 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # rows grow only by the text/signature diversity ratio (1.29x at
     # sf0.1), so candidate volume stays bounded by text diversity, never
     # corpus skew.
-    hashed = raw_sig.join(
+    hashed = sig.join(
         docs.select("doc_id", F.sha2("text", 256).alias("thash")), "doc_id"
     )
-    text_rep = hashed.groupBy("sig_hi", "sig_lo", "thash").agg(
-        F.min("doc_id").alias("doc_id")
-    )
+    text_rep = hashed.groupBy("sig", "thash").agg(F.min("doc_id").alias("doc_id"))
     # 8 bands × 8 bits: by pigeonhole every pair with hamming <= 7 shares at
     # least one untouched band → guaranteed candidate generation at the <=7
     # verification threshold. (At larger corpus scales widen bands to cut
     # candidate volume and lower the threshold accordingly.) Band order is
     # the oracle's contract: sig_lo bytes 0-3 = bands 0-3, sig_hi = 4-7.
+    # Bands are localCheckpointed (8 rows of ~40 B per text rep, ~40 k rows
+    # at sf0.1): without it both sides of the band self-join embed the
+    # whole signature pipeline (guide §3.3). Bucket membership on this
+    # same-vocabulary corpus is ~power-law (sf0.1: top bucket 3071 of 40 k
+    # rows, 4.7 M of the 16.3 M in-bucket pairs), hence 8 slices.
     bands = text_rep.select(
-        "doc_id", "sig_hi", "sig_lo",
+        "doc_id", "sig",
         F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(half, 8 * i).bitwiseAND(F.lit(0xFF))
-                    for half in ("sig_lo", "sig_hi")
-                    for i in range(4)
-                ]
-            )
+            F.array(*[F.expr(f"shiftrightunsigned(sig, {8 * i}) & 255") for i in range(8)])
         ).alias("band", "chunk"),
+    ).localCheckpoint()
+    hamming = F.expr("bit_count(sig_a ^ sig_b)").cast("long")
+    pairs = (
+        band_pairs(bands, ["band", "chunk"], carry=["sig"], slices=8)
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= 7)
     )
-    # Pair emission via codegen'd self-join on (band, chunk). On corpora
-    # where same-band buckets grow large (this synthetic same-vocabulary
-    # corpus is the worst case), the interpreted in-bucket combination
-    # emission benches SLOWER than the join — the join stays in whole-stage
-    # codegen. (Contrast minhash_candidate_pairs, whose buckets are tiny:
-    # there the grouped emission wins.) Three r13 restructures of this
-    # stage, every one result-proven (exceptAll both ways = 0 at all SFs +
-    # the full-replication oracle):
-    #  1. bands is localCheckpointed: it is |text-reps|×8 rows (~40 k at
-    #     sf0.1, ~40 B/row — bounded, within the timed query), and WITHOUT
-    #     the materialization the self-join embeds the ENTIRE signature
-    #     pipeline twice (12 parquet scans in the r12 plan; guide §3.3
-    #     "materialize an intermediate to truncate the plan").
-    #  2. triangular skew decomposition (guide §2.5 — a window/agg-style
-    #     salt cannot split a JOIN's hot key, but slicing BOTH sides can):
-    #     the bucket membership is ~power-law (sf0.1: top bucket 3071 of
-    #     40 k rows ⇒ 4.7 M of the 16.3 M in-bucket pairs in ONE task).
-    #     Each side is sliced by the deterministic pmod(xxhash64(doc_id), K)
-    #     and replicated K ways on the OTHER side's slice id, so every
-    #     (a, b) co-bucket pair meets exactly once — at key (band, chunk,
-    #     slice(a), slice(b)) — and the hot bucket's B² work spreads over
-    #     K² tasks. Replication costs K× of the tiny band rows, nothing of
-    #     the corpus. Identical pair set by construction (slice ids are a
-    #     function of the pair), proven by exceptAll at all three SFs.
-    #  3. the pair-key repartition moved BEFORE the distinct (was after the
-    #     hamming filter): hash(doc_a, doc_b) partitioning satisfies the
-    #     distinct's (doc_a, doc_b, hamming) clustering, so the distinct
-    #     runs WITHOUT its own exchange at the session's parallelism —
-    #     AQE's byte-based coalescing had been funnelling the 1.4 M-row
-    #     distinct onto 1-2 tasks (~24 B/row; the same §2.5 class as the
-    #     r12 fix, which only covered the stage AFTER the distinct).
-    #     (r12 A/B for the old placement: 9.5 s → 7.6 s; r13 A/B for the
-    #     whole stage: 3.8 s → 1.5 s isolated, op 7.3 s → ~4 s.)
-    bands = bands.localCheckpoint()
-    pairs = _tri_band_pairs(bands, spark.sparkContext.defaultParallelism)
     # exact-jaccard re-rank of the hamming survivors (hashed shingle sets).
     # The interpreted shingle-array build is the broadcast build side of two
     # joins — spread a split-starved scan first (measured 4.5 s -> 1.0 s at
@@ -2062,8 +2042,12 @@ def _home_cent(ranked) -> F.Column:
 
 
 def _assign_home(e: DataFrame, cent_lit) -> DataFrame:
-    """Map-side nearest-centroid assignment against a literal quantizer."""
-    return e.withColumn("home_cent", _home_cent(_centroid_ranking(cent_lit)))
+    """Map-side nearest-centroid assignment against a literal quantizer.
+    The ranking is interpreted (higher-order functions), so a
+    split-starved scan of ``e`` is spread over the cores first."""
+    return _spread_if_scan_starved(e, e, "vec_id").withColumn(
+        "home_cent", _home_cent(_centroid_ranking(cent_lit))
+    )
 
 
 IVF_TRAIN_ITERS = 2
@@ -2142,7 +2126,10 @@ def _ivf_centroid_literal(
         if portable:
             mean_expr = F.floor(mean_expr * 1e6 + F.lit(0.5)) / 1e6
         for _ in range(train_iters):
-            assigned = _assign_home(sample, _centroid_literal_from_rows(cents))
+            # not _assign_home: a spread sample would split each mean's
+            # float sum into per-partition partials and move its last bits
+            ranked = _centroid_ranking(_centroid_literal_from_rows(cents))
+            assigned = sample.withColumn("home_cent", _home_cent(ranked))
             means = (
                 assigned.select("home_cent", F.posexplode("embedding"))
                 .groupBy("home_cent", "pos")
@@ -2165,11 +2152,12 @@ def _ivf_probe_assign(
     vec_id, embedding, norm, home_cent (nearest), probe_cents (the
     ``nprobe`` nearest) and margin (top-2 csim gap). Pass a prebuilt
     ``cent_lit`` to reuse one trained quantizer; ``portable`` selects the
-    oracle-replicable quantizer training (see _ivf_centroid_literal)."""
+    oracle-replicable quantizer training (see _ivf_centroid_literal). As
+    in _assign_home, a split-starved scan of ``e`` is spread first."""
     if cent_lit is None:
         cent_lit, _k = _ivf_centroid_literal(e, portable=portable)
     ranked = _centroid_ranking(cent_lit)
-    return e.select(
+    return _spread_if_scan_starved(e, e, "vec_id").select(
         "vec_id",
         "embedding",
         "norm",
@@ -6061,79 +6049,41 @@ def _hamming_band_pairs(
     sig: DataFrame, sig_col: str, *, hamming_max: int, bucket_cap: int
 ) -> DataFrame:
     """Near-dup pairs over a 64-bit signature column via banded Hamming
-    LSH — the machinery shared by dedup_image_phash and
-    dedup_audio_fingerprint: 4 × 16-bit bands, per-(band, value) buckets
-    hard-capped at ``bucket_cap``, and a 1-bit MULTI-PROBE side (every
-    band key plus its 16 one-bit-flip variants, Lv'07) joined against
-    the capped EXACT keys — a pair whose only informative band differs
-    by one bit reaches the small exact bucket of the other doc's value
-    instead of dying in a capped hot bucket. Candidates are screened to
-    exact ``bit_count(xor) <= hamming_max`` JVM-side and emitted in
-    canonical (doc_a < doc_b) form. Banding + 1-bit probe is lossless
-    for pairs whose minimum per-band Hamming is <= 1 (pigeonhole: any
-    pair within total Hamming 7 over 4 bands qualifies); losses can
-    only occur at the cap, which only hot boilerplate buckets hit.
+    LSH — the keys shared by the image, audio and video dedup ops: 4 ×
+    16-bit bands, exact (band, value) buckets capped at ``bucket_cap``,
+    and a 1-bit MULTI-PROBE side (every band key plus its 16 one-bit-flip
+    variants, Lv'07) that band_pairs matches against the capped exact
+    keys — a pair whose only informative band differs by one bit reaches
+    the small exact bucket of the other doc's value instead of dying in a
+    capped hot bucket. Candidates are screened to exact
+    ``bit_count(xor) <= hamming_max`` JVM-side. Banding + 1-bit probe is
+    lossless for pairs whose minimum per-band Hamming is <= 1
+    (pigeonhole: any pair within total Hamming 7 over 4 bands
+    qualifies); losses can only occur at the cap, which only hot
+    boilerplate buckets hit.
 
     Input: (doc_id long, <sig_col> long). Output: (doc_a, doc_b,
     hamming), ordered."""
-    n_bands = 4
-    exact = sig.select(
-        "doc_id",
-        sig_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.expr(f"({sig_col} >> {16 * i}) & 65535").alias("band_val"),
-                )
-                for i in range(n_bands)
-            ])
-        ).alias("b"),
-    ).select("doc_id", sig_col, "b.band_idx", "b.band_val")
-    w = Window.partitionBy("band_idx", "band_val")
-    exact = exact.withColumn("bsz", F.count(F.lit(1)).over(w)).filter(
-        F.col("bsz") <= bucket_cap
+
+    def banded(masks) -> DataFrame:
+        keys = [
+            F.struct(
+                F.lit(i).alias("band_idx"),
+                F.expr(f"(({sig_col} >> {16 * i}) & 65535) ^ {m}").alias("band_val"),
+            )
+            for i in range(4)
+            for m in masks
+        ]
+        return sig.select(
+            "doc_id", F.col(sig_col).alias("sig"), F.explode(F.array(*keys)).alias("b")
+        ).select("doc_id", "b.band_idx", "b.band_val", "sig")
+
+    pairs = band_pairs(
+        banded([0]), ["band_idx", "band_val"], carry=["sig"], cap=bucket_cap,
+        probe=banded([0] + [1 << j for j in range(16)]),
     )
-    probe = sig.select(
-        "doc_id",
-        sig_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.expr(
-                        f"(({sig_col} >> {16 * i}) & 65535) ^ {1 << j}"
-                        if j >= 0
-                        else f"({sig_col} >> {16 * i}) & 65535"
-                    ).alias("band_val"),
-                )
-                for i in range(n_bands)
-                for j in range(-1, 16)
-            ])
-        ).alias("b"),
-    ).select("doc_id", sig_col, "b.band_idx", "b.band_val")
-    a = probe.select(
-        "band_idx", "band_val",
-        F.col("doc_id").alias("doc_a"), F.col(sig_col).alias("sig_a"),
-    )
-    b = exact.select(
-        "band_idx", "band_val",
-        F.col("doc_id").alias("doc_b"), F.col(sig_col).alias("sig_b"),
-    )
-    pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("doc_a"),
-            F.greatest("doc_a", "doc_b").alias("doc_b"),
-            F.least("sig_a", "sig_b").alias("sig_a"),
-            F.greatest("sig_a", "sig_b").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
     return (
-        pairs.select("doc_a", "doc_b", hamming.alias("hamming"))
+        pairs.select("doc_a", "doc_b", F.bit_count(F.expr("sig_a ^ sig_b")).alias("hamming"))
         .filter(F.col("hamming") <= hamming_max)
         .orderBy("doc_a", "doc_b")
     )
@@ -6201,9 +6151,9 @@ def dedup_audio_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     files wav_audio_payloads builds) is decoded by the stdlib wave
     parser and reduced to a 64-bit energy-gradient fingerprint
     (_audio_fp64), then near-dup pairs surface through the SAME
-    banded-Hamming-LSH machinery as the image op (_hamming_band_pairs:
-    4 × 16-bit bands, capped buckets, 1-bit multi-probe, exact
-    bit_count screen ≤ 6). Planted twins — the same recording with a
+    banded-Hamming-LSH machinery as the image op (band_pairs over the
+    _hamming_band_pairs keys: 4 × 16-bit bands, capped buckets, 1-bit
+    multi-probe, exact bit_count screen ≤ 6). Planted twins — the same recording with a
     short mid-clip splice (6 bytes = 3 samples) — measure Hamming 0-2
     and must all surface.
 
@@ -6235,7 +6185,7 @@ def dedup_audio_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 # video near-dup via per-scene keyframe fingerprint sets
 # ---------------------------------------------------------------------------
 
-_VFP_HAMMING_MAX = 7  # the _hamming_band_pairs lossless-banding bound
+_VFP_HAMMING_MAX = 7  # the lossless bound of _hamming_band_pairs' banding
 _VFP_BUCKET_CAP = 32
 _VFP_MIN_SCENES = 2  # matched keyframes required to call two videos near-dup
 # scene_no packs into the low bits of the LSH row id: doc_id * 64 + scene_no
@@ -6302,9 +6252,9 @@ def dedup_video_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     multimodal_video_scene_cut's consecutive-dHash rule; keyframe =
     first frame of the scene), surface near-identical keyframe pairs
     through the SAME banded-Hamming-LSH machinery as the image/audio
-    ops (_hamming_band_pairs: 4 × 16-bit bands, capped buckets, 1-bit
-    multi-probe, exact bit_count screen ≤ 7), then TEMPORALLY aggregate
-    JVM-side: two videos are near-dups when ≥ _VFP_MIN_SCENES DISTINCT
+    ops (band_pairs over the _hamming_band_pairs keys: 4 × 16-bit
+    bands, capped buckets, 1-bit multi-probe, exact bit_count screen
+    ≤ 7), then TEMPORALLY aggregate JVM-side: two videos are near-dups when ≥ _VFP_MIN_SCENES DISTINCT
     keyframes match on EACH side (least of the two per-side distinct
     counts — a repeated intro card matching twice is one matched
     keyframe, not two) — content-based, scene-order-free, so a re-cut /

@@ -358,9 +358,9 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     Plan shape = the published algorithm's scale story: the quantizer is
     trained on a sample and shipped as a literal (same machinery as
     sim_knn_graph_ivf), assignment is MAP-SIDE (zero shuffle), and the
-    pairwise compare is per-cluster — one shuffle on cluster id, work
-    Σ|cluster|², never corpus². Hot clusters get the same cap
-    discipline as MinHash LSH (SEMDEDUP_CLUSTER_CAP, sized for k-means
+    pairwise compare is per-cluster — llm_ops.band_pairs on cluster id,
+    one shuffle, work Σ|cluster|², never corpus². Hot clusters get the
+    same cap as MinHash LSH (SEMDEDUP_CLUSTER_CAP, sized for k-means
     cells): clusters over the cap skip pairwise scoring entirely —
     their members stay kept, and the skip is the audit signal that the
     quantizer needs more centroids (mirrors minhash_bucket_overflow).
@@ -379,6 +379,7 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
         _ivf_centroid_literal,
         _min_label_cc,
         _with_norm_guarded,
+        band_pairs,
     )
 
     # _with_norm_guarded, not _with_norm (r10 review): an all-zero
@@ -391,33 +392,22 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # floor-quantized Lloyd means replay exactly in the DuckDB oracle;
     # the certified xxhash64 IVF ladder keeps its own default path
     cent_lit, _k = _ivf_centroid_literal(e, portable=True)
-    assigned = _assign_home(e, cent_lit).select(
-        "vec_id", "embedding", "norm", F.col("home_cent").alias("cluster_id")
-    )
-    wcl = Window.partitionBy("cluster_id")
     # localCheckpoint (the llm_ops lineage pattern): assigned feeds the
     # pair join's BOTH sides AND the final output projection — without
     # it the map-side k×d centroid scoring re-runs three times (r10
     # review); dup_pairs likewise feeds members + the CC edge set.
-    assigned = assigned.withColumn("csize", F.count(F.lit(1)).over(wcl)).localCheckpoint()
-    capped = assigned.filter(F.col("csize") <= SEMDEDUP_CLUSTER_CAP)
-    a = capped.select(
-        F.col("cluster_id").alias("ca"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("na"),
-    )
-    b = capped.select(
-        F.col("cluster_id").alias("cb"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("nb"),
+    assigned = _assign_home(e, cent_lit).select(
+        "vec_id", "embedding", "norm", F.col("home_cent").alias("cluster_id")
+    ).localCheckpoint()
+    pairs = band_pairs(
+        assigned.withColumnRenamed("vec_id", "doc_id"), ["cluster_id"],
+        carry=["embedding", "norm"], cap=SEMDEDUP_CLUSTER_CAP,
     )
     dup_pairs = (
-        a.join(b, (F.col("ca") == F.col("cb")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cosine", _dot("ea", "eb") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= SEMDEDUP_COS_THRESHOLD)
-        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
+        pairs.filter(
+            _dot("embedding_a", "embedding_b") / (F.col("norm_a") * F.col("norm_b"))
+            >= SEMDEDUP_COS_THRESHOLD
+        ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     ).localCheckpoint()
     # Resolve duplicate CHAINS (B→A, C→B with cos(A,C) below threshold)
     # to the component's kept root: min-label CC over the pair graph —

@@ -122,13 +122,19 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataFrame:
-    """:func:`drain` a streaming plan into a memory sink; return the sink
-    as a DataFrame. Test/driver harness only — real deployments write to
-    a table sink with the same checkpoint semantics."""
+    """:func:`drain` a streaming plan into a memory sink; return its rows
+    as a local checkpoint and drop the sink's temp view, so the rows live
+    as long as the returned frame, not until the session ends.
+    Test/driver harness only — real deployments write to a table sink
+    with the same checkpoint semantics."""
+    spark = stream_df.sparkSession
     name = f"bpspark_mem_{uuid.uuid4().hex[:12]}"
     writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     drain(writer, scratch("ckpt"))
-    return stream_df.sparkSession.table(name)
+    try:
+        return spark.table(name).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 # ---------------------------------------------------------------------------

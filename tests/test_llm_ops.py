@@ -142,44 +142,73 @@ def test_simhash_finds_planted_neardups(spark):
 
 
 def test_tri_band_pairs_equals_plain_self_join(spark):
-    """The r13 triangular skew decomposition of the simhash band self-join
-    must emit EXACTLY the plain self-join's pair set — including on a hot
-    bucket much bigger than the slice count k (the skew case it exists
-    for) and across several k values (pair coverage must not depend on
-    how doc_ids hash into slices)."""
-    from bpspark.llm_ops import _tri_band_pairs
+    """band_pairs must emit EXACTLY the brute-force pair set of a plain
+    self-join — for every slice count k (the triangular decomposition's
+    coverage must not depend on how doc_ids hash into slices), with the
+    60-doc hot bucket kept or dropped by the cap, pairs met in several
+    buckets emitted once, and each side's carried columns riding with
+    it — and its probe mode must equal a brute-force join of every row's
+    key and one-bit flips against the capped exact buckets."""
+    import itertools
+    from collections import defaultdict
 
-    # synthetic bands: one hot (band, chunk) bucket of 60 docs, a few
-    # small buckets, plus sig bits so hamming varies around the <=7 gate
-    rows = [(d, (d * 37) % 256, d % 16, 0, 7) for d in range(60)]
-    rows += [(100 + d, d, d, 1, 11) for d in range(10)]
-    rows += [(200 + d, 5, 5, 2, 40 + d) for d in range(4)]
-    bands = spark.createDataFrame(
-        rows, "doc_id long, sig_hi long, sig_lo long, band int, chunk long"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    plain = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
-                + F.bit_count(F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi")))
-            ).cast("long").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= 7)
-    )
-    for k in (1, 3, 8):
-        tri = _tri_band_pairs(bands, 4, k=k)
-        assert tri.exceptAll(plain).count() == 0, f"k={k}: extra pairs"
-        assert plain.exceptAll(tri).count() == 0, f"k={k}: missing pairs"
+    from bpspark.llm_ops import band_pairs
+
+    def sig(d):
+        return (d * 37) % 256, d % 16
+
+    # one hot (band, chunk) bucket of 60 docs, a 10-doc and a 5-doc bucket
+    # that re-pair hot docs, four 2-doc buckets one bit apart, singletons
+    keys = [(d, 0, 7) for d in range(60)]
+    keys += [(d, 1, 11) for d in range(10)]
+    keys += [(d, 3, 9) for d in range(5)]
+    keys += [(200 + d, 2, 40 + d // 2) for d in range(8)]
+    keys += [(300 + d, 4, d) for d in range(4)]
+    rows = [(d, band, chunk, *sig(d)) for d, band, chunk in keys]
+    schema = "doc_id long, band int, chunk long, sig_hi long, sig_lo long"
+    bands = spark.createDataFrame(rows, schema)
+    carry = ["sig_hi", "sig_lo"]
+
+    def capped(cap):
+        buckets = defaultdict(list)
+        for d, band, chunk, *_ in rows:
+            buckets[band, chunk].append(d)
+        return {k: v for k, v in buckets.items() if cap is None or len(v) <= cap}
+
+    def pair(x, y):
+        a, b = min(x, y), max(x, y)
+        return (a, b, *sig(a), *sig(b))
+
+    def got(df):
+        cols = ["doc_a", "doc_b", "sig_hi_a", "sig_lo_a", "sig_hi_b", "sig_lo_b"]
+        out = [tuple(r) for r in df.select(*cols).collect()]
+        assert len(out) == len(set(out)), "duplicate pairs"
+        return set(out)
+
+    for cap, k in itertools.product((None, 5), (1, 3, 8)):
+        want = {
+            pair(x, y)
+            for ids in capped(cap).values()
+            for x, y in itertools.combinations(ids, 2)
+        }
+        assert want, (cap, k)
+        pairs = band_pairs(bands, ["band", "chunk"], carry=carry, cap=cap, slices=k)
+        assert got(pairs) == want, (cap, k)
+
+    flips = [(d, band, chunk ^ m, *sig(d)) for d, band, chunk, *_ in rows for m in (0, 1, 2, 4)]
+    probe = spark.createDataFrame(flips, schema)
+    for cap, k in itertools.product((None, 5), (1, 3)):
+        exact = capped(cap)
+        want = {
+            pair(d, y)
+            for d, band, val, *_ in flips
+            for y in exact.get((band, val), [])
+            if y != d
+        }
+        assert any(a >= 200 for a, *_ in want), "no cross-bucket probe pair"
+        assert got(
+            band_pairs(bands, ["band", "chunk"], carry=carry, cap=cap, slices=k, probe=probe)
+        ) == want, (cap, k)
 
 
 def test_spread_guard_counts_splits_not_files(spark, tmp_path):
@@ -2243,26 +2272,89 @@ def test_hist_tree_ops_match_oracles_on_empty_lineitem(spark, tmp_path):
         assert compare_frames(got, want, name) == []
 
 
+def _warm_call_jobs(spark, name, build) -> int:
+    """Spark jobs of one warm ``build().collect()``, counted through a job
+    group (the first call may add a schema-resolution job)."""
+    sc = spark.sparkContext
+    build().collect()
+    group = f"job-ceiling-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        build().collect()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_hist_tree_ops_job_ceilings(spark):
     """Host-independent regression gate on the one-histogram-per-tree
-    grow: Spark jobs per call, counted through a job group on a warm
-    call (the first call may add a schema-resolution job). Per tree the
-    decision tree runs the edge min/max aggregate, ONE joint-bin
-    histogram and the output collect; GBDT adds the binned-frame
-    checkpoint, one histogram per round and the last round's moments."""
-    sc = spark.sparkContext
+    grow: Spark jobs per warm call. Per tree the decision tree runs the
+    edge min/max aggregate, ONE joint-bin histogram and the output
+    collect; GBDT adds the binned-frame checkpoint, one histogram per
+    round and the last round's moments."""
     for name, ceiling in (("ml_decision_tree_hist", 5), ("ml_gbdt_hist", 12)):
-        fn = OPS[name].fn
-        fn(spark, SF_SMALL).collect()
-        group = f"job-ceiling-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            fn(spark, SF_SMALL).collect()
-        finally:
-            sc.setJobGroup("", "")
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = _warm_call_jobs(spark, name, lambda: OPS[name].fn(spark, SF_SMALL))
         assert jobs <= ceiling, f"{name}: {jobs} Spark jobs > {ceiling}"
+
+
+def test_band_pairs_consumers_job_ceilings(spark):
+    """Spark jobs per warm call of the two band_pairs consumers the corpus
+    benchmark runs, both at their count before band_pairs: dedup_simhash
+    16 (the signature stages, the band and shingle-set checkpoints, the
+    sliced band join and the re-rank) and minhash_candidate_pairs 4 (the
+    signature, the cap window, the pair repartition and the result — the
+    capped self-join merges on the window's exchange, where a broadcast
+    of its small side would add a job)."""
+    from bpspark import llm_ops
+
+    docs = llm_ops._docs_with_planted_neardups(spark, SF_SMALL)
+    for name, ceiling, build in (
+        ("dedup_simhash", 16, lambda: OPS["dedup_simhash"].fn(spark, SF_SMALL)),
+        ("minhash_candidate_pairs", 4, lambda: llm_ops.minhash_candidate_pairs(docs)),
+    ):
+        jobs = _warm_call_jobs(spark, name, build)
+        assert jobs <= ceiling, f"{name}: {jobs} Spark jobs > {ceiling}"
+
+
+def test_minhash_overflow_lists_exactly_the_dropped_buckets(spark):
+    """Mixed corpus: BUCKET_CAP + 1 identical boilerplate docs (one
+    over-cap bucket per band) among 60 real docs and their planted
+    near-dup twins. minhash_bucket_overflow must list exactly the buckets
+    over the cap, and minhash_candidate_pairs must equal the brute-force
+    pairs of every other bucket — so the overflow audit names exactly the
+    buckets band_pairs dropped."""
+    import itertools
+    from collections import defaultdict
+
+    from bpspark import llm_ops
+    from bpspark.io import table
+
+    real = table(spark, SF_SMALL, "documents").filter(F.col("doc_id") < 60).select("doc_id", "text")
+    twins = real.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), F.concat("text", F.lit(" perturbed")).alias("text")
+    )
+    boiler = spark.range(llm_ops.BUCKET_CAP + 1).select(
+        (F.col("id") + 5_000_000).alias("doc_id"),
+        F.lit("the same boilerplate text repeated for every single doc here").alias("text"),
+    )
+    docs = real.unionByName(twins).unionByName(boiler)
+    buckets = defaultdict(list)
+    for r in llm_ops._minhash_bands(docs).collect():
+        buckets[r.band, r.bucket].append(r.doc_id)
+    over = {(k[0], k[1], len(v)) for k, v in buckets.items() if len(v) > llm_ops.BUCKET_CAP}
+    want = {
+        p
+        for v in buckets.values()
+        if len(v) <= llm_ops.BUCKET_CAP
+        for p in itertools.combinations(sorted(v), 2)
+    }
+    assert len(over) == llm_ops.N_BANDS
+    assert {(i, i + 1_000_000) for i in range(60)} <= want
+    got_over = {tuple(r) for r in llm_ops.minhash_bucket_overflow(docs).collect()}
+    assert got_over == over
+    got = {tuple(r) for r in llm_ops.minhash_candidate_pairs(docs).collect()}
+    assert got == want
 
 
 IVF_FAMILY = (

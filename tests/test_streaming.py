@@ -510,3 +510,20 @@ def test_harness_micro_batch_counts(spark):
     finally:
         spark.streams.removeListener(listener)
     assert counts == HARNESS_MICRO_BATCHES
+
+
+def test_run_to_memory_leaves_no_sink_view(spark):
+    """run_to_memory drops its memory sink's temp view and returns rows
+    that no longer read it: three calls of stream_session_timeout leave no
+    ``bpspark_mem_*`` table in the catalog, and every returned frame,
+    the first one included, still reads the first call's rows."""
+    from bpspark.registry import all_ops
+
+    fn = all_ops()["stream_session_timeout"].fn
+    frames = [fn(spark, SF_SMALL) for _ in range(3)]
+    leftover = [t.name for t in spark.catalog.listTables() if t.name.startswith("bpspark_mem_")]
+    assert leftover == []
+    first = sorted(frames[0].collect())
+    assert first
+    for f in frames:
+        assert sorted(f.collect()) == first
