@@ -190,9 +190,9 @@ def _file_print(full: str, rel: str) -> str:
 def _sf_data_fingerprint(sf_dir: str) -> str:
     """Cheap filesystem fingerprint of every parquet table under
     ``sf_dir`` — (relative path, size, mtime_ns, 128-byte content
-    sample) per file, md5-folded. The _corpus_fingerprint idea
-    (llm_ops, ADVICE r9) applied to the whole dataset: it changes
-    whenever ANY table is rewritten."""
+    sample) per file, md5-folded; empty when there is no table. It
+    changes whenever ANY table is rewritten, so state and memos keyed on
+    it are never served from the previous files."""
     import glob
     import hashlib
     import os
@@ -210,7 +210,7 @@ def _sf_data_fingerprint(sf_dir: str) -> str:
                 parts.append(_file_print(p, os.path.basename(p)))
         except OSError:
             continue
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()[:10]
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()[:10] if parts else ""
 
 
 def state_dir(tag: str, sf_dir: str) -> str:

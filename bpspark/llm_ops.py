@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import scratch, state_dir, table
+from bpspark.io import _sf_data_fingerprint, scratch, state_dir, table
 from bpspark.registry import op
 
 
@@ -3685,36 +3685,6 @@ _BPE_MERGES = 8
 _BPE_MERGE_CACHE: dict = {}
 
 
-def _corpus_fingerprint(sf: str) -> tuple:
-    """Cheap filesystem fingerprint of ``{sf}/documents.parquet`` —
-    (path, size, mtime_ns) per file. No Spark job; changes whenever the
-    corpus files are rewritten, so a memo keyed on it can never serve a
-    stale result after a test fixture / harness regenerates the data at
-    the same path (ADVICE r9)."""
-    import os as _os
-
-    path = _os.path.join(str(sf), "documents.parquet")
-    try:
-        if _os.path.isdir(path):
-            parts = []
-            for root, dirs, files in _os.walk(path):
-                dirs.sort()  # deterministic walk order across hosts/calls
-                for f in sorted(files):
-                    st = _os.stat(_os.path.join(root, f))
-                    # key by path RELATIVE to the dataset root, not
-                    # basename: a rewrite that moves a part file between
-                    # subdirs must change the fingerprint (r10 review)
-                    rel = _os.path.relpath(_os.path.join(root, f), path)
-                    parts.append((rel, st.st_size, st.st_mtime_ns))
-            return (path, tuple(parts))
-        st = _os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        # non-filesystem source (e.g. a registered temp view in tests):
-        # no stable fingerprint -> caller must not cache
-        return ()
-
-
 def _learn_bpe_merges(spark: SparkSession, sf: str) -> list:
     """Run the distributed BPE merge learning (see
     text_bpe_vocab_induction) and return [(rank, left, right, merged,
@@ -3723,14 +3693,14 @@ def _learn_bpe_merges(spark: SparkSession, sf: str) -> list:
     is a pure deterministic function of the corpus (exact greedy over
     integer weights), and the two callers run back-to-back in the
     driver's sweep window — caching halves the learn cost there and in
-    every replica. The memo key is (sf, file-level fingerprint of
-    documents.parquet), not the path alone (ADVICE r9): regenerating the
-    corpus at the same path invalidates the entry instead of silently
-    reusing a stale merge table. The production analogue is persisting
-    the trained merge table next to the corpus (it IS the tokenizer
-    model), keyed by corpus snapshot."""
-    fp = _corpus_fingerprint(sf)
-    if not fp:  # unfingerprintable corpus: learn fresh, never memoize
+    every replica. The memo key is (sf, ``io._sf_data_fingerprint``),
+    not the path alone (ADVICE r9): regenerating the corpus at the same
+    path invalidates the entry instead of silently reusing a stale merge
+    table. The production analogue is persisting the trained merge table
+    next to the corpus (it IS the tokenizer model), keyed by corpus
+    snapshot."""
+    fp = _sf_data_fingerprint(str(sf))
+    if not fp:  # no parquet table to fingerprint: learn fresh, never memoize
         return _bpe_learn_impl(spark, sf)
     key = (str(sf), fp)
     if key not in _BPE_MERGE_CACHE:

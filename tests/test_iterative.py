@@ -587,28 +587,20 @@ def test_graph_ops_leave_no_cache_entry(spark):
 def test_graph_loops_task_ceiling(spark):
     """Host-independent regression gate on the iterative graph ops'
     partition counts: at ``spark.sql.shuffle.partitions`` = 200 (the
-    vanilla default) each call runs ≤ 300 Spark tasks, summed from the
-    status tracker over its job group's stages. A loop-invariant edge
-    frame held in the cache keeps all 200 partitions (AQE may not
-    coalesce a cached plan's output), so every round runs 200-task
-    stages on a few hundred edges: 1695–3261 tasks per call."""
-    sc = spark.sparkContext
+    vanilla default) each call runs ≤ 300 Spark tasks, as ``obs.profile``
+    counts them (tasks of stages that ran). A loop-invariant edge frame
+    held in the cache keeps all 200 partitions (AQE may not coalesce a
+    cached plan's output), so every round runs 200-task stages on a few
+    hundred edges: 1695–3261 tasks per call."""
+    from bpspark import obs
+
     ops = all_ops()
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
         for name in ("graph_pagerank", "graph_shortest_paths",
                      "graph_kcore_decompose", "graph_label_propagation"):
-            group = f"task-ceiling-{name}"
-            sc.setJobGroup(group, name)
-            try:
-                ops[name].fn(spark, SF).collect()
-            finally:
-                sc.setJobGroup("", "")
-            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
-            st = sc.statusTracker()
-            stages = {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
-            tasks = sum(info.numTasks for info in map(st.getStageInfo, stages) if info)
+            tasks = obs.profile(spark, lambda: ops[name].fn(spark, SF).collect())[1]["tasks"]
             assert tasks <= 300, f"{name}: {tasks} Spark tasks > 300"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)

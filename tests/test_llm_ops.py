@@ -211,14 +211,18 @@ def test_tri_band_pairs_equals_plain_self_join(spark):
         ) == want, (cap, k)
 
 
-def test_spread_guard_counts_splits_not_files(spark, tmp_path):
+def test_spread_guard_counts_splits_not_files(spark, tmp_path, monkeypatch):
     """_spread_if_scan_starved must judge starvation on ESTIMATED SPLITS
     (bytes / maxPartitionBytes), not file count (VERDICT r12 item 2): a
     single big SPLITTABLE parquet file is many input splits, and adding a
     spread there would insert the very full-row shuffle the guard exists
     to avoid. Emulated by shrinking maxPartitionBytes so the one test file
-    counts as >= parallelism/4 splits."""
+    counts as >= parallelism/4 splits. The parallelism is stubbed to 16,
+    so the starved case is checked on any host (the guard never spreads
+    at 4 or fewer cores)."""
     import os
+
+    from pyspark import SparkContext
 
     from bpspark.llm_ops import _spread_if_scan_starved
 
@@ -228,11 +232,13 @@ def test_spread_guard_counts_splits_not_files(spark, tmp_path):
     ).coalesce(1).write.parquet(p)
     df = spark.read.parquet(p)
     assert len(df.inputFiles()) == 1
-    par = spark.sparkContext.defaultParallelism
+    par = 16
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: par))
     # one tiny file at the default 128 MB split size = one split -> starved
     out = _spread_if_scan_starved(df, df, "doc_id")
-    if par > 4:
-        assert out is not df, "single-split scan must be spread"
+    assert out is not df, "single-split scan must be spread"
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(out.collect()) == sorted(df.collect())
     # the SAME one file with a small split size = many estimated splits ->
     # NOT starved, no repartition added (this is the case the old
     # file-count gate got wrong)
@@ -2273,18 +2279,12 @@ def test_hist_tree_ops_match_oracles_on_empty_lineitem(spark, tmp_path):
 
 
 def _warm_call_jobs(spark, name, build) -> int:
-    """Spark jobs of one warm ``build().collect()``, counted through a job
-    group (the first call may add a schema-resolution job)."""
-    sc = spark.sparkContext
+    """Spark jobs of one warm ``build().collect()``, counted by
+    ``obs.profile`` (the first call may add a schema-resolution job)."""
+    from bpspark import obs
+
     build().collect()
-    group = f"job-ceiling-{name}"
-    sc.setJobGroup(group, name)
-    try:
-        build().collect()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # tracker is listener-fed
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return obs.profile(spark, lambda: build().collect())[1]["jobs"]
 
 
 def test_hist_tree_ops_job_ceilings(spark):

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Oracle parity check for registered ops, and which ops a change touched.
+"""Oracle parity check and per-op Spark counters for registered ops, and
+which ops a change touched.
 
 Usage: python tools/check_ops.py [op ...] [--sf 0.01,0.1] [--double] [--changed REV]
 
@@ -8,14 +9,21 @@ hash differs between REV and the working tree. With neither, every op, in
 registration order.
 
 Each selected op runs on a vanilla ``local[*]`` session from a foreign cwd
-and is compared with its DuckDB oracle by ``tests/oracle_compare.py``. One
-line per (op, sf, pass) gives the status, the Spark rows, the Spark jobs
-and tasks the call ran (counted through a job group) and the Spark and
-oracle seconds (a stage that several jobs list counts its tasks once).
+and is compared with its DuckDB oracle by ``tests/oracle_compare.py``.
 Before each SF's ops, an untimed warm-up reads every table once, starts
 the Python workers and makes one throwaway op call, so no op's figures
 carry the first-read schema job or the worker start-up, and the first op
-does not carry the session's first code generation and JIT:
+does not carry the session's first code generation and JIT.
+
+Every line printed is one JSON object. The first names the commit (with
+``+dirty`` when ``bpspark/``, ``tools/`` or ``tests/`` differ from it), the
+host's core count and the session's parallelism. Then one line per (op,
+sf, pass) gives the status, the Spark rows, the Spark and oracle seconds
+and the counters of ``bpspark.obs.profile`` for the call's two phases:
+``build`` is ``op.fn(...)`` (the op's own collects, checkpoints and
+broadcasts before it returns its frame) and ``output`` is ``toPandas()``.
+``driver_bytes`` is the build phase's ``result_bytes``: an op whose output
+grows with the SF is not driver-bound by that fact alone. Statuses:
 
   PASS     oracle matched on a non-empty result
   ROWS     rows-only op (no oracle) executed
@@ -23,14 +31,29 @@ does not carry the session's first code generation and JIT:
   VACUOUS  both engines returned 0 rows, which certifies nothing
   ERROR    the op raised; the error is isolated and the sweep goes on
 
+One ``summary`` line per SF gives the status counts and wall time. When
+``--sf`` names more than one SF, one ``growth`` line per op and step
+between consecutive SFs follows (from each op's last pass). It gives the
+build jobs, ``driver_bytes`` and the call's ``shuffle_write_bytes`` at
+both SFs, their ratios (``x``) and three flags:
+
+  driver_bound          driver_bytes grows >= 5x: a driver-bound collect
+  data_dependent_jobs   the build ran a different number of jobs
+  super_linear_shuffle  shuffle write bytes grow > 15x
+
+Some inputs do not grow on every step (``documents`` and ``embeddings``
+hold as many rows at sf0.001 as at sf0.01), so read the text and vector
+ops' growth from the sf0.01 -> 0.1 step. Counters of plans that AQE sizes
+at run time (a broadcast-exchange job's result bytes) vary between runs:
+re-run a flagged op before naming it.
+
 Every output, rows-only included, also gets a pandas multi-column sort:
 list/dict cells make its factorize step throw, which breaks any consumer
 that canonicalizes rows. ``--double`` runs every op twice in one session,
 so state or conf leaks show on the second pass. Per-op seconds are
 comparable across commits only from that second pass: each op compiles
-its own plans on its first call in a session (``graph_pagerank`` read
-8.8 s on the first pass and 5.1 s on the second at sf0.01), which the
-warm-up cannot absorb. Exit 1 on any FAIL, VACUOUS or ERROR.
+its own plans on its first call in a session, which the warm-up cannot
+absorb. Exit 1 on any FAIL, VACUOUS or ERROR.
 
 The closure hash (``op_source_hash(op_closure_source(fn), sql)``) covers
 the op body, its oracle SQL and the transitive package-wide helper
@@ -329,22 +352,14 @@ def changed_ops(rev: str, repo: str = REPO) -> tuple[list[str], str]:
 
 
 def _run_counting(spark, op, sf_dir: str):
-    """(pandas output, Spark jobs, Spark tasks) for one op call: the call
-    runs under its own job group, whose jobs (and their stages' tasks)
-    the status tracker lists once the listener bus has drained."""
-    sc = spark.sparkContext
-    group = f"check_ops:{op.name}:{time.monotonic_ns()}"
-    sc.setJobGroup(group, op.name)
-    try:
-        pdf = op.fn(spark, sf_dir).toPandas()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
-    tasks = sum(info.numTasks for info in map(st.getStageInfo, stages) if info)
-    return pdf, len(jobs), tasks
+    """(pandas output, build counters, output counters) for one op call.
+    The build is ``op.fn(...)``: the op's own collects, checkpoints and
+    broadcasts before it returns its frame. The output is ``toPandas()``."""
+    from bpspark import obs
+
+    frame, build = obs.profile(spark, lambda: op.fn(spark, sf_dir))
+    pdf, output = obs.profile(spark, frame.toPandas)
+    return pdf, build, output
 
 
 def _warm_up(spark, sf_dir: str) -> None:
@@ -362,28 +377,58 @@ def _warm_up(spark, sf_dir: str) -> None:
     all_ops()["scan_parquet"].fn(spark, sf_dir).toPandas()
 
 
-def _check(spark, con, op, sf_dir: str) -> tuple[str, int, int, int, float, float, list]:
-    """(status, spark rows, spark jobs, spark tasks, spark s, oracle s,
-    problems) for one op run."""
+def _check(spark, con, op, sf_dir: str) -> dict:
+    """The record of one op run: status, Spark rows, the two phases'
+    counters, Spark and oracle seconds and the oracle's problems."""
     from oracle_compare import compare_frames
 
     t0 = time.monotonic()
-    pdf, jobs, tasks = _run_counting(spark, op, sf_dir)
+    pdf, build, output = _run_counting(spark, op, sf_dir)
     if len(pdf.columns):
         pdf.sort_values(by=sorted(pdf.columns), kind="stable")
     t1 = time.monotonic()
+    rec = {"status": "ROWS", "rows": len(pdf), "spark_s": round(t1 - t0, 2), "oracle_s": 0.0,
+           "driver_bytes": build["result_bytes"], "build": build, "output": output}
     if op.sql is None:
-        return "ROWS", len(pdf), jobs, tasks, t1 - t0, 0.0, []
+        return rec
     odf = con.sql(op.sql).df()
-    t2 = time.monotonic()
+    rec["oracle_s"] = round(time.monotonic() - t1, 2)
     probs = compare_frames(pdf, odf, op.name)
     if probs:
-        status = "FAIL"
+        rec.update(status="FAIL", problems=probs)
     elif len(pdf) == 0 and len(odf) == 0:
-        status = "VACUOUS"
+        rec["status"] = "VACUOUS"
     else:
-        status = "PASS"
-    return status, len(pdf), jobs, tasks, t1 - t0, t2 - t1, probs
+        rec["status"] = "PASS"
+    return rec
+
+
+def _growth(name: str, sf_a: str, a: dict, sf_b: str, b: dict) -> dict:
+    """One op's growth from ``sf_a`` to ``sf_b`` (records as ``_check``
+    returns them) and its flags; see the module docstring."""
+    def figures(rec):
+        return {"jobs": rec["build"]["jobs"], "driver_bytes": rec["driver_bytes"],
+                "shuffle_write_bytes": rec["build"]["shuffle_write_bytes"]
+                + rec["output"]["shuffle_write_bytes"]}
+
+    fa, fb = figures(a), figures(b)
+    x = {k: round(fb[k] / fa[k], 2) if fa[k] else None for k in fa}
+    flags = [flag for flag, hit in (
+        ("driver_bound", (x["driver_bytes"] or 0) >= 5),
+        ("data_dependent_jobs", fa["jobs"] != fb["jobs"]),
+        ("super_linear_shuffle", (x["shuffle_write_bytes"] or 0) > 15),
+    ) if hit]
+    return {"growth": name, "from": sf_a, "to": sf_b,
+            **{k: [fa[k], fb[k]] for k in fa}, "x": x, "flags": flags}
+
+
+def _commit() -> str:
+    """HEAD, marked ``+dirty`` when the code the sweep runs differs from it."""
+    git = ["git", "-C", REPO]
+    head = subprocess.run([*git, "rev-parse", "--short", "HEAD"],
+                          capture_output=True, text=True).stdout.strip()
+    dirty = subprocess.run([*git, "diff", "--quiet", "HEAD", "--", "bpspark", "tools", "tests"])
+    return head + ("+dirty" if dirty.returncode else "")
 
 
 def main() -> None:
@@ -431,9 +476,14 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     bpspark.ensure_worker_imports(spark)
+    sfs = args.sf.split(",")
+    print(json.dumps({"commit": _commit(), "cores": os.cpu_count(),
+                      "parallelism": spark.sparkContext.defaultParallelism,
+                      "spark": spark.version, "sfs": sfs, "ops": len(names)}), flush=True)
     passes = 2 if args.double else 1
     bad = 0
-    for sf in args.sf.split(","):
+    last: dict = {}  # (op, sf) -> record of its last pass
+    for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
         con = duckdb.connect()
         register_views(con, sf_dir)
@@ -441,29 +491,23 @@ def main() -> None:
         _warm_up(spark, sf_dir)
         wall0 = time.monotonic()
         for p in range(1, passes + 1):
-            tag = f" #{p}" if passes > 1 else ""
             for name in names:
                 try:
-                    status, rows, jobs, tasks, ts, to, probs = _check(spark, con, ops[name], sf_dir)
-                    line = (
-                        f"{status} (spark {rows}r/{jobs} jobs/{tasks} tasks/{ts:.1f}s, "
-                        f"oracle {to:.1f}s)"
-                    )
-                    if probs:
-                        line += f": {probs}"
+                    rec = _check(spark, con, ops[name], sf_dir)
+                    last[name, sf] = rec
                 except Exception as ex:  # noqa: BLE001 — report, keep checking the rest
-                    status = "ERROR"
-                    line = f"ERROR {type(ex).__name__}: {str(ex)[:300]}"
-                counts[status] += 1
-                print(f"{name} sf{sf}{tag}: {line}", flush=True)
+                    rec = {"status": "ERROR", "error": f"{type(ex).__name__}: {str(ex)[:300]}"}
+                    last.pop((name, sf), None)
+                counts[rec["status"]] += 1
+                print(json.dumps({"op": name, "sf": sf, "pass": p, **rec}, default=str), flush=True)
         con.close()
         bad += counts["FAIL"] + counts["VACUOUS"] + counts["ERROR"]
-        summary = ", ".join(f"{k} {v}" for k, v in counts.items())
-        print(
-            f"SUMMARY sf{sf}: {sum(counts.values())} runs of {len(names)} ops — "
-            f"{summary}; wall {time.monotonic() - wall0:.0f}s",
-            flush=True,
-        )
+        print(json.dumps({"summary": f"sf{sf}", "runs": sum(counts.values()), "ops": len(names),
+                          **counts, "wall_s": round(time.monotonic() - wall0)}), flush=True)
+    for sf_a, sf_b in zip(sfs, sfs[1:]):
+        for name in names:
+            if (name, sf_a) in last and (name, sf_b) in last:
+                print(json.dumps(_growth(name, sf_a, last[name, sf_a], sf_b, last[name, sf_b])))
     sys.exit(1 if bad else 0)
 
 
