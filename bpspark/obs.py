@@ -46,6 +46,11 @@ def profile(spark: SparkSession, fn: Callable[[], Any]) -> tuple[Any, dict[str, 
                        "shuffle_read_bytes", "spill_bytes", "result_bytes"), 0)
     c["jobs"] = len(jobs)
     for sid in sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds}):
+        # Past spark.ui.retainedStages the store evicts SKIPPED stages
+        # first (their completion time is -1), so a stage it no longer
+        # has did not run.
+        if tracker.getStageInfo(sid) is None:
+            continue
         st = store.lastStageAttempt(sid)
         if st.status().toString() == "SKIPPED":
             continue
