@@ -28,11 +28,17 @@ def test_bounded_model_build_does_not_grow_with_the_data(spark):
     both, and ``ml_gbdt_hist``'s driver-bound bytes (its per-round
     histograms and moments) grow < 2x. ``graph_pagerank``'s bytes are not
     pinned: AQE decides at run time whether a broadcast exchange sends
-    its rows through the driver, so they vary between runs."""
+    its rows through the driver, so they vary between runs. Each call is
+    profiled warm: a table's first read in the session resolves its
+    schema in a job of its own."""
     ops = all_ops()
+
+    def warm_build(name, sf):
+        ops[name].fn(spark, sf)
+        return obs.profile(spark, lambda: ops[name].fn(spark, sf))[1]
+
     for name in ("ml_gbdt_hist", "graph_pagerank"):
-        small, big = (obs.profile(spark, lambda: ops[name].fn(spark, f"/root/testdata/sf{sf}"))[1]
-                      for sf in ("0.001", "0.01"))
+        small, big = (warm_build(name, f"/root/testdata/sf{sf}") for sf in ("0.001", "0.01"))
         assert small["jobs"] == big["jobs"], (name, small, big)
         if name == "ml_gbdt_hist":
             assert big["result_bytes"] < 2 * small["result_bytes"], (small, big)
