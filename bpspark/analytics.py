@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import table
+from bpspark.io import materialize, table
 from bpspark.registry import op
 
 
@@ -1290,7 +1290,7 @@ def q_basket_pairs(spark: SparkSession, sf: str) -> DataFrame:
     top-25 by lift. The basket relation dedups to (order, brand) FIRST —
     the self-join then fans out only C(brands-per-order, 2). The dedup'd
     basket feeds FOUR consumers (order count, brand counts, both self-join
-    sides); it is localCheckpointed so the corpus-sized dedup pass runs
+    sides); it is materialized so the corpus-sized dedup pass runs
     ONCE (Spark's static planner re-planned it per consumer — 4 duplicate
     (o, brand) exchanges at sf0.001, caught by the r5 exchange-parser
     audit). Materializing the basket is the algorithm's working set — the
@@ -1299,11 +1299,10 @@ def q_basket_pairs(spark: SparkSession, sf: str) -> DataFrame:
     fixed-association double expression over exact counts."""
     li = table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     pt = table(spark, sf, "part").select("p_partkey", "p_brand")
-    b = (
+    b = materialize(
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("brand"))
         .distinct()
-        .localCheckpoint()
     )
     n = b.agg(F.count_distinct("o").alias("n_orders"))
     cx = b.groupBy("brand").agg(F.count(F.lit(1)).alias("c"))
@@ -2563,7 +2562,7 @@ def ml_gbdt_hist(spark: SparkSession, sf: str) -> DataFrame:
         return (rnd, -1, None, "round_rmse", None, None, None, n, value)
 
     binned, edges = _binned_lineitem(spark, sf)
-    cur = binned.localCheckpoint()
+    cur = materialize(binned)
     out_rows = []
     for rnd in range(1, _GBDT_ROUNDS + 1):
         nodes, assigned, syy = _grow_hist_tree(cur, syy=rnd > 1)

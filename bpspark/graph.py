@@ -3,18 +3,14 @@
 Connected components already powers dedup_cluster_cc (llm_ops); this
 module adds PageRank — the canonical iterative join+agg loop. The pattern
 for ALL DataFrame iteration at scale: repartition the loop-invariant edge
-list on the join key and localCheckpoint it (eager, so AQE has sized the
-repartition before the checkpoint is written), re-derive a small ranks
-frame each round, and localCheckpoint every few rounds to truncate the
+list on the join key and ``io.materialize`` it (eager, so AQE has sized
+the repartition before the rows are stored), re-derive a small ranks
+frame each round, and materialize every few rounds to truncate the
 lineage Catalyst would otherwise re-analyze exponentially.
 
-The edge list is not cached: a cached plan's partition count is frozen
-at spark.sql.shuffle.partitions (AQE may not coalesce a cached plan's
-output), so every round would run that many tasks per stage however few
-edges there are — 200 in a vanilla session. The checkpoint does not carry the
-hash partitioning forward under AQE (an adaptive plan reports none), so
-each round's join shuffles the edge list again, at the size AQE picks
-for it. A checkpoint leaves no cache entry behind.
+The stored edge frame does not carry the hash partitioning forward under
+AQE (an adaptive plan reports none), so each round's join shuffles the
+edge list again, at the size AQE picks for it.
 """
 
 from __future__ import annotations
@@ -22,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bpspark.io import table
+from bpspark.io import materialize, table
 from bpspark.registry import op
 
 _DAMPING = 0.85
@@ -76,7 +72,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     symmetrized so every node has out-degree and rank mass is conserved:
     Σranks = N at every step, up to the per-round quantization). 5 rounds
     of contribution join + hash agg; the (src, dst, deg) edge frame is
-    built once, repartitioned on src and checkpointed, so each round
+    built once, repartitioned on src and materialized, so each round
     reads it at the partition count AQE chose (see the module
     docstring). Oracle-backed (upgraded r6): the fixed 5 rounds unroll into
     chained CTEs; each round's summed mass is quantized with the
@@ -91,19 +87,16 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     positivity, and degree-monotonicity."""
     o = table(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    cs = (
+    # r13: the symmetrization + degree + weight build below consumes
+    # this join+distinct subtree twice — materialize it once (bounded:
+    # the distinct trade-pair set, smaller than the ew frame)
+    cs = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey")).alias("a"),
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("b"),
         )
         .distinct()
-        # r13: the symmetrization + degree + weight build below consumes
-        # this join+distinct subtree twice — materialize it once (bounded:
-        # the distinct trade-pair set, smaller than the ew frame the op
-        # already checkpoints; on a real cluster: checkpoint() or rely on
-        # the ew checkpoint alone)
-        .localCheckpoint()
     )
     # r13: symmetrize via one explode instead of unionAll of two selects —
     # ONE evaluation of the pair subtree in the plan (join_asof's
@@ -118,9 +111,9 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     ).select("e.*")
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # loop-invariant: (src, dst, deg(src)), repartitioned on src and
-    # checkpointed once (not cached: see the module docstring)
-    ew = edges.join(out_deg, "src").repartition("src").localCheckpoint()
-    ranks = out_deg.select("src", F.lit(1.0).alias("rank")).localCheckpoint()
+    # materialized once (see the module docstring)
+    ew = materialize(edges.join(out_deg, "src").repartition("src"))
+    ranks = materialize(out_deg.select("src", F.lit(1.0).alias("rank")))
     for i in range(_ITERATIONS):
         contribs = (
             # shuffle_hash hint (r13): the planner otherwise sort-merges,
@@ -143,13 +136,12 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
             "src",
             (F.lit(1.0 - _DAMPING) + F.lit(_DAMPING) * F.col("mass")).alias("rank"),
         )
-        # eager localCheckpoint every SECOND round (and on the last): the
+        # materialize every SECOND round (and on the last): the
         # ranks frame is |nodes| rows (tiny next to edges), and a 2-deep
         # join lineage is still cheap to re-analyze — measured ~2× faster
         # cold than per-round materialization, same results bit-for-bit
-        # (on a real cluster: checkpoint() to durable storage instead)
         if i % 2 == 1 or i == _ITERATIONS - 1:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize(ranks)
     return (
         ranks.select(F.col("src").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), "node")
@@ -289,7 +281,7 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-source BFS shortest paths from 3 landmark nodes (the smallest
     supplier keys) over the bounded-degree similarity graph, emitted as a
     per-landmark distance histogram. The distributed-BFS shape: the
-    symmetrized edge list is repartitioned on src and checkpointed ONCE
+    symmetrized edge list is repartitioned on src and materialized ONCE
     (loop-invariant); each round joins only the FRONTIER (nodes first
     reached last round — monotonically shrinking) against it, and an
     anti-join against the visited set guarantees every node keeps its
@@ -300,11 +292,10 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
     and round bound are literals on both sides, keeping the check exact
     at any sf."""
     e = _knn_supplier_edges(spark, sf)
-    ed = (
+    ed = materialize(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .repartition("src")
-        .localCheckpoint()
     )
     lm = (
         ed.select(F.col("src").alias("node"))
@@ -313,7 +304,7 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         .limit(3)
         .select(F.col("node").alias("landmark"), "node", F.lit(0).alias("dist"))
     )
-    visited = lm.localCheckpoint()
+    visited = materialize(lm)
     frontier = visited
     for i in range(1, _BFS_ROUNDS + 1):
         nxt = (
@@ -321,8 +312,8 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
             .select("landmark", F.col("dst").alias("node"), F.lit(i).alias("dist"))
             .distinct()
         )
-        new = nxt.join(visited, ["landmark", "node"], "left_anti").localCheckpoint()
-        visited = visited.unionByName(new).localCheckpoint()
+        new = materialize(nxt.join(visited, ["landmark", "node"], "left_anti"))
+        visited = materialize(visited.unionByName(new))
         frontier = new
     return visited.groupBy("landmark", "dist").agg(F.count(F.lit(1)).alias("n_nodes"))
 
@@ -382,10 +373,10 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     (all-integer, exact cross-engine).
 
     Plan: the symmetrized edge list is repartitioned on dst and
-    checkpointed ONCE (loop-invariant); each round joins it with the
+    materialized ONCE (loop-invariant); each round joins it with the
     (node, label) frame — |nodes| rows, tiny next to edges — then runs
     one vote count + one argmax window sharing the node
-    partitioning. localCheckpoint per round truncates the lineage
+    partitioning. Materializing each round truncates the lineage
     Catalyst would otherwise re-analyze quadratically. At 100 TB this is
     the standard Pregel-on-DataFrames shape (degree ≤ 16 bounds each
     round's join fan-out), and rounds are O(diameter-ish) constants, not
@@ -448,26 +439,23 @@ def graph_kcore_decompose(spark: SparkSession, sf: str) -> DataFrame:
     else peels). Output: each surviving node with its in-core degree.
 
     Plan: the symmetrized edge list is repartitioned on src and
-    checkpointed once (loop-invariant); each round is two semi-joins of edges
+    materialized once (loop-invariant); each round is two semi-joins of edges
     against the shrinking alive set + one count — alive is |nodes|
     rows, tiny next to edges, and the join fan-out is bounded by the
-    knn graph's degree ≤ 16. localCheckpoint per round truncates
+    knn graph's degree ≤ 16. Materializing each round truncates
     lineage. At 100 TB this is the same Pregel-on-DataFrames shape as
     LPA/PageRank: constant rounds over an edge frame built once."""
     e = _knn_supplier_edges(spark, sf)
-    ed = (
+    ed = materialize(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .repartition("src")
-        .localCheckpoint()
     )
-    alive = ed.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    alive = materialize(ed.select(F.col("src").alias("node")).distinct())
     deg = None
     for _ in range(_KCORE_ROUNDS):
         deg = _kcore_degrees(ed, alive)
-        alive = (
-            deg.filter(F.col("c") >= _KCORE_K).select("node").localCheckpoint()
-        )
+        alive = materialize(deg.filter(F.col("c") >= _KCORE_K).select("node"))
     final_deg = _kcore_degrees(ed, alive)
     return (
         final_deg.join(alive, "node")
@@ -493,12 +481,11 @@ def _label_propagation(sym_edges: DataFrame, rounds: int) -> DataFrame:
     reference."""
     from pyspark.sql.window import Window
 
-    ed = sym_edges.repartition("dst").localCheckpoint()
-    labels = (
+    ed = materialize(sym_edges.repartition("dst"))
+    labels = materialize(
         ed.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
     )
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), "label")
     for _ in range(rounds):
@@ -508,11 +495,10 @@ def _label_propagation(sym_edges: DataFrame, rounds: int) -> DataFrame:
             .unionByName(labels)
         )
         counts = votes.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        labels = materialize(
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("node", "label")
-            .localCheckpoint()
         )
     return labels
 
@@ -574,7 +560,7 @@ def graph_community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     # edge list is degree-bounded (≤ 2k·|suppliers| rows, k=8) —
     # materialize it once; symmetrize via one explode instead of the
     # two-select union (join_asof's tagged-union pattern).
-    e = _knn_supplier_edges(spark, sf).localCheckpoint()
+    e = materialize(_knn_supplier_edges(spark, sf))
     sym = e.select(
         F.explode(
             F.array(

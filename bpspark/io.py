@@ -2,9 +2,14 @@
 
 One function so every operator reads through the same path: a plain
 columnar parquet scan that Catalyst can push filters/projections into.
+The module also holds the package's one materialization call
+(:func:`materialize`) and its scratch directories (:func:`scratch`,
+:func:`state_dir`).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -131,6 +136,43 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = read_events_raw(spark, f"{sf_dir}/{name}.parquet")
         return normalize_events_ts(spark, df)
     return _read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
+
+
+# Ticks once per io.materialize call; obs.profile takes next() before and
+# after a call. next() on a count is atomic, and a foreachBatch body calls
+# materialize from Spark's callback thread.
+_MATERIALIZE_CALLS = itertools.count()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the stored rows;
+    the one way an op pins an intermediate result.
+
+    A frame read by several actions or consumers, or carried from one
+    round of a loop to the next, is computed once here and its lineage is
+    cut, so Catalyst neither re-runs nor re-analyzes the subtree. AQE has
+    run the plan by then, so the stored frame keeps the partition count
+    AQE chose.
+
+    Where the rows go: a reliable ``checkpoint()`` when the SparkContext
+    has a checkpoint directory (Spark's own ``spark.checkpoint.dir`` or
+    ``setCheckpointDir``), which is the cluster posture: the files
+    survive the loss of the executor that wrote them. Otherwise
+    ``localCheckpoint()``: the blocks live in executor storage, and with
+    no lineage to replay, a lost block fails the next read ("Checkpoint
+    block ... not found") rather than returning other rows.
+
+    Not ``cache()``/``persist()``: the CacheManager pins a cached frame
+    until an ``unpersist()`` the caller has to remember, and AQE may not
+    coalesce a cached plan's output, so every stage reading it runs
+    ``spark.sql.shuffle.partitions`` tasks. Checkpoint blocks go with
+    the frame: Spark's ContextCleaner frees them once it is
+    garbage-collected (checkpoint files only under
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``)."""
+    next(_MATERIALIZE_CALLS)
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 # Scratch lifecycle: every file an op writes lives under ONE directory per

@@ -149,9 +149,10 @@ def meta_column_lineage(spark: SparkSession, sf: str) -> DataFrame:
 @op("meta_query_profile", sql=None)  # runtime metrics — env-dependent by nature
 def meta_query_profile(spark: SparkSession, sf: str) -> DataFrame:
     """EXPLAIN ANALYZE for Spark: execute a representative query
-    (orders ⋈broadcast nation-keyed customer → hash aggregate) and read
-    the per-operator RUNTIME METRICS back out of the executed adaptive
-    plan — numOutputRows per node, files/partitions scanned, shuffle
+    (orders ⋈ nation-keyed customer → hash aggregate; no join hint, so
+    ``spark.sql.autoBroadcastJoinThreshold`` decides whether customer is
+    broadcast) and read the per-operator RUNTIME METRICS back out of the
+    executed adaptive plan — numOutputRows per node, files/partitions scanned, shuffle
     records written. This is the observability loop every query engine
     ships (DuckDB EXPLAIN ANALYZE, Postgres ANALYZE, Trino query stats):
     row counts at each plan step are what diagnose a wrong-cardinality
@@ -169,7 +170,7 @@ def meta_query_profile(spark: SparkSession, sf: str) -> DataFrame:
     o = table(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     c = table(spark, sf, "customer").select("c_custkey", "c_nationkey")
     q = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import _sf_data_fingerprint, scratch, state_dir, table
+from bpspark.io import _sf_data_fingerprint, materialize, scratch, state_dir, table
 from bpspark.registry import op
 
 
@@ -445,12 +445,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     candidate pairs pay the set comparison — the LSH prune keeps this
     linear-ish at scale."""
     docs = _docs_with_planted_neardups(spark, sf)
-    # localCheckpoint the (tiny) candidate-pair set: the final plan embeds
+    # materialize the (tiny) candidate-pair set: the final plan embeds
     # this subtree FIVE times (the pair join + two endpoint unions + the two
     # semi-join broadcasts inside a/b), and each embedding re-runs the whole
     # corpus-wide minhash pipeline (r12; win_ntile/_ordered_cumsum
     # precedent — pairs are O(near-dup pairs), bounded by the LSH cap)
-    cands = minhash_candidate_pairs(docs).localCheckpoint()
+    cands = materialize(minhash_candidate_pairs(docs))
     # exact shingle sets only for docs that appear in a candidate pair — the
     # expensive string shingling never touches the rest of the corpus
     cand_ids = (
@@ -682,17 +682,17 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # verification threshold. (At larger corpus scales widen bands to cut
     # candidate volume and lower the threshold accordingly.) Band order is
     # the oracle's contract: sig_lo bytes 0-3 = bands 0-3, sig_hi = 4-7.
-    # Bands are localCheckpointed (8 rows of ~40 B per text rep, ~40 k rows
+    # Bands are materialized (8 rows of ~40 B per text rep, ~40 k rows
     # at sf0.1): without it both sides of the band self-join embed the
     # whole signature pipeline (guide §3.3). Bucket membership on this
     # same-vocabulary corpus is ~power-law (sf0.1: top bucket 3071 of 40 k
     # rows, 4.7 M of the 16.3 M in-bucket pairs), hence 8 slices.
-    bands = text_rep.select(
+    bands = materialize(text_rep.select(
         "doc_id", "sig",
         F.posexplode(
             F.array(*[F.expr(f"shiftrightunsigned(sig, {8 * i}) & 255") for i in range(8)])
         ).alias("band", "chunk"),
-    ).localCheckpoint()
+    ))
     hamming = F.expr("bit_count(sig_a ^ sig_b)").cast("long")
     pairs = (
         band_pairs(bands, ["band", "chunk"], carry=["sig"], slices=8)
@@ -702,15 +702,15 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # exact-jaccard re-rank of the hamming survivors (hashed shingle sets).
     # The interpreted shingle-array build is the broadcast build side of two
     # joins — spread a split-starved scan first (measured 4.5 s -> 1.0 s at
-    # sf0.1 on one partition; no-op at scale), and localCheckpoint it so the
+    # sf0.1 on one partition; no-op at scale), and materialize it so the
     # two broadcast builds read ONE materialization (bounded: one ~50-long
     # array per doc) instead of each re-running the shingle transform.
-    sh = _spread_if_scan_starved(docs, docs, "doc_id").select(
+    sh = materialize(_spread_if_scan_starved(docs, docs, "doc_id").select(
         "doc_id",
         F.array_distinct(
             F.transform(_word_shingles(F.col("text")), lambda s: F.xxhash64(s))
         ).alias("sh"),
-    ).localCheckpoint()
+    ))
     joined = (
         pairs.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .join(
@@ -1646,9 +1646,8 @@ def dedup_cluster_cc(spark: SparkSession, sf: str) -> DataFrame:
     per-node min, until a fixpoint — the DataFrame analogue of
     large-star/small-star; iterations needed = component diameter, and
     each one is an ordinary shuffle join, so 100 TB of edges works like
-    any other join. Labels are localCheckpoint()ed per iteration to
-    truncate the growing lineage (on a cluster: checkpoint to durable
-    storage). The edge set here is a deterministic doc_id chain graph
+    any other join. Labels are materialized per iteration to
+    truncate the growing lineage. The edge set here is a deterministic doc_id chain graph
     (i→i+1 where i%10<3, components of ≤4 nodes) so the DuckDB
     recursive-CTE oracle can build the same graph; in production the
     input is any pair list (minhash/simhash/embedding output)."""
@@ -1668,26 +1667,21 @@ def _min_label_cc(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     ``pairs`` is an undirected pair list (src, dst); returns
     (id, cluster_id) where cluster_id = min id of the connected
     component. Each round is one shuffle join + min-aggregate;
-    localCheckpoint truncates the per-round lineage (durable checkpoint
-    on a real cluster). Shared by dedup_cluster_cc and
-    er_resolve_entities."""
-    edges = pairs.unionByName(
+    materializing each round truncates the lineage. Shared by
+    dedup_cluster_cc and er_resolve_entities."""
+    edges = materialize(pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    labels = nodes.select("id", F.col("id").alias("cluster_id")).localCheckpoint(
-        eager=True
-    )
+    ))
+    labels = materialize(nodes.select("id", F.col("id").alias("cluster_id")))
     while True:
         neigh = (
             edges.join(labels, edges.src == labels.id)
             .select(F.col("dst").alias("id"), "cluster_id")
         )
-        new_labels = (
+        new_labels = materialize(
             labels.unionByName(neigh)
             .groupBy("id")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -3422,7 +3416,7 @@ def ml_logreg_gd(spark: SparkSession, sf: str) -> DataFrame:
     are summed DISTRIBUTEDLY per round (_reduce_partials_one_row — the
     treeAggregate pattern) so only O(d) bytes cross to the driver per
     round, never O(#partitions·d) and never the data. The feature matrix
-    is cached once; d and n come from one combined first-pass job, not a
+    is materialized once; d and n come from one combined first-pass job, not a
     separate ``.first()``. 6 rounds. Returns the per-iteration loss curve
     (the property test asserts monotone descent and better-than-chance
     training accuracy). Oracle-backed (upgraded r6): the fixed 6 rounds
@@ -3434,22 +3428,12 @@ def ml_logreg_gd(spark: SparkSession, sf: str) -> DataFrame:
     within ~1e-14 of a 1e-6 boundary could still floor differently per
     engine — ADVICE r6); measured clean at all three SFs, with ~8 orders
     of tie margin."""
-    emb = (
-        table(spark, sf, "embeddings")
-        .select("embedding", (F.col("label") % 2).cast("double").alias("y"))
-        .cache()
-    )
-    try:
-        return _logreg_gd_body(spark, emb)
-    finally:
-        emb.unpersist()
-
-
-def _logreg_gd_body(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """The cached-input GD loop (split out r8 so the cache is released in
-    a finally — the driver sweeps hundreds of ops in one session)."""
     import numpy as np
 
+    emb = materialize(
+        table(spark, sf, "embeddings")
+        .select("embedding", (F.col("label") % 2).cast("double").alias("y"))
+    )
     n_total, d = emb.select(
         F.count(F.lit(1)), F.first(F.size("embedding"))
     ).first()
@@ -3604,15 +3588,22 @@ def pipeline_llm_corpus(spark: SparkSession, sf: str) -> DataFrame:
         canon.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
     )
 
+    # The funnel runs one action per stage, and each stage's plan contains
+    # every stage before it — without materialization the minhash subtree
+    # alone would execute 4× (near, clean, chunks, packs). The two frames
+    # that cap the expensive subtrees are materialized where they are
+    # defined, so every later stage reads them, exactly like a production
+    # run materializes stage outputs between curation phases.
+
     # near-dedup: LSH candidate pairs; survivor = smaller doc_id
     pairs = minhash_candidate_pairs(exact.select("doc_id", "text"))
     losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    # spread before the persist (no-op at scale): everything downstream —
+    # spread before materializing (no-op at scale): everything downstream —
     # the decontamination gram transforms, chunking, packing — reads the
-    # PERSISTED partitioning, which on a one-split scan would be one core
-    near = _spread_if_scan_starved(
+    # materialized partitioning, which on a one-split scan would be one core
+    near = materialize(_spread_if_scan_starved(
         exact.join(losers, "doc_id", "left_anti"), docs, "doc_id"
-    )
+    ))
 
     # decontamination: drop docs sharing a 3-gram with the benchmark slice.
     # r12: grams come from the _word_shingles array expression (identical
@@ -3630,7 +3621,7 @@ def pipeline_llm_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    clean = (
+    clean = materialize(
         near.filter(F.col("doc_id") % 97 != 0)
         .join(contaminated, "doc_id", "left_anti")
     )
@@ -3650,28 +3641,16 @@ def pipeline_llm_corpus(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    # The funnel runs one action per stage, and each stage's plan contains
-    # every stage before it — without materialization the minhash subtree
-    # alone would execute 4× (near, clean, chunks, packs). Persist the two
-    # frames that cap the expensive subtrees, exactly like a production run
-    # materializes stage outputs between curation phases; MEMORY_AND_DISK
-    # so a 100 TB stage spills instead of OOMing executors.
-    near = near.persist()
-    clean = clean.persist()
-    try:
-        stages = [
-            ("0_raw", docs),
-            ("1_quality", quality),
-            ("2_exact_dedup", exact),
-            ("3_near_dedup", near),
-            ("4_decontaminated", clean),
-            ("5_chunks", chunks),
-            ("6_packs", packs),
-        ]
-        counts = [(name, df.count()) for name, df in stages]
-    finally:
-        near.unpersist()
-        clean.unpersist()
+    stages = [
+        ("0_raw", docs),
+        ("1_quality", quality),
+        ("2_exact_dedup", exact),
+        ("3_near_dedup", near),
+        ("4_decontaminated", clean),
+        ("5_chunks", chunks),
+        ("6_packs", packs),
+    ]
+    counts = [(name, df.count()) for name, df in stages]
     return spark.createDataFrame(counts, "stage string, n_rows bigint")
 
 
@@ -3845,7 +3824,7 @@ def _bpe_learn_impl(
         .agg(F.count(F.lit(1)).alias("wn"))
     )
     # "the" -> "t h e </w>" (end-of-word marker keeps suffixes distinct)
-    sym = words.select(
+    sym = materialize(words.select(
         F.concat(
             F.array_join(
                 F.transform(
@@ -3857,7 +3836,7 @@ def _bpe_learn_impl(
             F.lit(" </w>"),
         ).alias("syms"),
         "wn",
-    ).localCheckpoint()
+    ))
 
     merges: list[tuple[int, str, str, str, int]] = []
     while len(merges) < n_merges:
@@ -3914,7 +3893,7 @@ def _bpe_learn_impl(
         col = F.col("syms")
         for pat, rep in pats:  # one chained map-side projection, no shuffle
             col = F.regexp_replace(col, pat, rep)
-        sym = sym.select(col.alias("syms"), "wn").localCheckpoint()
+        sym = materialize(sym.select(col.alias("syms"), "wn"))
 
     return merges
 
@@ -5639,7 +5618,7 @@ def embedding_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
     top-1 argmax (TakeOrdered: per-partition max then a k-way merge of
     |partitions| rows — the 1-row collect is bounded, per the repo's
     collect() policy). Total O(k·n·d) work, k scans, zero shuffles of
-    the corpus; localCheckpoint truncates the k-deep lineage. At 100 TB
+    the corpus; materializing each round truncates the k-deep lineage. At 100 TB
     with large k, swap the exact argmax for per-IVF-cell argmaxes
     (sim_ivf_index_persist's cells) and batch several centers per scan —
     the per-round plan is unchanged.
@@ -5669,9 +5648,7 @@ def embedding_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     c0 = e.filter(F.col("vec_id") == first).select("embedding").collect()[0][0]
-    state = e.select(
-        "vec_id", "embedding", dist2_to(c0).alias("min_sq")
-    ).localCheckpoint()
+    state = materialize(e.select("vec_id", "embedding", dist2_to(c0).alias("min_sq")))
     picked = [(1, int(first), 0.0)]
     for rnk in range(2, _KCENTER_K + 1):
         far = (
@@ -5681,11 +5658,11 @@ def embedding_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
             .collect()[0]
         )
         picked.append((rnk, int(far["vec_id"]), float(far["min_sq"])))
-        state = state.select(
+        state = materialize(state.select(
             "vec_id",
             "embedding",
             F.least("min_sq", dist2_to(far["embedding"])).alias("min_sq"),
-        ).localCheckpoint()
+        ))
     import math as _math
 
     # tie-free cross-engine rounding (same float ops as the SQL oracle);
@@ -6721,21 +6698,21 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf: str) -> DataFrame:
     over the 16-bin histogram (no Python); perceptual dedup is one
     |images|-row groupBy on the 8-byte hash; shard packing is a window
     cumsum per source (the sink_training_shards discipline). Stage
-    frames that feed multiple counted stages are persisted
-    MEMORY_AND_DISK, exactly like pipeline_llm_corpus materializes
-    between curation phases."""
+    frames that feed multiple counted stages are materialized where
+    they are defined, exactly like pipeline_llm_corpus's."""
     import bpspark
 
     bpspark.ensure_worker_imports(spark)
     docs = table(spark, sf, "documents").select("doc_id", "text", "source")
-    # persisted: BOTH the feature branch and the phash branch read the
+    # materialized: BOTH the feature branch and the phash branch read the
     # payloads — without this the payload build re-runs for the dedup
-    # stage's decode pass
-    payloads = _spread_if_scan_starved(
+    # stage's decode pass. Spread first: the Python decode reads the
+    # materialized partitioning.
+    payloads = materialize(_spread_if_scan_starved(
         ppm_image_payloads(docs.select("doc_id", "text")), docs, "doc_id"
-    ).persist()  # spread: the Python decode reads the persisted partitioning
+    ))
     feats = payloads.mapInPandas(_decode_image_batches, MM_FEATURE_SCHEMA)
-    decoded = feats.filter((F.col("width") > 0) & (F.col("height") > 0))
+    decoded = materialize(feats.filter((F.col("width") > 0) & (F.col("height") > 0)))
 
     entropy = F.aggregate(
         "feature_vec",
@@ -6743,18 +6720,18 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf: str) -> DataFrame:
         lambda acc, x: acc
         - F.when(x > 0, x.cast("double") * F.log(x.cast("double"))).otherwise(0.0),
     )
-    gated = decoded.filter(
+    gated = materialize(decoded.filter(
         (F.col("n_bytes") >= 12 * 8 * 3)
         & F.col("feature_mean").between(30, 120)
         & (entropy >= F.lit(1.0))
-    )
+    ))
 
     sig = (
         payloads.join(gated.select("doc_id"), "doc_id", "left_semi")
         .mapInPandas(_phash_batches, "doc_id long, phash long")
     )
     keep = sig.groupBy("phash").agg(F.min("doc_id").alias("doc_id"))
-    deduped = gated.join(keep.select("doc_id"), "doc_id", "left_semi")
+    deduped = materialize(gated.join(keep.select("doc_id"), "doc_id", "left_semi"))
 
     shard_w = (
         Window.partitionBy("source")
@@ -6773,23 +6750,14 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_images"), F.sum("n_bytes").alias("shard_bytes"))
     )
 
-    decoded = decoded.persist()
-    gated = gated.persist()
-    deduped = deduped.persist()
-    try:
-        stages = [
-            ("0_raw", docs),
-            ("1_decoded", decoded),
-            ("2_quality_gate", gated),
-            ("3_phash_dedup", deduped),
-            ("4_shards", shards),
-        ]
-        counts = [(name, df.count()) for name, df in stages]
-    finally:
-        payloads.unpersist()
-        decoded.unpersist()
-        gated.unpersist()
-        deduped.unpersist()
+    stages = [
+        ("0_raw", docs),
+        ("1_decoded", decoded),
+        ("2_quality_gate", gated),
+        ("3_phash_dedup", deduped),
+        ("4_shards", shards),
+    ]
+    counts = [(name, df.count()) for name, df in stages]
     return spark.createDataFrame(counts, "stage string, n_rows long")
 
 
@@ -6814,27 +6782,28 @@ def pipeline_audio_corpus(spark: SparkSession, sf: str) -> DataFrame:
     the 8-byte fingerprint; shard packing is a window cumsum per
     source (the sink_training_shards discipline). The payload frame
     feeds both the feature branch and the fingerprint branch, so it is
-    persisted exactly like the image pipeline's."""
+    materialized exactly like the image pipeline's."""
     import bpspark
 
     bpspark.ensure_worker_imports(spark)
     docs = table(spark, sf, "documents").select("doc_id", "text", "source")
-    payloads = _spread_if_scan_starved(
+    # spread: the Python decode reads the materialized partitioning
+    payloads = materialize(_spread_if_scan_starved(
         wav_audio_payloads(docs.select("doc_id", "text")), docs, "doc_id"
-    ).persist()  # spread: the Python decode reads the persisted partitioning
+    ))
     feats = payloads.mapInPandas(_decode_audio_batches, _AUDIO_SCHEMA)
-    decoded = feats.filter(F.col("n_samples") > 0)
+    decoded = materialize(feats.filter(F.col("n_samples") > 0))
 
-    gated = decoded.filter(
+    gated = materialize(decoded.filter(
         (F.col("duration_s") >= 0.02) & (F.col("rms") >= 15000.0)
-    )
+    ))
 
     sig = (
         payloads.join(gated.select("doc_id"), "doc_id", "left_semi")
         .mapInPandas(_afp_batches, "doc_id long, afp long")
     )
     keep = sig.groupBy("afp").agg(F.min("doc_id").alias("doc_id"))
-    deduped = gated.join(keep.select("doc_id"), "doc_id", "left_semi")
+    deduped = materialize(gated.join(keep.select("doc_id"), "doc_id", "left_semi"))
 
     shard_w = (
         Window.partitionBy("source")
@@ -6853,23 +6822,14 @@ def pipeline_audio_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_clips"), F.sum("n_bytes").alias("shard_bytes"))
     )
 
-    decoded = decoded.persist()
-    gated = gated.persist()
-    deduped = deduped.persist()
-    try:
-        stages = [
-            ("0_raw", docs),
-            ("1_decoded", decoded),
-            ("2_quality_gate", gated),
-            ("3_afp_dedup", deduped),
-            ("4_shards", shards),
-        ]
-        counts = [(name, df.count()) for name, df in stages]
-    finally:
-        payloads.unpersist()
-        decoded.unpersist()
-        gated.unpersist()
-        deduped.unpersist()
+    stages = [
+        ("0_raw", docs),
+        ("1_decoded", decoded),
+        ("2_quality_gate", gated),
+        ("3_afp_dedup", deduped),
+        ("4_shards", shards),
+    ]
+    counts = [(name, df.count()) for name, df in stages]
     return spark.createDataFrame(counts, "stage string, n_rows long")
 
 

@@ -17,6 +17,7 @@ Counters:
   spill_bytes          memory plus disk bytes spilled
   result_bytes         task results sent to the driver (collects,
                        broadcasts, checkpoint and map statuses)
+  materializations     ``io.materialize`` calls made inside ``fn``
 """
 
 from __future__ import annotations
@@ -26,6 +27,8 @@ from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
+from bpspark import io
+
 _GROUPS = itertools.count()
 
 
@@ -34,17 +37,19 @@ def profile(spark: SparkSession, fn: Callable[[], Any]) -> tuple[Any, dict[str, 
     sc = spark.sparkContext
     group = f"bpspark.obs#{next(_GROUPS)}"
     sc.setJobGroup(group, "bpspark.obs.profile")
+    start = next(io._MATERIALIZE_CALLS)
     try:
         value = fn()
     finally:
         sc.setJobGroup("", "")
+        calls = next(io._MATERIALIZE_CALLS) - start - 1
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty(30_000)
     store, tracker = jsc.statusStore(), sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     c = dict.fromkeys(("jobs", "stages", "tasks", "shuffle_write_bytes",
                        "shuffle_read_bytes", "spill_bytes", "result_bytes"), 0)
-    c["jobs"] = len(jobs)
+    c["jobs"], c["materializations"] = len(jobs), calls
     for sid in sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds}):
         # Past spark.ui.retainedStages the store evicts SKIPPED stages
         # first (their completion time is -1), so a stage it no longer

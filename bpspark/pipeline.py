@@ -16,13 +16,12 @@ column expressions on that row — no regrouping by ISBN.
 
 Each batch is parsed ONCE, as the reference reads each ZIP once inside one
 unit of work (R17, :50): ``ingest_from_arrivals`` materializes the decided
-per-ZIP frame (gate → parse → R6/R7 → R15 ``reject``) with an eager
-``localCheckpoint``, and every output of :class:`IngestResult` except the
+per-ZIP frame (gate → parse → R6/R7 → R15 ``reject``) with
+``io.materialize``, and every output of :class:`IngestResult` except the
 gate's own frames is a projection of it — so each sink call reads those
 rows instead of re-running the gate and the parse. The frame holds parsed
 metadata only (``parse_zips`` drops the ZIP bytes); its blocks live as long
-as the result's frames do and are freed by Spark's ContextCleaner once
-those are garbage-collected. ``commit_batch`` writes the batch's three tables with
+as the result's frames do. ``commit_batch`` writes the batch's three tables with
 control last, so the R9 ledger the control table feeds is the commit
 marker: a batch cut short before it is simply replayed.
 
@@ -45,7 +44,7 @@ from pyspark.sql import functions as F
 from bpspark import errors
 from bpspark.config import IngestionConfig
 from bpspark.fixtures import default_dir
-from bpspark.io import scratch
+from bpspark.io import materialize, scratch
 from bpspark.registry import op
 from bpspark.sources import explode_entries, parse_zips, scan_drop_folder
 
@@ -154,11 +153,9 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
     def reject(code, msg):
         return F.struct(code.alias("error_code"), msg.alias("error_msg"))
 
-    # Materialized once, eagerly: every output below is a projection of
-    # these rows, so no sink re-runs the gate or the parse. Not cache():
-    # the CacheManager would pin each batch's frame until an unpersist()
-    # no caller makes, while checkpoint blocks go with the frames.
-    decided = zips.withColumn(
+    # Materialized once: every output below is a projection of these
+    # rows, so no sink re-runs the gate or the parse.
+    decided = materialize(zips.withColumn(
         "reject",
         F.when(F.col("error_code").isNotNull(), reject(F.col("error_code"), F.col("error_msg")))
         .when(F.col("book").isNull(), reject(
@@ -168,7 +165,7 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
             F.lit(errors.INVALID_GENRE),
             F.concat(F.lit("genre not in dimension: "),
                      F.coalesce("book_genre", F.lit("<missing>"))))),
-    ).localCheckpoint(eager=True)
+    ))
     quarantine = decided.filter(F.col("reject").isNotNull()).select(
         "path", "reject.error_code", "reject.error_msg"
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import table
+from bpspark.io import materialize, table
 from bpspark.registry import op
 
 
@@ -698,13 +698,12 @@ def win_ntile_bucketize(spark: SparkSession, sf: str) -> DataFrame:
     rows), then SQL NTILE's closed form on the 0-indexed position i:
     the first n%k buckets take ceil(n/k) rows, the rest floor(n/k) —
     pure integer arithmetic, bit-identical to the oracle's NTILE. The
-    localCheckpoint pins the sampled range boundaries so the prefix pass
+    materialized frame pins the sampled range boundaries so the prefix pass
     and the rank pass read the same split."""
     o = table(spark, sf, "orders").select("o_totalprice", "o_orderkey")
-    h = (
+    h = materialize(
         o.repartitionByRange(64, "o_totalprice", "o_orderkey")
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     wprev = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     prefix = (

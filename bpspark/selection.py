@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bpspark.io import table
+from bpspark.io import materialize, table
 from bpspark.registry import op
 
 # ---------------------------------------------------------------------------
@@ -159,14 +159,12 @@ def _ordered_cumsum(hist: DataFrame, val_col: str, cnt_col: str) -> DataFrame:
     id), plus each range's prefix total cumulated over ≤64 tiny rows and
     broadcast back. The result is partition-boundary-independent (prefix
     + within-range sum = the global value-ordered sum for any split);
-    the repartitioned frame is localCheckpoint()ed so the psums pass and
+    the repartitioned frame is materialized so the psums pass and
     the window pass read the SAME materialized boundaries (range
     boundaries come from sampling, and the two subtrees of one action
     must not resample independently)."""
-    h = (
-        hist.repartitionByRange(64, val_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+    h = materialize(
+        hist.repartitionByRange(64, val_col).withColumn("_pid", F.spark_partition_id())
     )
     wprev = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     prefix = (
@@ -235,11 +233,7 @@ def sample_perplexity_buckets(spark: SparkSession, sf: str) -> DataFrame:
     # writing scores then bucketing them — so the materialization stays
     # tiny at any corpus scale while the scoring pass halves.
     # (6.0 → ~2.5 s at sf0.1; rows proven identical.)
-    scored = (
-        text_perplexity_ngram(spark, sf)
-        .select("doc_id", "avg_nll")
-        .localCheckpoint()
-    )
+    scored = materialize(text_perplexity_ngram(spark, sf).select("doc_id", "avg_nll"))
     hist = scored.groupBy(F.col("avg_nll").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -392,23 +386,23 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # floor-quantized Lloyd means replay exactly in the DuckDB oracle;
     # the certified xxhash64 IVF ladder keeps its own default path
     cent_lit, _k = _ivf_centroid_literal(e, portable=True)
-    # localCheckpoint (the llm_ops lineage pattern): assigned feeds the
+    # materialized (the llm_ops lineage pattern): assigned feeds the
     # pair join's BOTH sides AND the final output projection — without
     # it the map-side k×d centroid scoring re-runs three times (r10
     # review); dup_pairs likewise feeds members + the CC edge set.
-    assigned = _assign_home(e, cent_lit).select(
+    assigned = materialize(_assign_home(e, cent_lit).select(
         "vec_id", "embedding", "norm", F.col("home_cent").alias("cluster_id")
-    ).localCheckpoint()
+    ))
     pairs = band_pairs(
         assigned.withColumnRenamed("vec_id", "doc_id"), ["cluster_id"],
         carry=["embedding", "norm"], cap=SEMDEDUP_CLUSTER_CAP,
     )
-    dup_pairs = (
+    dup_pairs = materialize(
         pairs.filter(
             _dot("embedding_a", "embedding_b") / (F.col("norm_a") * F.col("norm_b"))
             >= SEMDEDUP_COS_THRESHOLD
         ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ).localCheckpoint()
+    )
     # Resolve duplicate CHAINS (B→A, C→B with cos(A,C) below threshold)
     # to the component's kept root: min-label CC over the pair graph —
     # the component min has no earlier close neighbor, so it is kept,
@@ -887,9 +881,9 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
     transfer. 100 TB posture: URL dedup is the cheapest tier and runs
     FIRST (a collapsed URL never costs a parse, a score, or a
     signature); the perplexity model tables are vocab-sized broadcasts;
-    every dedup stage shuffles a uniform hash key. The two expensive
-    frames are persisted across the funnel's counting actions exactly as
-    pipeline_llm_corpus does (spill-safe, not recomputed per stage)."""
+    every dedup stage shuffles a uniform hash key. The expensive stage
+    frames are materialized where they are defined, exactly as
+    pipeline_llm_corpus does, so no count recomputes them."""
     from bpspark.llm_ops import minhash_candidate_pairs
 
     docs = table(spark, sf, "documents")
@@ -899,19 +893,19 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
         "curl", _canonicalize_url(_synthetic_url(F.col("doc_id")))
     )
     url_keep = with_url.groupBy("curl").agg(F.min("doc_id").alias("doc_id"))
-    # persisted: the funnel counts each downstream stage with its own
+    # materialized: the funnel counts each downstream stage with its own
     # action, and stages 2-4 all sit on top of this groupBy+semi-join
-    # shuffle — without the persist it would re-execute per count
-    # spread before the persist (no-op at scale): stages 2-6 — including
-    # the 3×-evaluated bigram-LM subtree — read the PERSISTED partitioning,
-    # which on a one-split scan would otherwise be a single cached partition
+    # shuffle — without it the shuffle would re-execute per count.
+    # Spread first (no-op at scale): stages 2-6 — including the
+    # 3×-evaluated bigram-LM subtree — read the materialized partitioning,
+    # which on a one-split scan would otherwise be a single partition
     from bpspark.llm_ops import _spread_if_scan_starved
 
-    url_stage = _spread_if_scan_starved(
+    url_stage = materialize(_spread_if_scan_starved(
         docs.join(url_keep.select("doc_id"), "doc_id", "left_semi"),
         docs,
         "doc_id",
-    ).persist()
+    ))
 
     # 2. language gate
     lang_stage = url_stage.filter(F.col("lang") == "en")
@@ -941,7 +935,11 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("w1")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
-    scored = (
+    # r13 (same two fixes as sample_perplexity_buckets): the plan
+    # evaluated this whole scoring aggregate THREE times (histogram,
+    # the scalar n, the keep_ids projection) — one narrow row per
+    # surviving doc, so materialize it once
+    scored = materialize(
         big.withColumn("w1", F.split("bigram", " ").getItem(0))
         .join(c2, "bigram")
         .join(c1, "w1")
@@ -956,11 +954,6 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("avg_nll")
         )
-        # r13 (same two fixes as sample_perplexity_buckets): the plan
-        # evaluated this whole scoring aggregate THREE times (histogram,
-        # the scalar n, the keep_ids projection) — one narrow row per
-        # surviving doc, so materialize it once
-        .localCheckpoint()
     )
     hist = scored.groupBy(F.col("avg_nll").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
@@ -975,7 +968,7 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("avg_nll") <= F.col("b2"))
         .select("doc_id")
     )
-    ppl_stage = quality_stage.join(keep_ids, "doc_id", "left_semi").persist()
+    ppl_stage = materialize(quality_stage.join(keep_ids, "doc_id", "left_semi"))
 
     # 5. normalized exact dedup (dedup_exact_normalized's canonical rule)
     clean_text = F.trim(
@@ -988,30 +981,25 @@ def pipeline_web_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("h")
         .agg(F.min("doc_id").alias("doc_id"))
     )
-    exact_stage = ppl_stage.join(
-        exact_keep.select("doc_id"), "doc_id", "left_semi"
-    ).persist()
+    exact_stage = materialize(
+        ppl_stage.join(exact_keep.select("doc_id"), "doc_id", "left_semi")
+    )
 
     # 6. MinHash near-dedup (same LSH params as dedup_near_minhash)
     pairs = minhash_candidate_pairs(exact_stage.select("doc_id", "text"))
     losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     near_stage = exact_stage.join(losers, "doc_id", "left_anti")
 
-    try:
-        stages = [
-            ("0_raw", docs),
-            ("1_url_dedup", url_stage),
-            ("2_langid", lang_stage),
-            ("3_quality", quality_stage),
-            ("4_perplexity_head_middle", ppl_stage),
-            ("5_exact_dedup", exact_stage),
-            ("6_near_dedup", near_stage),
-        ]
-        counts = [(name, df.count()) for name, df in stages]
-    finally:
-        url_stage.unpersist()
-        ppl_stage.unpersist()
-        exact_stage.unpersist()
+    stages = [
+        ("0_raw", docs),
+        ("1_url_dedup", url_stage),
+        ("2_langid", lang_stage),
+        ("3_quality", quality_stage),
+        ("4_perplexity_head_middle", ppl_stage),
+        ("5_exact_dedup", exact_stage),
+        ("6_near_dedup", near_stage),
+    ]
+    counts = [(name, df.count()) for name, df in stages]
     return spark.createDataFrame(counts, "stage string, n_rows bigint")
 
 

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from bpspark.io import scratch, state_dir, table
+from bpspark.io import materialize, scratch, state_dir, table
 from bpspark.registry import op
 from bpspark.sources import ZIP_GLOB, with_zip_keys
 from bpspark.search import _bm25_oracle as _search_mod_bm25_oracle
@@ -123,8 +123,8 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
 
 def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataFrame:
     """:func:`drain` a streaming plan into a memory sink; return its rows
-    as a local checkpoint and drop the sink's temp view, so the rows live
-    as long as the returned frame, not until the session ends.
+    through ``io.materialize`` and drop the sink's temp view, so the rows
+    live as long as the returned frame, not until the session ends.
     Test/driver harness only — real deployments write to a table sink
     with the same checkpoint semantics."""
     spark = stream_df.sparkSession
@@ -132,7 +132,7 @@ def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataF
     writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     drain(writer, scratch("ckpt"))
     try:
-        return spark.table(name).localCheckpoint()
+        return materialize(spark.table(name))
     finally:
         spark.catalog.dropTempView(name)
 
@@ -1272,42 +1272,38 @@ def stream_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         # duplicate index band rows would inflate n_bands and could flip
         # borderline decisions on replay.
         s = batch_df.sparkSession
-        bands = _minhash_bands(batch_df).select("doc_id", "band", "bucket")
-        bands.persist()
-        try:
-            # index = all PRIOR batches' committed subdirs (never this
-            # batch's own, even on replay)
-            prior = [
-                d for d in glob.glob(f"{idx}/batch=*")
-                if int(d.rsplit("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = s.read.parquet(*prior).select(
-                    F.col("doc_id").alias("index_doc"), "band", "bucket"
-                )
-                hits = _band_index_probe(bands, index).select("doc_id", "n_matches")
-            else:
-                hits = s.createDataFrame([], "doc_id long, n_matches long")
-            # emitted decisions carry only hash-independent columns (the
-            # novel/duplicate verdict); the band-collision strength stays
-            # internal — its VALUE depends on Spark's private xxhash64 and
-            # could never be certified cross-engine (re-grounded r7)
-            decisions = (
-                batch_df.select("doc_id")
-                .join(hits, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.col("n_matches").isNull().alias("is_novel"),
-                )
+        bands = materialize(_minhash_bands(batch_df).select("doc_id", "band", "bucket"))
+        # index = all PRIOR batches' committed subdirs (never this
+        # batch's own, even on replay)
+        prior = [
+            d for d in glob.glob(f"{idx}/batch=*")
+            if int(d.rsplit("=", 1)[1]) < batch_id
+        ]
+        if prior:
+            index = s.read.parquet(*prior).select(
+                F.col("doc_id").alias("index_doc"), "band", "bucket"
             )
-            decisions.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
-            # index grows by the NOVEL docs' signatures only
-            bands.join(
-                decisions.filter("is_novel").select("doc_id"), "doc_id", "left_semi"
-            ).write.mode("overwrite").parquet(f"{idx}/batch={batch_id}")
-        finally:
-            bands.unpersist()
+            hits = _band_index_probe(bands, index).select("doc_id", "n_matches")
+        else:
+            hits = s.createDataFrame([], "doc_id long, n_matches long")
+        # emitted decisions carry only hash-independent columns (the
+        # novel/duplicate verdict); the band-collision strength stays
+        # internal — its VALUE depends on Spark's private xxhash64 and
+        # could never be certified cross-engine (re-grounded r7)
+        decisions = (
+            batch_df.select("doc_id")
+            .join(hits, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                F.col("n_matches").isNull().alias("is_novel"),
+            )
+        )
+        decisions.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+        # index grows by the NOVEL docs' signatures only
+        bands.join(
+            decisions.filter("is_novel").select("doc_id"), "doc_id", "left_semi"
+        ).write.mode("overwrite").parquet(f"{idx}/batch={batch_id}")
 
     stream = (
         spark.readStream.schema("doc_id long, text string")

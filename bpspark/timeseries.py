@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bpspark.io import table
+from bpspark.io import materialize, table
 from bpspark.registry import op
 
 _SESSION_GAP_US = 1_800_000_000  # 30 min
@@ -772,13 +772,13 @@ def ts_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("c")
     )
-    # localCheckpoint: `daily` feeds THREE consumers (pair side a, pair
+    # materialized: `daily` feeds THREE consumers (pair side a, pair
     # side b, stats) and Spark's static planner does not reuse the
     # aggregate subtree across them — without this the corpus-sized
     # rollup scan+aggregate ran three times (seen in the r5 plan audit).
-    # Checkpointing the tiny |types×days| panel makes the corpus pass
+    # Materializing the tiny |types×days| panel makes the corpus pass
     # happen exactly once, which is what the claim below promises.
-    daily = daily.localCheckpoint()  # eager, house style (graph.py)
+    daily = materialize(daily)
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("c").cast("decimal(38,0)").alias("s"),

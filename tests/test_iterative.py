@@ -585,13 +585,15 @@ def test_graph_ops_leave_no_cache_entry(spark):
 
 
 def test_graph_loops_task_ceiling(spark):
-    """Host-independent regression gate on the iterative graph ops'
-    partition counts: at ``spark.sql.shuffle.partitions`` = 200 (the
-    vanilla default) each call runs ≤ 300 Spark tasks, as ``obs.profile``
-    counts them (tasks of stages that ran). A loop-invariant edge frame
-    held in the cache keeps all 200 partitions (AQE may not coalesce a
-    cached plan's output), so every round runs 200-task stages on a few
-    hundred edges: 1695–3261 tasks per call."""
+    """Host-independent regression gate on the partition counts of the
+    iterative graph ops and the two text funnels: at
+    ``spark.sql.shuffle.partitions`` = 200 (the vanilla default) each
+    call runs ≤ 300 Spark tasks, as ``obs.profile`` counts them (tasks of
+    stages that ran). A frame held in the cache keeps all 200 partitions
+    (AQE may not coalesce a cached plan's output), so every stage reading
+    it runs 200 tasks on a few hundred rows: 1695–3261 tasks per graph
+    call with a cached edge frame, and 1,630 for ``pipeline_llm_corpus``
+    with its two persisted stage frames."""
     from bpspark import obs
 
     ops = all_ops()
@@ -599,7 +601,8 @@ def test_graph_loops_task_ceiling(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
         for name in ("graph_pagerank", "graph_shortest_paths",
-                     "graph_kcore_decompose", "graph_label_propagation"):
+                     "graph_kcore_decompose", "graph_label_propagation",
+                     "pipeline_llm_corpus", "pipeline_web_corpus"):
             tasks = obs.profile(spark, lambda: ops[name].fn(spark, SF).collect())[1]["tasks"]
             assert tasks <= 300, f"{name}: {tasks} Spark tasks > 300"
     finally:

@@ -42,3 +42,14 @@ def test_bounded_model_build_does_not_grow_with_the_data(spark):
         assert small["jobs"] == big["jobs"], (name, small, big)
         if name == "ml_gbdt_hist":
             assert big["result_bytes"] < 2 * small["result_bytes"], (small, big)
+
+
+def test_profile_counts_materializations(spark):
+    """``materializations`` counts the ``io.materialize`` calls made
+    inside ``fn``. ``graph_pagerank``'s build materializes its trade
+    pairs, its edge frame, its initial ranks and the ranks after rounds
+    2, 4 and 5: 6 calls."""
+    op = all_ops()["graph_pagerank"]
+    _, c = obs.profile(spark, lambda: op.fn(spark, "/root/testdata/sf0.001"))
+    assert c["materializations"] == 6, c
+    assert obs.profile(spark, lambda: None)[1]["materializations"] == 0

@@ -828,16 +828,35 @@ def test_sql_declared_udf_stays_jvm_side(spark):
 
 def test_query_profile_cardinalities(spark):
     """The executed-plan metrics walk must report the exact deterministic
-    cardinalities: full orders scan and 25-nation final aggregate."""
-    pdf = OPS["meta_query_profile"].fn(spark, SF_SMALL).toPandas()
-    rows_metric = pdf[pdf.metric == "numOutputRows"]
-    # the orders parquet scan outputs every row of the table
+    cardinalities: full orders scan, one join row per order and the
+    25-nation final aggregate. The join carries no hint, so with
+    broadcasts off (``autoBroadcastJoinThreshold`` = -1) the plan has no
+    BroadcastHashJoin and the cardinalities are the same."""
     n_orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").count()
-    assert n_orders in set(rows_metric.value), rows_metric.to_string()
-    # the final aggregate outputs one row per nation key present
-    agg_rows = rows_metric[rows_metric.node.str.contains("HashAggregate")]
-    assert agg_rows.value.min() <= 25
-    assert (pdf.value >= 0).all()
+
+    def cardinalities():
+        pdf = OPS["meta_query_profile"].fn(spark, SF_SMALL).toPandas()
+        assert (pdf.value >= 0).all()
+        rows_metric = pdf[pdf.metric == "numOutputRows"]
+        # the orders parquet scan outputs every row of the table
+        assert n_orders in set(rows_metric.value), rows_metric.to_string()
+        joins = rows_metric[rows_metric.node.str.contains("Join")]
+        # the final aggregate outputs one row per nation key present
+        agg_rows = rows_metric[rows_metric.node.str.contains("HashAggregate")]
+        assert agg_rows.value.min() <= 25
+        return set(pdf.node), sorted(joins.value), agg_rows.value.min()
+
+    _, joins, aggs = cardinalities()
+    assert joins == [n_orders], joins
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        nodes, joins_off, aggs_off = cardinalities()
+    finally:
+        spark.conf.set(key, before)
+    assert not any("BroadcastHashJoin" in n for n in nodes), sorted(nodes)
+    assert (joins_off, aggs_off) == (joins, aggs)
 
 
 def test_cached_table_uses_inmemory_scan(spark):
