@@ -3,13 +3,15 @@
 One function so every operator reads through the same path: a plain
 columnar parquet scan that Catalyst can push filters/projections into.
 The module also holds the package's one materialization call
-(:func:`materialize`) and its scratch directories (:func:`scratch`,
-:func:`state_dir`).
+(:func:`materialize`) and its files on disk: a fresh directory per call
+(:func:`scratch`) and a state directory per process and dataset, built
+once and published by one rename (:func:`build_once`).
 """
 
 from __future__ import annotations
 
 import itertools
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -205,10 +207,14 @@ def _root() -> str:
 
 def scratch(tag: str) -> str:
     """A fresh, empty directory for one call of op ``tag``, removed with
-    the process's scratch root at exit."""
+    the process's scratch root at exit. A root removed mid-run is made
+    again."""
+    import os
     import tempfile
 
-    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_root())
+    root = _root()
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=root)
 
 
 def _file_print(full: str, rel: str) -> str:
@@ -256,15 +262,46 @@ def _sf_data_fingerprint(sf_dir: str) -> str:
 
 
 def state_dir(tag: str, sf_dir: str) -> str:
-    """State directory for op ``tag`` at ``sf_dir`` under the process's
-    scratch root, memoized by existence within the process. The dataset
-    fingerprint in the name keeps stale state from being reused: a
-    harness that regenerates the corpus at the same path must not be
-    served state derived from the previous files (the r10 BPE-memo bug
-    class, closed here for every state-dir-guarded op at once)."""
+    """The path of op ``tag``'s state directory at ``sf_dir`` under the
+    process's scratch root. The dataset fingerprint in the name keeps
+    stale state from being reused: a harness that regenerates the corpus
+    at the same path must not be served state derived from the previous
+    files. Ops build the directory through :func:`build_once`."""
     import os
 
     return os.path.join(
         _root(),
         f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{_sf_data_fingerprint(sf_dir)}",
     )
+
+
+def build_once(tag: str, sf_dir: str, build: Callable[[str], object]) -> str:
+    """Return op ``tag``'s state directory at ``sf_dir``, built once per
+    process.
+
+    If the directory exists it is returned and nothing is written.
+    Otherwise ``build(staging)`` fills a fresh, empty :func:`scratch`
+    directory, which is then published with one ``os.rename`` onto the
+    :func:`state_dir` path: the rename is the commit, so the state
+    directory exists only once it is fully built. A build that raises
+    publishes nothing and its staging directory is removed. If another
+    thread published first, the rename fails, this copy is dropped and
+    the published one is returned.
+    Anything the build records about its own files (a manifest) names
+    them relative to the directory, since the staging path is not the
+    published one."""
+    import os
+    import shutil
+
+    path = state_dir(tag, sf_dir)
+    if os.path.isdir(path):
+        return path
+    staging = scratch(tag)
+    try:
+        build(staging)
+        os.rename(staging, path)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.isdir(path):  # else another thread's copy won the rename
+            raise
+    return path

@@ -15,23 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bpspark.io import scratch, state_dir, table
+from bpspark.io import build_once, scratch, state_dir, table
 from bpspark.registry import op
 
 def silver_orders_path(spark: SparkSession, sf: str) -> str:
     """Write orders once per (process, sf) as a year-partitioned silver
     table; later reads prune partitions."""
-    import os as _os
-
-    d = state_dir("silver", sf)
-    if not _os.path.exists(_os.path.join(d, "_SUCCESS")):
-        (
-            table(spark, sf, "orders")
-            .withColumn("order_year", F.year("o_orderdate"))
-            .write.partitionBy("order_year")
-            .parquet(d, mode="overwrite")
-        )
-    return d
+    return build_once(
+        "silver",
+        sf,
+        lambda d: table(spark, sf, "orders")
+        .withColumn("order_year", F.year("o_orderdate"))
+        .write.partitionBy("order_year")
+        .parquet(d, mode="overwrite"),
+    )
 
 
 @op(
@@ -187,9 +184,7 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     files.maxPartitionBytes-sized outputs."""
     import os as _os
 
-    base = state_dir("compact", sf)
-    frag, packed = _os.path.join(base, "frag"), _os.path.join(base, "packed")
-    if not _os.path.exists(_os.path.join(packed, "_SUCCESS")):
+    def build(base: str) -> None:
         # fragmentation degree tracks input size: the demonstration needs
         # many-small-files, not a fixed 64 write tasks on a tiny sf
         src_bytes = _os.path.getsize(_os.path.join(sf, "lineitem.parquet"))
@@ -198,12 +193,13 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
             table(spark, sf, "lineitem")
             .select("l_returnflag", "l_quantity")
             .repartition(n_frag)
-            .write.mode("overwrite")
-            .parquet(frag)
+            .write.parquet(f"{base}/frag")
         )
-        spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(packed)
+        spark.read.parquet(f"{base}/frag").coalesce(4).write.parquet(f"{base}/packed")
+
+    base = build_once("compact", sf, build)
     return (
-        spark.read.parquet(packed)
+        spark.read.parquet(f"{base}/packed")
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -242,8 +238,6 @@ def sink_merge_scd1(spark: SparkSession, sf: str) -> DataFrame:
     sides by the merge key so the full-outer join is co-partitioned, and
     rewrite only partitions containing updated keys (see
     sink_overwrite_dynamic)."""
-    import os as _os
-
     o = table(spark, sf, "orders")
 
     def latest(df: DataFrame) -> DataFrame:
@@ -261,9 +255,9 @@ def sink_merge_scd1(spark: SparkSession, sf: str) -> DataFrame:
         F.coalesce(F.col("u.last_order"), F.col("b.last_order")).alias("last_order"),
         F.coalesce(F.col("u.last_price"), F.col("b.last_price")).alias("last_price"),
     )
-    dst = state_dir("scd1", sf)
-    merged.write.mode("overwrite").parquet(dst)
-    return spark.read.parquet(dst)
+    return spark.read.parquet(
+        build_once("scd1", sf, lambda d: merged.write.mode("overwrite").parquet(d))
+    )
 
 
 @op(
@@ -285,18 +279,16 @@ def sink_range_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     ZORDER generalizes to multiple columns. The read-back query proves
     results are layout-invariant; the plan test asserts the narrow-span
     property on the files themselves."""
-    import os as _os
-
-    dst = state_dir("range", sf)
-    if not _os.path.exists(_os.path.join(dst, "_SUCCESS")):
-        (
-            table(spark, sf, "orders")
-            .select("o_orderkey", "o_orderdate")
-            .repartitionByRange(16, "o_orderdate")
-            .sortWithinPartitions("o_orderdate")
-            .write.mode("overwrite")
-            .parquet(dst)
-        )
+    dst = build_once(
+        "range",
+        sf,
+        lambda d: table(spark, sf, "orders")
+        .select("o_orderkey", "o_orderdate")
+        .repartitionByRange(16, "o_orderdate")
+        .sortWithinPartitions("o_orderdate")
+        .write.mode("overwrite")
+        .parquet(d),
+    )
     lo, hi = F.lit("1997-06-01").cast("date"), F.lit("1997-09-01").cast("date")
     return (
         spark.read.parquet(dst)
@@ -383,13 +375,11 @@ def sink_zorder_clustered(spark: SparkSession, sf: str) -> DataFrame:
     measures per-file normalized span area ≪ uniform layout. At 100 TB
     this is the layout for scan-heavy multi-predicate workloads; the
     trade is one full shuffle+sort at write time."""
-    import os as _os
-
     li = table(spark, sf, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    dst = state_dir("zorder", sf)
-    if not _os.path.exists(_os.path.join(dst, "_SUCCESS")):
+
+    def build(dst: str) -> None:
         maxes = li.agg(
             F.max("l_partkey").alias("max_pk"), F.max("l_suppkey").alias("max_sk")
         )
@@ -410,7 +400,8 @@ def sink_zorder_clustered(spark: SparkSession, sf: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(dst)
         )
-    z = spark.read.parquet(dst)
+
+    z = spark.read.parquet(build_once("zorder", sf, build))
     m = z.agg(F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms"))
     return (
         z.crossJoin(F.broadcast(m))
@@ -454,8 +445,6 @@ def mv_incremental_refresh(spark: SparkSession, sf: str) -> DataFrame:
     technique). Money sums run in DECIMAL(18,2) — exact and associative,
     so the two-stage (state + delta) association is bit-identical to the
     oracle's single pass."""
-    import os as _os
-
     raw = table(spark, sf, "orders").select(
         "o_orderdate", "o_orderpriority", "o_totalprice"
     )
@@ -477,12 +466,15 @@ def mv_incremental_refresh(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    mv_state = state_dir("mv", sf)
-    if not _os.path.exists(_os.path.join(mv_state, "_SUCCESS")):
-        partial(raw.filter(F.col("o_orderdate") < cut)).write.mode("overwrite").parquet(
-            mv_state
+    state = spark.read.parquet(
+        build_once(
+            "mv",
+            sf,
+            lambda d: partial(raw.filter(F.col("o_orderdate") < cut))
+            .write.mode("overwrite")
+            .parquet(d),
         )
-    state = spark.read.parquet(mv_state)
+    )
     delta = partial(raw.filter(F.col("o_orderdate") >= cut))
     s, d = state.alias("s"), delta.alias("d")
     return (
@@ -546,8 +538,6 @@ def sink_merge_scd2(spark: SparkSession, sf: str) -> DataFrame:
     dimension and batch co-partition on the key (bucket both), and only
     partitions containing changed keys rewrite (sink_overwrite_dynamic).
     Oracle states the post-merge dimension declaratively."""
-    import os as _os
-
     c = table(spark, sf, "customer")
     base = c.select(F.col("c_custkey").alias("k"), F.col("c_mktsegment").alias("seg"))
     upd = (
@@ -612,9 +602,9 @@ def sink_merge_scd2(spark: SparkSession, sf: str) -> DataFrame:
             )
         ).alias("r")
     ).select("r.*")
-    dst = state_dir("scd2", sf)
-    rows.write.mode("overwrite").parquet(dst)
-    return spark.read.parquet(dst)
+    return spark.read.parquet(
+        build_once("scd2", sf, lambda d: rows.write.mode("overwrite").parquet(d))
+    )
 
 
 @op(
@@ -828,7 +818,7 @@ def time_travel_read(spark: SparkSession, sf: str, version: int) -> DataFrame:
     root = state_dir("ttravel", sf)
     with open(_os.path.join(root, "_manifest.json")) as fh:
         manifest = json.load(fh)
-    return spark.read.parquet(manifest[str(version)]["path"])
+    return spark.read.parquet(_os.path.join(root, manifest[str(version)]["path"]))
 
 
 @op(
@@ -851,8 +841,9 @@ def time_travel_read(spark: SparkSession, sf: str, version: int) -> DataFrame:
 )
 def sink_time_travel(spark: SparkSession, sf: str) -> DataFrame:
     """Snapshot versioning + time travel on plain parquet: each write is
-    an immutable version directory plus an atomically-rewritten JSON
-    manifest (version → path, cutover) — the read side picks any recorded
+    an immutable version directory listed in a JSON manifest (version →
+    path relative to the table root, cutover), published with the
+    versions in one state-dir rename — the read side picks any recorded
     version (``time_travel_read``), which is exactly what a table
     format's ``VERSION AS OF`` does with its transaction log. The op
     materializes two snapshots of the per-customer order summary (1996
@@ -863,16 +854,13 @@ def sink_time_travel(spark: SparkSession, sf: str) -> DataFrame:
     any other join. The oracle recomputes both snapshots from source,
     proving the traveled read is byte-faithful."""
     import json
-    import os as _os
 
-    root = state_dir("ttravel", sf)
     cuts = {1: "1996-01-01", 2: "1998-01-01"}
-    manifest_path = _os.path.join(root, "_manifest.json")
-    if not _os.path.exists(manifest_path):
+
+    def build(root: str) -> None:
         o = table(spark, sf, "orders")
         manifest: dict[str, dict] = {}
         for v, cut in cuts.items():
-            dst = _os.path.join(root, f"v{v}")
             (
                 o.filter(F.col("o_orderdate") < F.lit(cut).cast("timestamp"))
                 .groupBy("o_custkey")
@@ -880,14 +868,13 @@ def sink_time_travel(spark: SparkSession, sf: str) -> DataFrame:
                     F.count(F.lit(1)).alias("n_orders"),
                     F.max("o_orderkey").alias("last_order"),
                 )
-                .write.mode("overwrite")
-                .parquet(dst)
+                .write.parquet(f"{root}/v{v}")
             )
-            manifest[str(v)] = {"path": dst, "cutover": cut}
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
+            manifest[str(v)] = {"path": f"v{v}", "cutover": cut}
+        with open(f"{root}/_manifest.json", "w") as fh:
             json.dump(manifest, fh)
-        _os.replace(tmp, manifest_path)  # atomic manifest swap = commit
+
+    build_once("ttravel", sf, build)
     v1 = time_travel_read(spark, sf, 1).alias("v1")
     v2 = time_travel_read(spark, sf, 2).alias("v2")
     return v2.join(v1, F.col("v1.o_custkey") == F.col("v2.o_custkey"), "left").select(
@@ -915,7 +902,7 @@ def sink_time_travel(spark: SparkSession, sf: str) -> DataFrame:
 def sink_vacuum_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Retention vacuum over the snapshot-version mechanism
     (sink_time_travel's manifest pattern, own state root): three
-    snapshot versions are written, then versions beyond the retention
+    snapshot versions are published, then versions beyond the retention
     window (keep latest 2) are DELETED from disk and dropped from the
     manifest in one atomic swap — manifest first, files after, so a
     concurrent time-travel reader either sees the old manifest (files
@@ -929,27 +916,25 @@ def sink_vacuum_retention(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os
     import shutil
 
-    root = state_dir("ttvac", sf)
     cuts = {1: "1996-01-01", 2: "1997-01-01", 3: "1998-01-01"}
     retention = 2
-    manifest_path = _os.path.join(root, "_manifest.json")
-    if not _os.path.exists(manifest_path):
+
+    def build(root: str) -> None:
         o = table(spark, sf, "orders")
         manifest: dict[str, dict] = {}
         for v, cut in cuts.items():
-            dst = _os.path.join(root, f"v{v}")
             (
                 o.filter(F.col("o_orderdate") < F.lit(cut).cast("timestamp"))
                 .groupBy("o_custkey")
                 .agg(F.count(F.lit(1)).alias("n_orders"))
-                .write.mode("overwrite")
-                .parquet(dst)
+                .write.parquet(f"{root}/v{v}")
             )
-            manifest[str(v)] = {"path": dst, "cutover": cut}
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
+            manifest[str(v)] = {"path": f"v{v}", "cutover": cut}
+        with open(f"{root}/_manifest.json", "w") as fh:
             json.dump(manifest, fh)
-        _os.replace(tmp, manifest_path)
+
+    root = build_once("ttvac", sf, build)
+    manifest_path = _os.path.join(root, "_manifest.json")
     # vacuum: keep the latest `retention` versions (idempotent)
     with open(manifest_path) as fh:
         manifest = json.load(fh)
@@ -962,10 +947,10 @@ def sink_vacuum_retention(spark: SparkSession, sf: str) -> DataFrame:
             json.dump(kept_manifest, fh)
         _os.replace(tmp, manifest_path)  # commit BEFORE deleting files
         for m in pruned.values():
-            shutil.rmtree(m["path"], ignore_errors=True)
+            shutil.rmtree(_os.path.join(root, m["path"]), ignore_errors=True)
         manifest = kept_manifest
     frames = [
-        spark.read.parquet(m["path"]).agg(
+        spark.read.parquet(_os.path.join(root, m["path"])).agg(
             F.lit(int(v)).alias("version"), F.count(F.lit(1)).alias("n_customers")
         )
         for v, m in sorted(manifest.items(), key=lambda kv: int(kv[0]))
@@ -1010,9 +995,7 @@ def scan_data_skipping_minmax(spark: SparkSession, sf: str) -> DataFrame:
     import json as _json
     import os as _os
 
-    dst = state_dir("skipidx", sf)
-    manifest = _os.path.join(dst, "_minmax_manifest.json")
-    if not _os.path.exists(manifest):
+    def build(dst: str) -> None:
         li = table(spark, sf, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_extendedprice", "l_shipdate"
         )
@@ -1033,18 +1016,18 @@ def scan_data_skipping_minmax(spark: SparkSession, sf: str) -> DataFrame:
                 st = md.row_group(rg).column(ci).statistics
                 mins.append(str(st.min))
                 maxs.append(str(st.max))
-            entries.append({"file": f, "min": min(mins), "max": max(maxs)})
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as fh:
+            entries.append({"file": _os.path.basename(f), "min": min(mins), "max": max(maxs)})
+        with open(f"{dst}/_minmax_manifest.json", "w") as fh:
             _json.dump(entries, fh)
-        _os.replace(tmp, manifest)  # atomic publish, manifest-last
-    with open(manifest) as fh:
+
+    dst = build_once("skipidx", sf, build)
+    with open(f"{dst}/_minmax_manifest.json") as fh:
         entries = _json.load(fh)
     lo, hi = "1996-03-01 00:00:00", "1996-05-01 00:00:00"
     # ISO timestamps compare lexicographically; keep files whose span
     # intersects [lo, hi) — min/max have no false negatives, so pruning
     # can only drop files with zero matching rows.
-    files = [e["file"] for e in entries if e["max"] >= lo and e["min"] < hi]
+    files = [_os.path.join(dst, e["file"]) for e in entries if e["max"] >= lo and e["min"] < hi]
     pruned = spark.read.parquet(*files)
     return (
         pruned.filter(
@@ -1454,21 +1437,19 @@ def maintenance_delete_where_cow(spark: SparkSession, sf: str) -> DataFrame:
     aggregate over the source table."""
     import glob as _glob
     import os as _os
-    import shutil as _shutil
 
     import pyarrow.parquet as _pq
 
-    base = state_dir("cowdel", sf)
+    base = build_once(
+        "cowdel",
+        sf,
+        lambda d: table(spark, sf, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_quantity", "l_shipdate")
+        .repartitionByRange(16, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.parquet(f"{d}/clustered"),
+    )
     src_dir = f"{base}/clustered"
-    if not _os.path.isdir(src_dir):
-        (
-            table(spark, sf, "lineitem")
-            .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_quantity", "l_shipdate")
-            .repartitionByRange(16, "l_shipdate")
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(src_dir)
-        )
     import datetime as _dt
 
     lo = _dt.datetime(1996, 3, 1)
@@ -1648,7 +1629,7 @@ def layout_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     decide when re-clustering pays.
 
     Cross-engine: the state dir is written ONCE per process (via
-    state_dir) and the report reads the FILES back
+    build_once) and the report reads the FILES back
     (hive-partitioned by layout/pid), while the oracle restates the
     identical envelope computation from the orders table (the repo's
     state-dir convention) — matching hashes prove the written layout
@@ -1658,16 +1639,14 @@ def layout_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     intersection — at 100 TB the per-file stats table is what the
     table format's manifest already stores, so this op is a manifest
     query, not a data scan."""
-    import os as _os
-
     o = table(spark, sf, "orders").select(
         "o_orderkey",
         F.datediff(
             F.to_date("o_orderdate"), F.to_date(F.lit("1970-01-01"))
         ).alias("epoch_day"),
     )
-    dst = state_dir("overlapreport", sf)
-    if not _os.path.exists(_os.path.join(dst, "natural", "_SUCCESS")):
+
+    def build(dst: str) -> None:
         mm = o.agg(
             F.min("epoch_day").alias("mn"), F.max("epoch_day").alias("mx")
         ).collect()[0]
@@ -1691,6 +1670,8 @@ def layout_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
         nat.repartition("pid").write.mode("overwrite").partitionBy("pid").parquet(
             f"{dst}/natural"
         )
+
+    dst = build_once("overlapreport", sf, build)
 
     def stats(layout: str) -> DataFrame:
         return (

@@ -1162,50 +1162,51 @@ def sink_training_shards(spark: SparkSession, sf: str) -> DataFrame:
     trainer reads it; content ordered by doc_id within shard so shard
     bytes are stable across re-exports."""
     import glob as _glob
+    import gzip as _gzip
     import hashlib as _hashlib
     import json as _json
     import os as _os
 
-    from bpspark.io import state_dir
+    from bpspark.io import build_once
 
     N_SHARDS = 8
-    # stable state dir + mode("overwrite"): re-exports replace the
-    # previous tree instead of accumulating a fresh scratch dir per call
-    # (the companion test also reads this exact path, no globbing races)
-    out = state_dir("shards", sf)
     docs = table(spark, sf, "documents").select(
         "doc_id", "text", (F.col("doc_id") % N_SHARDS).alias("shard")
     )
-    (
-        # repartitionByRange, not hash repartition (r10 review): hashing
-        # 8 shard values into 8 partitions almost surely collides
-        # (birthday bound) — some tasks then gzip 2-3 shards serially
-        # while others sit idle. Range partitioning on the already-
-        # uniform shard id gives one shard per task; output is identical
-        # either way (partitionBy dictates file layout).
-        docs.repartitionByRange(N_SHARDS, "shard")
-        .sortWithinPartitions("doc_id")
-        .select("shard", F.to_json(F.struct("doc_id", "text")).alias("line"))
-        .write.partitionBy("shard")
-        .option("compression", "gzip")
-        .mode("overwrite")
-        .text(out)
-    )
-    manifest = {}
-    for d in sorted(_glob.glob(_os.path.join(out, "shard=*"))):
-        shard_id = int(d.rsplit("=", 1)[1])
-        h = _hashlib.sha256()
-        n_lines = 0
-        import gzip as _gzip
 
-        for f in sorted(_glob.glob(_os.path.join(d, "part-*"))):
-            with _gzip.open(f, "rb") as fh:
-                for line in fh:
-                    h.update(line)
-                    n_lines += 1
-        manifest[shard_id] = {"sha256": h.hexdigest(), "n_docs": n_lines}
-    with open(_os.path.join(out, "_MANIFEST.json"), "w") as fh:
-        _json.dump(manifest, fh, sort_keys=True)
+    def export(out: str) -> None:
+        (
+            # repartitionByRange, not hash repartition (r10 review): hashing
+            # 8 shard values into 8 partitions almost surely collides
+            # (birthday bound) — some tasks then gzip 2-3 shards serially
+            # while others sit idle. Range partitioning on the already-
+            # uniform shard id gives one shard per task; output is identical
+            # either way (partitionBy dictates file layout).
+            docs.repartitionByRange(N_SHARDS, "shard")
+            .sortWithinPartitions("doc_id")
+            .select("shard", F.to_json(F.struct("doc_id", "text")).alias("line"))
+            .write.partitionBy("shard")
+            .option("compression", "gzip")
+            .mode("overwrite")
+            .text(out)
+        )
+        manifest = {}
+        for d in sorted(_glob.glob(_os.path.join(out, "shard=*"))):
+            shard_id = int(d.rsplit("=", 1)[1])
+            h = _hashlib.sha256()
+            n_lines = 0
+            for f in sorted(_glob.glob(_os.path.join(d, "part-*"))):
+                with _gzip.open(f, "rb") as fh:
+                    for line in fh:
+                        h.update(line)
+                        n_lines += 1
+            manifest[shard_id] = {"sha256": h.hexdigest(), "n_docs": n_lines}
+        with open(_os.path.join(out, "_MANIFEST.json"), "w") as fh:
+            _json.dump(manifest, fh, sort_keys=True)
+
+    # exported once per process: the shards are a function of the
+    # dataset, so a frame an earlier call returned keeps reading them
+    out = build_once("shards", sf, export)
 
     # verification read: the SHARD FILES, not the source
     back = spark.read.schema("doc_id bigint, text string").json(

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from bpspark import errors
 from bpspark.fixtures import default_dir
-from bpspark.io import scratch, state_dir
+from bpspark.io import build_once, scratch
 from bpspark.parse import extract_isbn_from_path, parse_metadata_zip
 from bpspark.registry import op
 
@@ -181,12 +181,9 @@ def _roundtrip_dir(spark: SparkSession, sf: str, fmt: str) -> str:
     dir in the given format; return the path. Partitioned write +
     partitioned read — the same code path a cluster uses for multi-file
     JSONL/CSV corpora."""
-    import os
-
     from bpspark.io import table
 
-    d = state_dir(fmt, sf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+    def build(d: str) -> None:
         docs = table(spark, sf, "documents")
         if fmt == "json":
             docs.select("doc_id", "text", "lang", "source").write.mode(
@@ -196,7 +193,8 @@ def _roundtrip_dir(spark: SparkSession, sf: str, fmt: str) -> str:
             docs.select("doc_id", "lang", "source", "n_chars").write.mode(
                 "overwrite"
             ).option("header", True).csv(d)
-    return d
+
+    return build_once(fmt, sf, build)
 
 
 @op(
@@ -254,20 +252,17 @@ def scan_orc(spark: SparkSession, sf: str) -> DataFrame:
     vectorized). The oracle aggregates the original parquet, so the check
     also proves the roundtrip is lossless. quantity is integer-valued →
     BIGINT sum is order-independent exact."""
-    import os as _os
-
     from bpspark.io import table as _table
 
-    dst = _os.path.join(state_dir("orc", sf), "lineitem")
-    if not _os.path.exists(_os.path.join(dst, "_SUCCESS")):
-        (
-            _table(spark, sf, "lineitem")
-            .select("l_returnflag", "l_linestatus", "l_quantity")
-            .write.mode("overwrite")
-            .orc(dst)
-        )
+    dst = build_once(
+        "orc",
+        sf,
+        lambda d: _table(spark, sf, "lineitem")
+        .select("l_returnflag", "l_linestatus", "l_quantity")
+        .write.orc(f"{d}/lineitem"),
+    )
     return (
-        spark.read.orc(dst)
+        spark.read.orc(f"{dst}/lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -293,23 +288,23 @@ def scan_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     oracle reproduces the same union from the source table. Spark only
     pays the footer-merge cost when mergeSchema is requested — keep it
     off for stable-schema 100 TB scans."""
-    import os as _os
-
     from bpspark.io import table as _table
 
-    base = state_dir("evo", sf)
     o = _table(spark, sf, "orders")
-    if not _os.path.exists(_os.path.join(base, "b2", "_SUCCESS")):
+
+    def build(base: str) -> None:
         (
             o.filter(F.col("o_orderkey") % 50 == 0)
             .select("o_orderkey", "o_totalprice")
-            .write.mode("overwrite").parquet(f"{base}/b1")
+            .write.parquet(f"{base}/b1")
         )
         (
             o.filter((F.col("o_orderkey") % 2 == 1) & (F.col("o_orderkey") % 25 == 0))
             .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite").parquet(f"{base}/b2")
+            .write.parquet(f"{base}/b2")
         )
+
+    base = build_once("evo", sf, build)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(f"{base}/b1", f"{base}/b2")
@@ -502,25 +497,22 @@ def scan_xml(spark: SparkSession, sf: str) -> DataFrame:
     for XML record corpora. Scale: one task per XML file split;
     text stays OUT of the XML profile (prose belongs in parquet/JSONL —
     same rationale as scan_csv)."""
-    import os as _os
-
     from bpspark.io import table as _table
 
-    dst = _os.path.join(state_dir("xml", sf), "documents")
-    if not _os.path.exists(_os.path.join(dst, "_SUCCESS")):
-        (
-            _table(spark, sf, "documents")
-            .select("doc_id", "lang", "source", "n_chars")
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", "doc")
-            .save(dst)
-        )
+    dst = build_once(
+        "xml",
+        sf,
+        lambda d: _table(spark, sf, "documents")
+        .select("doc_id", "lang", "source", "n_chars")
+        .write.format("xml")
+        .option("rowTag", "doc")
+        .save(f"{d}/documents"),
+    )
     return (
         spark.read.format("xml")
         .option("rowTag", "doc")
         .schema("doc_id bigint, lang string, source string, n_chars bigint")
-        .load(dst)
+        .load(f"{dst}/documents")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from bpspark.io import materialize, scratch, state_dir, table
+from bpspark.io import build_once, materialize, scratch, table
 from bpspark.registry import op
 from bpspark.sources import ZIP_GLOB, with_zip_keys
 from bpspark.search import _bm25_oracle as _search_mod_bm25_oracle
@@ -111,11 +111,7 @@ def events_stream(spark: SparkSession, sf: str) -> DataFrame:
     normalization as the batch path."""
     from bpspark import io
 
-    d = state_dir("events_src", sf)
-    if not os.path.exists(f"{d}/events.parquet"):
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(f"{sf}/events.parquet", f"{d}/.events.parquet.tmp")
-        os.replace(f"{d}/.events.parquet.tmp", f"{d}/events.parquet")
+    d = build_once("events_src", sf, lambda stage: shutil.copy(f"{sf}/events.parquet", stage))
     probe = io.read_events_raw(spark, f"{d}/events.parquet")
     df = spark.readStream.schema(probe.schema).parquet(d)
     return io.normalize_events_ts(spark, df)

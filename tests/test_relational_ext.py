@@ -3,6 +3,10 @@ diff, Bloom-prefiltered join, data-quality expectations."""
 
 from __future__ import annotations
 
+import collections
+
+import pytest
+
 from bpspark.registry import all_ops
 from tests.conftest import SF_SMALL
 
@@ -79,6 +83,17 @@ def test_scd2_merge_history_invariants(spark):
     assert set(current.values()) == {1}
     assert closed == sum(1 for k in current if k < 1_000_000 and k % 5 == 0)
     assert any(k >= 1_000_000 for k in current)  # new keys inserted
+
+
+@pytest.mark.parametrize("name", ["sink_merge_scd1", "sink_merge_scd2", "sink_training_shards"])
+def test_earlier_frame_survives_a_second_call(spark, name):
+    """A frame a sink op returned still reads its files after a second
+    call of the op: the output directory is built once, never rewritten
+    under a frame that lists it."""
+    first = OPS[name].fn(spark, SF_SMALL)
+    second = OPS[name].fn(spark, SF_SMALL)
+    want = collections.Counter(map(tuple, second.collect()))
+    assert collections.Counter(map(tuple, first.collect())) == want
 
 
 def test_distribution_drift_statistic_shape(spark):

@@ -174,16 +174,18 @@ def test_training_shards_bit_reproducible(spark):
     doc_id ordering)."""
     import json
     import os
+    import shutil
 
     from bpspark.io import state_dir
 
-    # the op writes to a versioned stable dir (mode=overwrite); capture the
-    # manifest after each export — no /tmp globbing, no mtime races
-    manifest_path = os.path.join(state_dir("shards", SF_SMALL), "_MANIFEST.json")
+    # the op exports once per process into its state dir; removing the
+    # published dir before each call makes both calls real exports
+    out = state_dir("shards", SF_SMALL)
     manifests = []
     for _ in range(2):
+        shutil.rmtree(out, ignore_errors=True)
         OPS["sink_training_shards"].fn(spark, SF_SMALL).collect()
-        manifests.append(json.load(open(manifest_path)))
+        manifests.append(json.load(open(os.path.join(out, "_MANIFEST.json"))))
     assert manifests[0] == manifests[1]
     assert len(manifests[0]) == 8
     assert all(v["n_docs"] > 0 for v in manifests[0].values())
